@@ -33,6 +33,14 @@ FP16_EXP_BIAS = 15
 FP16_MAN_BITS = 10
 
 
+def byte_model(dim: int, keep_m: int, keep_e: int = FP16_EXP_BITS) -> tuple[float, float]:
+    """``(b_full, b_red)``: bytes per vector of a full fp16 fetch
+    (``16·D/8``) and of the reduced pass (``(1+e+m)·D/8``, sign +
+    kept exponent + kept mantissa bits; ``ANNCode.py:316-319``). The
+    one definition the engine's metrics and the DuckDB oracles share."""
+    return 16.0 * dim / 8.0, (1 + keep_e + keep_m) * dim / 8.0
+
+
 # ---------------------------------------------------------------------------
 # NumPy kernels (vectorized over (n, d) batches)
 # ---------------------------------------------------------------------------

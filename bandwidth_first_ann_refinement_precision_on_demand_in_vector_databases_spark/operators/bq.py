@@ -204,7 +204,7 @@ def cascade_candidates(
     """Stages 1+2 of the cascade as a reusable per-query candidate
     stream (query_id, neighbor_id) of r1·k ids — the shape every
     phase-2 consumer takes (``exact_cosine_rerank`` for the plain
-    cascade, ``refine.cascade_cushion_topk`` for the cushioned
+    cascade, ``refine.cushion_topk("cascade", ...)`` for the cushioned
     composition)."""
     from .sq import sq_reconstruct
 

@@ -27,7 +27,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.fp16 import FP16_EXP_BITS, FP16_MAN_BITS
+from ..functions.fp16 import FP16_EXP_BITS, FP16_MAN_BITS, byte_model
 
 
 def compressed_size(blob: bytes, codec: str = "zlib", level: int = 6) -> int:
@@ -161,8 +161,7 @@ def compression_stats_df(
             }
         )
 
-    b_red = (1 + keep_e + keep_m) * dim / 8.0
-    b_full = 16.0 * dim / 8.0
+    b_full, b_red = byte_model(dim, keep_m, keep_e)
     totals = (
         corpus.select(vec_col)
         .mapInPandas(

@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.fp16 import byte_model
+
 
 def recall_at_k(ground: DataFrame, preds: DataFrame, k: int) -> DataFrame:
     """A1: both inputs are top-K frames (query_id, rank, neighbor_id, …).
@@ -79,8 +81,9 @@ def bandwidth_saving(
     override, ``ANNCode.py:693-704``); every full fetch costs
     ``16·D/8``; baseline reads full precision for every candidate.
     """
-    b_full = 16.0 * dim / 8.0
-    b_red = red_bytes_override if red_bytes_override is not None else (1 + keep_e + keep_m) * dim / 8.0
+    b_full, b_red = byte_model(dim, keep_m, keep_e)
+    if red_bytes_override is not None:
+        b_red = red_bytes_override
     total = b_red * n_corpus * n_queries + b_full * float(n_fetched_full)
     baseline = b_full * n_corpus * n_queries
     return 1.0 - total / baseline

@@ -353,7 +353,7 @@ def ivfadc_candidates(queries: DataFrame, corpus: DataFrame, n: int) -> DataFram
     """(query_id, neighbor_id): the IVFADC ADC pre-rank — the top ``n``
     candidates per query by residual-space asymmetric distance (steps
     1–2 of ``ivfpq_res_topk``, without the exact re-rank). Factored
-    so the cushion composition (``refine.ivfadc_cushion_topk``) and
+    so the cushion composition (``refine.cushion_topk("ivfadc", ...)``) and
     the plain IVFADC serve path share one candidate generator: the
     probed trained cells bound the scan, codes price it, and only
     these n ids ever leave the index."""

@@ -59,17 +59,32 @@ precision unread) → salted two-phase window for the seed → broadcast
 join of the tiny seed/survivor sets back to the full-precision column
 (late materialization, J2) → final window. Shuffles: the seed rank
 (on (query_id, shard)) and two joins of K-to-survivor-sized frames.
+
+**Candidate sources** (README.md:11: the method is "orthogonal to index
+choice"): ``cushion_topk(source, ...)`` composes any index with the
+same re-scorer. :data:`CANDIDATE_SOURCES` maps each source name (ivf,
+ivfadc, rabitq, lsh, lsh_multiprobe, graph, cascade, mrl) to the metric
+space its pre-rank orders by and a function that yields its
+``(query_id, vec_id)`` candidate stream; ``refine_topk(candidate_ids=
+...)`` then prices the exact re-scoring of that stream. Adding an index
+family is one table row.
 """
 
 from __future__ import annotations
 
 import math
 from dataclasses import dataclass
+from functools import partial
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.fp16 import FP16_EXP_BITS, with_fp16_rounded, with_reduced_precision
+from ..functions.fp16 import (
+    FP16_EXP_BITS,
+    byte_model,
+    with_fp16_rounded,
+    with_reduced_precision,
+)
 from ..session import ensure_parallelism
 from ..functions.vector import NORM_EPS, delta_from_exp_col, dot, l2_norm, unit
 from .topk import topk_per_query
@@ -598,8 +613,9 @@ def _refine_metrics_with_frames(
         )
     )
 
-    b_full = 16.0 * dim / 8.0
-    b_red = red_bytes_override if red_bytes_override is not None else (1 + keep_e + keep_m) * dim / 8.0
+    b_full, b_red = byte_model(dim, keep_m, keep_e)
+    if red_bytes_override is not None:
+        b_red = red_bytes_override
 
     # one counting pass over the fetch set + one over the pair frame
     per_fetch = (
@@ -638,217 +654,165 @@ def _refine_metrics_with_frames(
     return row, ([] if key is not None else [scored, fetched])
 
 
-def ivf_cushion_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    mode: str,
-    k: int,
-    keep_m: int,
-    delta: float | None = None,
-    nprobe: int | None = None,
-    cache_key: str | None = None,
-) -> RefineResult:
-    """The engine's flagship composition: IVF candidate generation ×
-    cushioned precision-on-demand refinement. The coarse quantizer
-    prunes the corpus to the probed cells (the classic IVF bandwidth
-    win); the cushioned two-phase refinement then prices the
-    re-scoring of those candidates — scanning their reduced
-    representation and fetching full precision only for seeds and
-    cushion-admitted survivors (the reference's contribution,
-    ``ANNCode.py:560-575``, applied to an index's candidate stream
-    instead of the whole corpus; README.md:11 declares the method
-    "orthogonal to index choice" — this operator is that claim,
-    composed).
 
-    Zero-miss composition law (test- and oracle-checked): the result
-    equals the exact re-rank of the same IVF candidates, so recall
-    vs. the full-corpus exact top-K is EXACTLY ``ann_ivf_recall`` —
-    the cushion loses nothing on top of the cell pruning."""
+
+# ---------------------------------------------------------------------------
+# Index × cushion compositions: candidate sources
+# ---------------------------------------------------------------------------
+
+def _as_vec_ids(df: DataFrame) -> DataFrame:
+    return df.select("query_id", F.col("neighbor_id").alias("vec_id"))
+
+
+def _ivf_candidates(queries, corpus, prepared, k, nprobe=None):
+    """Every vector in the query's ``nprobe`` nearest IVF cells."""
     from .simsearch import IVF_NPROBE, ivf_assign, ivf_centroids, ivf_probes
 
-    nprobe = IVF_NPROBE if nprobe is None else nprobe
     cents = ivf_centroids(corpus)
     assigned = ivf_assign(corpus, cents)
-    probes = ivf_probes(queries, cents, nprobe)
-    cand_ids = F.broadcast(probes.select("query_id", "cell")).join(
+    probes = ivf_probes(queries, cents, IVF_NPROBE if nprobe is None else nprobe)
+    return F.broadcast(probes.select("query_id", "cell")).join(
         assigned.select("vec_id", "cell"), "cell"
     ).select("query_id", "vec_id")
-    return refine_topk(
-        queries,
-        corpus,
-        mode,
-        k,
-        keep_m,
-        delta,
-        cache_key=cache_key,
-        candidate_ids=cand_ids,
-    )
 
 
-def ivfadc_cushion_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    mode: str,
-    k: int,
-    keep_m: int,
-    delta: float | None = None,
-    cache_key: str | None = None,
-) -> RefineResult:
-    """IVFADC ADC pre-rank × cushioned refinement — the round's
-    flagship index behind the reference's precision-on-demand
-    re-scorer (the same "orthogonal to index choice" composition as
-    ``ivf_cushion_topk``, applied to a COMPRESSED index: the candidate
-    stream comes from 8-byte residual codes, never from raw vectors,
-    so the composed pipeline touches full precision only for seeds
-    and cushion-admitted survivors of an R·K-deep code scan).
-
-    Zero-miss composition law: the result equals the exact (fp16)
-    re-rank of the same ADC candidates, so recall vs the raw exact
-    top-K is bounded by ``ann_ivfpq_res_recall``'s candidate quality;
-    the cushion itself loses nothing over the stream."""
-    if is_cosine(mode):
-        raise ValueError(
-            "ivfadc_cushion_topk pre-ranks by L2-family ADC over residual "
-            "codes; use an l2-* mode (a cosine cushion would silently "
-            "re-rank an L2 pre-rank)"
-        )
+def _ivfadc_candidates(queries, corpus, prepared, k):
+    """The R·K-deep ADC pre-rank over IVFADC residual codes."""
     from .pq import PQ_REFINE_R, ivfadc_candidates
 
-    cand_ids = ivfadc_candidates(queries, corpus, PQ_REFINE_R * k).select(
-        "query_id", F.col("neighbor_id").alias("vec_id")
-    )
-    return refine_topk(
-        queries,
-        corpus,
-        mode,
-        k,
-        keep_m,
-        delta,
-        cache_key=cache_key,
-        candidate_ids=cand_ids,
-    )
+    return _as_vec_ids(ivfadc_candidates(queries, corpus, PQ_REFINE_R * k))
 
 
-def rabitq_cushion_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    mode: str,
-    k: int,
-    keep_m: int,
-    delta: float | None = None,
-    cache_key: str | None = None,
-) -> RefineResult:
-    """RaBitQ estimator pre-rank × cushioned refinement — the cosine
-    counterpart of ``ivfadc_cushion_topk``'s compressed-index
-    composition: candidates come from the 12-byte rotated 1-bit code
-    table (never from raw vectors), and the cushioned re-scorer
-    prices their full-precision fetches. Zero-miss over the stream:
-    equals the exact (fp16) re-rank of the same R·K estimator
-    candidates."""
-    if not is_cosine(mode):
-        raise ValueError(
-            "rabitq_cushion_topk pre-ranks by a cosine estimator; use a "
-            "cos-* mode (an l2 cushion would silently re-rank a cosine "
-            "pre-rank)"
-        )
+def _rabitq_candidates(queries, corpus, prepared, k):
+    """The R·K-deep RaBitQ estimator pre-rank over rotated sign codes."""
     from .rabitq import RABITQ_REFINE_R, rabitq_candidates
 
-    cand_ids = rabitq_candidates(queries, corpus, RABITQ_REFINE_R * k).select(
-        "query_id", F.col("neighbor_id").alias("vec_id")
-    )
-    return refine_topk(
-        queries,
-        corpus,
-        mode,
-        k,
-        keep_m,
-        delta,
-        cache_key=cache_key,
-        candidate_ids=cand_ids,
+    return _as_vec_ids(rabitq_candidates(queries, corpus, RABITQ_REFINE_R * k))
+
+
+def _lsh_pairs(qb: DataFrame, corpus: DataFrame, dim: int) -> DataFrame:
+    from .simsearch import lsh_corpus_bands
+
+    cb = lsh_corpus_bands(corpus, dim=dim)
+    return (
+        qb.alias("q")
+        .join(cb.alias("c"), ["band", "bkey"])
+        .select(F.col("q.id").alias("query_id"), F.col("c.id").alias("vec_id"))
+        .distinct()
     )
 
 
-def lsh_cushion_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    mode: str,
-    k: int,
-    keep_m: int,
-    delta: float | None = None,
-    cache_key: str | None = None,
-) -> RefineResult:
-    """Hyperplane-LSH candidate generation × cushioned refinement —
-    the second instantiation of the "orthogonal to index choice"
-    composition (see ``ivf_cushion_topk``). LSH band candidates are
-    several times larger per query than IVF's probed cells at the
-    fixture operating point, which is exactly the regime where
-    precision-on-demand pays: the K seeds are a small fraction of the
-    stream, so the cushion prunes most of the full-precision
-    fetches."""
-    from .simsearch import embedding_dim, lsh_corpus_bands, lsh_signature_bands
+def _lsh_candidates(queries, corpus, prepared, k):
+    """Every vector sharing a hyperplane-LSH band bucket with the query."""
+    from .simsearch import embedding_dim, lsh_signature_bands
 
     dim = embedding_dim(corpus)
     qb = lsh_signature_bands(
         queries.select("query_id", "embedding"), "embedding", "query_id", dim=dim
     )
-    cb = lsh_corpus_bands(corpus, dim=dim)
-    cand_ids = (
-        qb.alias("q")
-        .join(cb.alias("c"), ["band", "bkey"])
-        .select(F.col("q.id").alias("query_id"), F.col("c.id").alias("vec_id"))
-        .distinct()
-    )
-    return refine_topk(
-        queries,
-        corpus,
-        mode,
-        k,
-        keep_m,
-        delta,
-        cache_key=cache_key,
-        candidate_ids=cand_ids,
-    )
+    return _lsh_pairs(qb, corpus, dim)
 
 
-def lsh_multiprobe_cushion_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    mode: str,
-    k: int,
-    keep_m: int,
-    delta: float | None = None,
-    t: int | None = None,
-    cache_key: str | None = None,
-) -> RefineResult:
-    """Multi-probe LSH candidate generation × cushioned refinement —
-    the r08 recall lever (flipped lowest-margin buckets, recall@20
-    0.484 → 0.841 at the stored 4×4 layout) composed with the
-    reference's precision-on-demand re-scorer. The wider candidate
-    stream (~2.3× plain LSH) is exactly the regime where the cushion
-    pays most: seeds are a smaller mandatory fraction, so the
-    per-candidate byte saving EXCEEDS the plain-LSH composition's
-    while recall rises. Zero-miss over the stream (composition law):
-    final recall ≡ ``ann_lsh_multiprobe_recall``."""
-    from .simsearch import (
-        LSH_MULTIPROBE_T,
-        embedding_dim,
-        lsh_corpus_bands,
-        lsh_multiprobe_bands,
-    )
+def _lsh_multiprobe_candidates(queries, corpus, prepared, k):
+    """LSH buckets plus the buckets reached by flipping each band's
+    lowest-margin signature bits (query side only)."""
+    from .simsearch import embedding_dim, lsh_multiprobe_bands
 
-    t = LSH_MULTIPROBE_T if t is None else t
     dim = embedding_dim(corpus)
     qb = lsh_multiprobe_bands(
-        queries.select("query_id", "embedding"), "embedding", "query_id",
-        t=t, dim=dim,
+        queries.select("query_id", "embedding"), "embedding", "query_id", dim=dim
     )
-    cb = lsh_corpus_bands(corpus, dim=dim)
-    cand_ids = (
-        qb.alias("q")
-        .join(cb.alias("c"), ["band", "bkey"])
-        .select(F.col("q.id").alias("query_id"), F.col("c.id").alias("vec_id"))
-        .distinct()
+    return _lsh_pairs(qb, corpus, dim)
+
+
+def _graph_candidates(queries, corpus, prepared, k, edges=None):
+    """Everything a beam walk visits when it ranks its frontier by the
+    REDUCED dot product (the walk never reads full precision — the
+    HNSW-with-codes deployment shape). ``edges`` replaces the banded
+    KNN graph with an explicit ``(src, dst)`` frame, e.g. the α-pruned
+    Vamana graph."""
+    from .simsearch import GRAPH_DEGREE, beam_candidates, symmetric_knn_edges
+
+    if edges is None:
+        edges = symmetric_knn_edges(corpus, GRAPH_DEGREE)
+    # unit-normalized queries: the walk's score is reduced cosine
+    qs = prepare_queries(queries, "cos-l1")
+    walk = beam_candidates(
+        qs, prepared.select("vec_id", "redv"), edges, score=dot("redv", "q")
     )
+    return walk.select("query_id", "vec_id")
+
+
+def _cascade_candidates(queries, corpus, prepared, k):
+    """The 1-bit Hamming admit → int8 recon-cosine narrow cascade."""
+    from .bq import cascade_candidates
+
+    return _as_vec_ids(cascade_candidates(queries, corpus, k))
+
+
+def _mrl_candidates(queries, corpus, prepared, k):
+    """The R·K-deep Matryoshka prefix-cosine pre-rank."""
+    from .mrl import MRL_REFINE_R, mrl_topk
+
+    return _as_vec_ids(mrl_topk(queries, corpus, MRL_REFINE_R * k))
+
+
+#: source name → (metric space its pre-rank orders by, or None when the
+#: candidate set does not depend on a metric; candidate function). A
+#: candidate function takes ``(queries, corpus, prepared corpus, k,
+#: **params)`` and returns distinct ``(query_id, vec_id)`` pairs.
+CANDIDATE_SOURCES = {
+    "ivf": (None, _ivf_candidates),
+    "ivfadc": ("l2", _ivfadc_candidates),
+    "rabitq": ("cos", _rabitq_candidates),
+    "lsh": (None, _lsh_candidates),
+    "lsh_multiprobe": (None, _lsh_multiprobe_candidates),
+    "graph": ("cos", _graph_candidates),
+    "cascade": ("cos", _cascade_candidates),
+    "mrl": ("cos", _mrl_candidates),
+}
+
+
+def cushion_topk(
+    source: str,
+    queries: DataFrame,
+    corpus: DataFrame,
+    mode: str,
+    k: int,
+    keep_m: int,
+    delta: float | None = None,
+    cache_key: str | None = None,
+    **params,
+) -> RefineResult:
+    """Index candidate generation × cushioned precision-on-demand
+    refinement (README.md:11: the method is "orthogonal to index
+    choice"). ``source`` names a :data:`CANDIDATE_SOURCES` entry; its
+    candidate stream restricts ``refine_topk``'s phase 1, which then
+    fetches full precision only for seeds and cushion-admitted
+    survivors. ``params`` go to the candidate function (``nprobe`` for
+    ivf, ``edges`` for graph).
+
+    Zero-miss composition law (test- and oracle-checked): the result
+    equals the exact (fp16) re-rank of the same candidates, so recall
+    against the full-corpus top-K is exactly the index's own candidate
+    recall — the cushion loses nothing on top of the pruning.
+
+    A source whose pre-rank orders by one metric refuses a mode of the
+    other family: the cushion would silently re-rank, say, an L2
+    pre-rank by cosine."""
+    if source not in CANDIDATE_SOURCES:
+        raise ValueError(
+            f"unknown candidate source {source!r}; expected one of "
+            f"{sorted(CANDIDATE_SOURCES)}"
+        )
+    space, candidates = CANDIDATE_SOURCES[source]
+    if space is not None and space != ("cos" if is_cosine(mode) else "l2"):
+        raise ValueError(
+            f"the {source} candidate source pre-ranks in {space} space; "
+            f"use a {space}-* mode"
+        )
+    prepared = prepare_corpus_cached(corpus, keep_m, mode, cache_key)
+    cand_ids = candidates(queries, corpus, prepared, k, **params)
     return refine_topk(
         queries,
         corpus,
@@ -856,192 +820,11 @@ def lsh_multiprobe_cushion_topk(
         k,
         keep_m,
         delta,
-        cache_key=cache_key,
+        prepared_corpus=prepared,
         candidate_ids=cand_ids,
     )
 
 
-def graph_cushion_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    mode: str,
-    k: int,
-    keep_m: int,
-    delta: float | None = None,
-    graph_k: int | None = None,
-    beam: int | None = None,
-    rounds: int | None = None,
-    entry_stride: int | None = None,
-    cache_key: str | None = None,
-    edges: DataFrame | None = None,
-) -> RefineResult:
-    """Quantization-guided graph walk × cushioned refinement — the
-    third index family behind the same re-scorer, and the one
-    production graph stores actually ship: the beam search ranks its
-    frontier on the REDUCED representation (the walk never touches
-    full precision — in HNSW-with-PQ deployments the graph adjacency
-    and the codes are the only hot data), and the cushioned
-    refinement then prices the exact re-scoring of everything the
-    walk visited. Zero-miss over the visited stream, so the final
-    top-K equals the exact (fp16) re-rank of the walk's candidates.
-
-    Only cosine modes are meaningful here (the walk maximizes
-    reduced dot product; an l2 walk would need the lower-bound form
-    per hop — same composition, omitted).
-
-    ``edges`` overrides the banded edge set with an explicit (src,
-    dst) frame — the α-pruned Vamana graph for the
-    ``ann_vamana_cushion_*`` composition (same walk, better graph)."""
-    from .simsearch import (
-        BEAM_ENTRY_STRIDE,
-        BEAM_ROUNDS,
-        BEAM_WIDTH,
-        GRAPH_DEGREE,
-        symmetric_knn_edges,
-    )
-    from pyspark.sql.window import Window
-
-    if not is_cosine(mode):
-        raise ValueError("graph_cushion_topk walks by reduced dot product; use a cos-* mode")
-    graph_k = GRAPH_DEGREE if graph_k is None else graph_k
-    beam = BEAM_WIDTH if beam is None else beam
-    rounds = BEAM_ROUNDS if rounds is None else rounds
-    entry_stride = BEAM_ENTRY_STRIDE if entry_stride is None else entry_stride
-
-    corp = prepare_corpus_cached(corpus, keep_m, mode, cache_key)
-    qs = F.broadcast(prepare_queries(queries, mode))
-    if edges is None:
-        edges = symmetric_knn_edges(corpus, graph_k)
-    red_side = corp.select("vec_id", "redv")
-    seeds = F.broadcast(red_side.where(F.col("vec_id") % entry_stride == 0))
-    cand = (
-        qs.crossJoin(seeds)
-        .select("query_id", "vec_id", dot("redv", "q").alias("red_score"))
-    ).localCheckpoint(eager=False)
-    for _ in range(rounds):
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("red_score").desc(), F.col("vec_id").asc()
-        )
-        frontier = (
-            cand.withColumn("__r", F.row_number().over(w))
-            .where(F.col("__r") <= beam)
-            .select("query_id", "vec_id")
-        )
-        new_ids = (
-            frontier.join(edges, frontier.vec_id == edges.src)
-            .select("query_id", F.col("dst").alias("vec_id"))
-            .distinct()
-        )
-        scored = (
-            new_ids.join(red_side, "vec_id")
-            .join(qs, "query_id")
-            .select("query_id", "vec_id", dot("redv", "q").alias("red_score"))
-        )
-        # dedup on the id pair alone (max — the pair's red_score is
-        # bit-identical across rounds); distinct() over the float
-        # column would rely on that bit-identity forever (r04 advisor)
-        cand = (
-            cand.unionByName(scored)
-            .groupBy("query_id", "vec_id")
-            .agg(F.max("red_score").alias("red_score"))
-            .localCheckpoint(eager=False)
-        )
-    visited = cand.select("query_id", "vec_id")
-    return refine_topk(
-        queries,
-        corpus,
-        mode,
-        k,
-        keep_m,
-        delta,
-        cache_key=cache_key,
-        candidate_ids=visited,
-    )
-
-
-def cascade_cushion_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    mode: str,
-    k: int,
-    keep_m: int,
-    delta: float | None = None,
-    r1: int | None = None,
-    r2: int | None = None,
-    cache_key: str | None = None,
-) -> RefineResult:
-    """Cascade candidates × cushioned refinement — the fifth index
-    family behind the shared re-scorer, and the cheapest candidate
-    generator of them all: stage 1 reads 1 bit/coordinate, stage 2
-    int8, and the cushioned re-scoring then reads mantissa-truncated
-    pages plus only the surviving full-precision fetches. Zero-miss
-    within the candidate stream, as for every composition.
-
-    Cosine modes only — the cascade's stage-2 narrows by recon
-    cosine, so an l2 cushion would re-rank a differently-ordered
-    admit set."""
-    from .bq import CASCADE_R1, CASCADE_R2, cascade_candidates
-
-    if not is_cosine(mode):
-        raise ValueError(
-            "cascade_cushion_topk pre-ranks by recon cosine; use a cos-* mode"
-        )
-    r1 = CASCADE_R1 if r1 is None else r1
-    r2 = CASCADE_R2 if r2 is None else r2
-    cand = cascade_candidates(queries, corpus, k, r1=r1, r2=r2).select(
-        "query_id", F.col("neighbor_id").alias("vec_id")
-    )
-    return refine_topk(
-        queries,
-        corpus,
-        mode,
-        k,
-        keep_m,
-        delta,
-        cache_key=cache_key,
-        candidate_ids=cand,
-    )
-
-
-def mrl_cushion_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    mode: str,
-    k: int,
-    keep_m: int,
-    delta: float | None = None,
-    r: int | None = None,
-    d_keep: int | None = None,
-    cache_key: str | None = None,
-) -> RefineResult:
-    """Matryoshka prefix candidates × cushioned refinement — the
-    fourth index family behind the same re-scorer, and the one that
-    composes the engine's TWO bandwidth axes: the candidate pass reads
-    d'/D of the coordinates (dimension truncation), and the cushioned
-    re-scoring then reads mantissa-truncated pages plus only the
-    surviving full-precision fetches (per-coordinate truncation).
-    Zero-miss within the candidate stream, as for every composition:
-    the result equals the exact (fp16) re-rank of the prefix pre-
-    rank's R·K admits.
-
-    Cosine modes only — the prefix pre-rank maximizes prefix cosine,
-    the l2 analog would pre-rank by prefix distance lower bound (same
-    composition, omitted)."""
-    from .mrl import MRL_REFINE_R, mrl_topk
-
-    if not is_cosine(mode):
-        raise ValueError("mrl_cushion_topk pre-ranks by prefix cosine; use a cos-* mode")
-    r = MRL_REFINE_R if r is None else r
-    cand = mrl_topk(queries, corpus, r * k, d_keep=d_keep).select(
-        "query_id", F.col("neighbor_id").alias("vec_id")
-    )
-    return refine_topk(
-        queries,
-        corpus,
-        mode,
-        k,
-        keep_m,
-        delta,
-        cache_key=cache_key,
-        candidate_ids=cand,
-    )
+# kept because perfbench/workloads.py calls the IVF composition by this
+# name and call shape
+ivf_cushion_topk = partial(cushion_topk, "ivf")

@@ -50,6 +50,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.fp16 import (
+    byte_model,
     delta_from_exp_np,
     fp16_round_np,
     reduce_precision_np,
@@ -541,12 +542,9 @@ def replica_metrics(
     """Reference-exact metrics row from the per-query summaries,
     reproducing the evolving-threshold byte accounting
     (``ANNCode.py:316-319, 368-370``)."""
-    b_full = 16.0 * dim / 8.0
-    b_red = (
-        red_bytes_override
-        if red_bytes_override is not None
-        else (1 + keep_e + keep_m) * dim / 8.0
-    )
+    b_full, b_red = byte_model(dim, keep_m, keep_e)
+    if red_bytes_override is not None:
+        b_red = red_bytes_override
     agg = replica_df.agg(
         F.count("*").alias("n_q"),
         F.sum("n_fetched").alias("fetches"),

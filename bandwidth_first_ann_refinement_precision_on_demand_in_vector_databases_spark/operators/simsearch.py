@@ -29,7 +29,7 @@ path (reference metric, ``ANNCode.py:651-660``).
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -875,6 +875,7 @@ def beam_candidates(
     rounds: int = BEAM_ROUNDS,
     entry_stride: int = BEAM_ENTRY_STRIDE,
     entries: DataFrame | None = None,
+    score: Column | None = None,
 ) -> DataFrame:
     """The visited set ``(query_id, vec_id, score)`` of the beam walk
     over an explicit ``(src, dst)`` edge frame — the serve-path core:
@@ -883,24 +884,29 @@ def beam_candidates(
     and the walk itself never touches how the graph was built.
     ``entries`` overrides the stride seeds with an explicit scored
     entry frame (query_id, vec_id, score) —
-    :func:`centroid_seeded_entries` is the trained variant."""
-    qv = F.broadcast(
-        queries.select("query_id", F.col("embedding").alias("qvec"))
-    )
+    :func:`centroid_seeded_entries` is the trained variant.
+
+    By default the walk scores ``cosine`` over both frames'
+    ``embedding`` columns. ``score`` replaces that with any expression
+    over the columns of ``queries`` (keyed by ``query_id``) and
+    ``corpus`` (keyed by ``vec_id``), which are then used as given —
+    the cushion composition walks on the reduced representation."""
+    if score is None:
+        queries = queries.select("query_id", F.col("embedding").alias("qvec"))
+        corpus = corpus.select("vec_id", F.col("embedding").alias("cvec"))
+        score = cosine("qvec", "cvec")
+    qv = F.broadcast(queries)
     # lazy checkpoints throughout the walk (see walk_reachability):
     # identical plan truncation; only the result-stage job is
     # deferred (AQE still runs the shuffle stages at call time).
     if entries is not None:
         cand = entries.localCheckpoint(eager=False)
     else:
-        seeds = corpus.where(F.col("vec_id") % entry_stride == 0).select(
-            "vec_id", F.col("embedding").alias("cvec")
-        )
+        seeds = corpus.where(F.col("vec_id") % entry_stride == 0)
         cand = (
             qv.crossJoin(F.broadcast(seeds))
-            .select("query_id", "vec_id", cosine("qvec", "cvec").alias("score"))
+            .select("query_id", "vec_id", score.alias("score"))
         ).localCheckpoint(eager=False)
-    cv = corpus.select("vec_id", F.col("embedding").alias("cvec"))
     for _ in range(rounds):
         w = Window.partitionBy("query_id").orderBy(
             F.col("score").desc(), F.col("vec_id").asc()
@@ -916,9 +922,9 @@ def beam_candidates(
             .distinct()
         )
         scored = (
-            new_ids.join(cv, "vec_id")
+            new_ids.join(corpus, "vec_id")
             .join(qv, "query_id")
-            .select("query_id", "vec_id", cosine("qvec", "cvec").alias("score"))
+            .select("query_id", "vec_id", score.alias("score"))
         )
         # dedup on the id pair alone (max(score) — scores for a pair
         # are bit-identical across rounds, so max is the value

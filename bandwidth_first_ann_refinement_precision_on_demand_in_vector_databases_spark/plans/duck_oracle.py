@@ -27,7 +27,9 @@ unspecified). Grouped MIN/MAX/COUNT are order-insensitive and safe.
 
 from __future__ import annotations
 
+from ..functions.fp16 import byte_model
 from ..operators.refine import hoeff_const
+from ..sources.fixtures import FIXTURE_EMBED_DIM
 
 FP16_MAN_BITS = 10
 
@@ -268,19 +270,23 @@ gt AS (
 
 
 def refine_topk_sql(mode: str, k: int, keep_m: int, delta: float | None,
-                    query_stride: int) -> str:
+                    query_stride: int, extra_ctes: str = "",
+                    candidate_cte: str | None = None) -> str:
+    """Final top-K of ``refine_body`` (candidate-restricted when
+    ``candidate_cte`` is given — the ``cushion_topk`` oracle)."""
+    body = refine_body(mode, k, keep_m, delta, query_stride, extra_ctes, candidate_cte)
     return f"""
 WITH {fp16_cte(keep_m)},
-{refine_body(mode, k, keep_m, delta, query_stride)}
+{body}
 SELECT query_id, rank, neighbor_id, round(score, 6) AS score
 FROM final WHERE rank <= {k}
 """
 
 
 def refine_metrics_sql(mode: str, k: int, keep_m: int, delta: float | None,
-                       query_stride: int, dim: int = 64, keep_e: int = 5) -> str:
-    b_full = 16.0 * dim / 8.0
-    b_red = (1 + keep_e + keep_m) * dim / 8.0
+                       query_stride: int, dim: int = FIXTURE_EMBED_DIM,
+                       keep_e: int = 5) -> str:
+    b_full, b_red = byte_model(dim, keep_m, keep_e)
     return f"""
 WITH {fp16_cte(keep_m)},
 {refine_body(mode, k, keep_m, delta, query_stride)},
@@ -302,6 +308,31 @@ SELECT
   1.0 - ({b_red!r} * n_c * n_q + {b_full!r} * n_fetched) / ({b_full!r} * n_c * n_q) AS save,
   n_unnecessary / CAST(n_c * n_q AS DOUBLE) AS fpr
 FROM counts
+"""
+
+
+def cushion_metrics_sql(mode: str, k: int, keep_m: int, delta: float | None,
+                        query_stride: int, extra_ctes: str, candidate_cte: str,
+                        dim: int = FIXTURE_EMBED_DIM) -> str:
+    """Byte accounting of a candidate-restricted refinement: candidate
+    pairs, full fetches (seeds + survivors), and the saving against an
+    exact re-rank of the candidates and against a full-corpus scan."""
+    b_full, b_red = byte_model(dim, keep_m)
+    return f"""
+WITH {fp16_cte(keep_m)},
+{refine_body(mode, k, keep_m, delta, query_stride, extra_ctes, candidate_cte)},
+pair_n AS (SELECT count(*) AS n_pairs, count(DISTINCT query_id) AS n_q FROM pairs),
+fetch_n AS (
+  SELECT (SELECT count(*) FROM seed) + (SELECT count(*) FROM surv) AS n_fetched
+),
+corp_n AS (SELECT count(*) AS n_corpus FROM embeddings)
+SELECT p.n_pairs, f.n_fetched,
+  round(CAST(f.n_fetched AS DOUBLE) / p.n_pairs, 6) AS fetch_frac,
+  round(1.0 - ({b_red!r} * p.n_pairs + {b_full!r} * f.n_fetched)
+            / ({b_full!r} * p.n_pairs), 6) AS save_vs_exact_rerank,
+  round(1.0 - ({b_red!r} * p.n_pairs + {b_full!r} * f.n_fetched)
+            / ({b_full!r} * p.n_q * c.n_corpus), 6) AS save_vs_full_scan
+FROM pair_n p CROSS JOIN fetch_n f CROSS JOIN corp_n c
 """
 
 

@@ -130,3 +130,31 @@ def test_compact_cells_does_not_grow_the_assignment_memo(spark, sf_small):
     assert len(session_cache(spark, "ivf_assign")) == n_memo
     assert _n_persistent(spark) == n_persist
     clear_caches(spark)
+
+
+def test_uncached_cushion_topk_prepares_the_corpus_once(spark, sf_small, monkeypatch):
+    """An uncached ``cushion_topk`` prepares (and persists) the corpus
+    ONCE and hands that frame to both consumers — the graph walk, which
+    ranks on the reduced column, and the refinement — instead of one
+    persisted copy per consumer that nothing ever releases."""
+    from bandwidth_first_ann_refinement_precision_on_demand_in_vector_databases_spark.operators import (
+        refine,
+    )
+    from bandwidth_first_ann_refinement_precision_on_demand_in_vector_databases_spark.sources.fixtures import (
+        queries_view,
+    )
+
+    built = []
+    prepare = refine.prepare_corpus
+
+    def counting_prepare(*args, **kwargs):
+        built.append(prepare(*args, **kwargs))
+        return built[-1]
+
+    monkeypatch.setattr(refine, "prepare_corpus", counting_prepare)
+    clear_caches(spark)
+    corpus = load_table(spark, sf_small, "embeddings")
+    res = refine.cushion_topk("graph", queries_view(spark, sf_small), corpus, "cos-l1", 10, 6)
+    assert res.topk.collect()
+    assert len(built) == 1 and built[0].is_cached
+    clear_caches(spark)
