@@ -29,7 +29,7 @@ from __future__ import annotations
 
 from ..functions.fp16 import byte_model
 from ..operators.refine import hoeff_const
-from ..sources.fixtures import FIXTURE_EMBED_DIM
+from ..sources.fixtures import FIXTURE_EMBED_DIM, QUERY_STRIDE
 
 FP16_MAN_BITS = 10
 
@@ -101,7 +101,8 @@ red_tbl AS (
 
 
 # ---------------------------------------------------------------------------
-# fold helpers (same shapes as registry's basic ones, DOUBLE left folds)
+# fold helpers: the one copy of every oracle's vector arithmetic (strict
+# DOUBLE left folds, bit-identical to the Spark folds)
 # ---------------------------------------------------------------------------
 
 def sql_dot(a: str, b: str) -> str:
@@ -113,6 +114,17 @@ def sql_dot(a: str, b: str) -> str:
 
 def sql_sq_norm(a: str) -> str:
     return f"list_sum(list_transform({a}, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))"
+
+
+def sql_norm(a: str) -> str:
+    return f"sqrt({sql_sq_norm(a)})"
+
+
+def sql_cos(a: str, b: str) -> str:
+    return (
+        f"({sql_dot(a, b)} / "
+        f"(greatest({sql_norm(a)}, 1e-12) * greatest({sql_norm(b)}, 1e-12)))"
+    )
 
 
 def sql_unit(a: str) -> str:
@@ -128,6 +140,16 @@ def sql_dist2(a: str, b: str) -> str:
         f"p -> (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE)) * "
         f"(CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE))))"
     )
+
+
+#: the fixture query set (``sources.fixtures.queries_view``) as a CTE body
+SQL_Q_CTE = (
+    f"SELECT vec_id AS query_id, embedding AS qe FROM embeddings "
+    f"WHERE vec_id % {QUERY_STRIDE} = 0"
+)
+
+#: metric → (exact score over (query, vector), rank order)
+METRICS = {"cosine": (sql_cos, "DESC"), "l2": (sql_dist2, "ASC")}
 
 
 # ---------------------------------------------------------------------------
@@ -333,6 +355,101 @@ SELECT p.n_pairs, f.n_fetched,
   round(1.0 - ({b_red!r} * p.n_pairs + {b_full!r} * f.n_fetched)
             / ({b_full!r} * p.n_q * c.n_corpus), 6) AS save_vs_full_scan
 FROM pair_n p CROSS JOIN fetch_n f CROSS JOIN corp_n c
+"""
+
+
+# ---------------------------------------------------------------------------
+# ANN family oracles: a family's candidate CTEs end in a relation of
+# (query_id, neighbor_id, score); these builders rank it, re-rank its
+# head exactly, or score its top-K against brute force. Ties break by
+# neighbor_id everywhere.
+# ---------------------------------------------------------------------------
+
+def rank_sql(cand: str, order: str, k: int, alias: str = "score") -> str:
+    """Top-``k`` of ``cand`` per query by ``score {order}``, the score
+    presented rounded to 6 decimals as ``alias``."""
+    return f"""
+SELECT query_id, rank, neighbor_id, round(score, 6) AS {alias} FROM (
+  SELECT query_id, neighbor_id, score,
+    CAST(row_number() OVER (PARTITION BY query_id ORDER BY score {order}, neighbor_id) AS INT) AS rank
+  FROM {cand}
+) WHERE rank <= {k}
+"""
+
+
+def rerank_cte(approx: str, r: int, k: int, metric: str,
+               emb: str = "embeddings", qsrc: str = "q") -> str:
+    """CTEs ``rerank_ids`` → ``rerank``: the top ``r·k`` of ``approx``
+    per query (ranked in the metric's order) re-scored exactly against
+    the full vectors of ``emb`` (vec_id, embedding) and ``qsrc``
+    (query_id, qe)."""
+    score, order = METRICS[metric]
+    return f"""rerank_ids AS (
+  SELECT query_id, neighbor_id FROM (
+    SELECT query_id, neighbor_id,
+      row_number() OVER (PARTITION BY query_id ORDER BY score {order}, neighbor_id) AS r
+    FROM {approx}
+  ) WHERE r <= {r * k}
+),
+rerank AS (
+  SELECT c.query_id, c.neighbor_id, {score("q.qe", "e.embedding")} AS score
+  FROM rerank_ids c
+  JOIN {emb} e ON e.vec_id = c.neighbor_id
+  JOIN {qsrc} AS q ON q.query_id = c.query_id
+)"""
+
+
+def exact_cte(metric: str, k: int) -> str:
+    """``exact``: the brute-force top-``k`` of every ``q`` query over
+    ``embeddings`` — the ground truth of every ANN recall oracle."""
+    score, order = METRICS[metric]
+    return f"""exact AS (
+  SELECT query_id, neighbor_id FROM (
+    SELECT q.query_id, e.vec_id AS neighbor_id,
+      row_number() OVER (PARTITION BY q.query_id
+        ORDER BY {score("q.qe", "e.embedding")} {order}, e.vec_id) AS rank
+    FROM q CROSS JOIN embeddings e
+  ) WHERE rank <= {k}
+)"""
+
+
+#: the final select over ``recall_tail``'s ``per_q``
+RECALL_SELECT = (
+    "SELECT round(avg(recall), 6) AS recall_at_k, count(*) AS n_queries FROM per_q"
+)
+
+
+def recall_tail(gt: str, k: int) -> str:
+    """CTEs ``hits`` → ``per_q``: Recall@``k`` of the ``ann``
+    (query_id, neighbor_id) relation against the ground truth ``gt``,
+    per query of ``gt`` (a query with no hit counts 0)."""
+    return f"""hits AS (
+  SELECT {gt}.query_id, count(*) AS n_hit
+  FROM {gt} JOIN ann USING (query_id, neighbor_id) GROUP BY {gt}.query_id
+),
+per_q AS (
+  SELECT q2.query_id, CAST(coalesce(h.n_hit, 0) AS DOUBLE) / {k} AS recall
+  FROM (SELECT DISTINCT query_id FROM {gt}) q2 LEFT JOIN hits h USING (query_id)
+)"""
+
+
+def recall_sql(ctes: str, ann_rel: str, metric: str, k: int) -> str:
+    """(recall_at_k, n_queries): the top-``k`` of ``ann_rel`` (defined
+    by ``ctes``, which also define ``q``) against the brute-force
+    top-``k`` in ``metric``."""
+    order = METRICS[metric][1]
+    return f"""
+WITH {ctes},
+ann AS (
+  SELECT query_id, neighbor_id FROM (
+    SELECT query_id, neighbor_id,
+      row_number() OVER (PARTITION BY query_id ORDER BY score {order}, neighbor_id) AS rank
+    FROM {ann_rel}
+  ) WHERE rank <= {k}
+),
+{exact_cte(metric, k)},
+{recall_tail("exact", k)}
+{RECALL_SELECT}
 """
 
 

@@ -32,6 +32,7 @@ from .operators.metrics import recall_at_k
 from .operators.refine import MODES, refine_metrics, refine_topk
 from .operators.topk import exact_topk, exact_topk_fixture_cached
 from .plans import duck_oracle
+from .plans.duck_oracle import SQL_Q_CTE, sql_cos, sql_dist2, sql_norm
 from .sources.fixtures import (
     FIXTURE_EMBED_DIM,
     QUERY_STRIDE,
@@ -44,51 +45,10 @@ KEEP_M_DEFAULT = 6   # reference CLI default, ANNCode.py:799
 DELTA_DEFAULT = 0.7  # reference CLI default, ANNCode.py:801
 
 
-# ---------------------------------------------------------------------------
-# DuckDB SQL building blocks (kept as python f-string helpers so every
-# oracle uses the exact same fold shapes).
-# ---------------------------------------------------------------------------
-
-def _sql_dot(a: str, b: str) -> str:
-    return (
-        f"list_sum(list_transform(list_zip({a}, {b}), "
-        f"p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))"
-    )
-
-
-def _sql_sq_norm(a: str) -> str:
-    return f"list_sum(list_transform({a}, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))"
-
-
-def _sql_norm(a: str) -> str:
-    return f"sqrt({_sql_sq_norm(a)})"
-
-
-def _sql_cosine(a: str, b: str) -> str:
-    return (
-        f"({_sql_dot(a, b)} / "
-        f"(greatest({_sql_norm(a)}, 1e-12) * greatest({_sql_norm(b)}, 1e-12)))"
-    )
-
-
-def _sql_dist2(a: str, b: str) -> str:
-    return (
-        f"list_sum(list_transform(list_zip({a}, {b}), "
-        f"p -> (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE)) * "
-        f"(CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE))))"
-    )
-
-
-SQL_QUERIES_CTE = (
-    f"SELECT vec_id AS query_id, embedding AS qe FROM embeddings "
-    f"WHERE vec_id % {QUERY_STRIDE} = 0"
-)
-
-
 def _sql_topk(score_expr: str, order: str, k: int) -> str:
     """Shared top-K oracle shape over queries × embeddings."""
     return f"""
-WITH q AS ({SQL_QUERIES_CTE}),
+WITH q AS ({SQL_Q_CTE}),
 s AS (
   SELECT q.query_id,
          e.vec_id AS neighbor_id,
@@ -538,20 +498,18 @@ def q_refine_l2_tz_served_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``tests/test_layout.py::test_refinement_phase1_prunes_full_column``
     — the same layout). Results are identical to the in-session
     preparation, so the oracle is shared with ``refine_l2_tz_topk``."""
-    import tempfile
-
-    from .operators.refine import refine_topk
     from .operators.refine import prepare_corpus as _prep
-    from .session import session_cache
+    from .session import artifact_dir
 
-    cache = session_cache(spark, "refine_layout_path")
-    if sf_dir not in cache:
-        path = tempfile.mkdtemp(prefix="bfann-refine-layout-")
-        _prep(
+    path = artifact_dir(
+        spark,
+        sf_dir,
+        "refine-layout",
+        lambda p: _prep(
             load_table(spark, sf_dir, "embeddings"), KEEP_M_DEFAULT, "l2-tz"
-        ).write.mode("overwrite").parquet(path)
-        cache[sf_dir] = path
-    prepared = spark.read.parquet(cache[sf_dir])
+        ).write.mode("overwrite").parquet(p),
+    )
+    prepared = spark.read.parquet(path)
     res = refine_topk(
         queries_view(spark, sf_dir),
         load_table(spark, sf_dir, "embeddings"),
@@ -598,6 +556,7 @@ def q_refine_l2_tz_exact_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
 QUERIES["refine_l2_tz_exact_metrics"] = q_refine_l2_tz_exact_metrics
 
 
+from .registry_ann import ANN_ORACLES, ANN_QUERIES  # noqa: E402
 from .registry_dedup import DEDUP_ORACLES, DEDUP_QUERIES  # noqa: E402
 from .registry_curation import CURATION_ORACLES, CURATION_QUERIES  # noqa: E402
 from .registry_multimodal import MULTIMODAL_ORACLES, MULTIMODAL_QUERIES  # noqa: E402
@@ -615,6 +574,7 @@ QUERIES.update(STREAMING_QUERIES)
 QUERIES.update(MULTIMODAL_QUERIES)
 QUERIES.update(CURATION_QUERIES)
 QUERIES.update(VECTORDB_QUERIES)
+QUERIES.update(ANN_QUERIES)
 
 #: The correctness harness executes queries in registration order under
 #: a global budget (a ~50-query window per round). Rotation policy: put
@@ -695,24 +655,24 @@ _FRONT = [
 # every late registration block has run)
 
 ORACLES: dict[str, str] = {
-    "topk_cosine_exact": _sql_topk(_sql_cosine("q.qe", "e.embedding"), "DESC", K_DEFAULT),
-    "topk_l2_exact": _sql_topk(_sql_dist2("q.qe", "e.embedding"), "ASC", K_DEFAULT),
+    "topk_cosine_exact": _sql_topk(sql_cos("q.qe", "e.embedding"), "DESC", K_DEFAULT),
+    "topk_l2_exact": _sql_topk(sql_dist2("q.qe", "e.embedding"), "ASC", K_DEFAULT),
     "rownorm_unit": f"""
 SELECT vec_id,
        CAST(generate_subscripts(embedding, 1) - 1 AS INT) AS pos,
-       round(CAST(unnest(embedding) AS DOUBLE) / greatest({_sql_norm('embedding')}, 1e-12), 6) + 0.0 AS u,
-       round({_sql_norm('embedding')}, 6) AS norm
+       round(CAST(unnest(embedding) AS DOUBLE) / greatest({sql_norm('embedding')}, 1e-12), 6) + 0.0 AS u,
+       round({sql_norm('embedding')}, 6) AS norm
 FROM embeddings
 """,
     "embedding_dim_stats": SQL_EMBEDDING_DIM_STATS,
     "embedding_drift_psi": SQL_EMBEDDING_DRIFT_PSI,
     "reduce_precision": duck_oracle.reduce_precision_sql(KEEP_M_DEFAULT),
     "recall_l2_vs_cosine": f"""
-WITH q AS ({SQL_QUERIES_CTE}),
+WITH q AS ({SQL_Q_CTE}),
 s AS (
   SELECT q.query_id, e.vec_id AS neighbor_id,
-         {_sql_cosine('q.qe', 'e.embedding')} AS cos_score,
-         {_sql_dist2('q.qe', 'e.embedding')} AS d2
+         {sql_cos('q.qe', 'e.embedding')} AS cos_score,
+         {sql_dist2('q.qe', 'e.embedding')} AS d2
   FROM q CROSS JOIN embeddings e
 ),
 gt AS (
@@ -777,6 +737,7 @@ ORACLES.update(STREAMING_ORACLES)
 ORACLES.update(MULTIMODAL_ORACLES)
 ORACLES.update(CURATION_ORACLES)
 ORACLES.update(VECTORDB_ORACLES)
+ORACLES.update(ANN_ORACLES)
 
 # Embedding covariance: the d×d second-moment diagnostic feeding
 # whitening / OPQ-style rotation decisions and embedding-drift
@@ -1039,27 +1000,23 @@ GROUP BY e.vec_id
 # ---------------------------------------------------------------------------
 
 from .operators.mrl import MRL_REFINE_R as _MRL_R  # noqa: E402
-from .operators.pq import IVFADC_KMEANS_ITERS as _ADC_ITERS  # noqa: E402
 from .operators.pq import PQ_REFINE_R as _ADC_R  # noqa: E402
 from .operators.rabitq import RABITQ_REFINE_R as _RBT_R  # noqa: E402
 from .operators.refine import cushion_topk  # noqa: E402
 from .operators.simsearch import LSH_MULTIPROBE_T as _LSH_MP_T  # noqa: E402
 from .registry_simsearch import (  # noqa: E402
     SQL_IVF_BODY as _SQL_IVF_BODY,
-    _SQL_RES_EMB as _SQL_ADC_RES_EMB,
+    SQL_IVFADC_BODY as _SQL_IVFADC_BODY,
     _sql_band_dots as _sql_lsh_band_dots,
     _sql_bands as _sql_lsh_bands,
-    _sql_dist2 as _sql_adc_dist2,
-    sql_ivf_body as _sql_adc_ivf_body,
-    sql_pq_body as _sql_adc_pq_body,
 )
 from .registry_vectordb import (  # noqa: E402
     _CASC_POOL1,
     _CASC_POOL2,
+    _SQL_BQ_CAND,
     _SQL_RBT_EST,
     _SQL_SQ_RECON as _SQL_SQ_RECON_FRAG,
     _rbt_base_ctes,
-    _sql_bq_words,
     _sql_mrl_cos as _SQL_MRL_COS,
 )
 
@@ -1113,7 +1070,7 @@ cand_ids AS (
 
 def _sql_graph_cushion_extra() -> str:
     from .operators import simsearch as _S
-    from .registry_simsearch import GRAPH_BEAM_K, _sql_cos
+    from .registry_simsearch import GRAPH_BEAM_K
 
     parts = [
         f"""gcb AS ({_sql_lsh_bands("embeddings", "vec_id", "embedding")}),
@@ -1123,7 +1080,7 @@ ggraph AS (
       row_number() OVER (PARTITION BY node_id
         ORDER BY score DESC, neighbor_id) AS rank
     FROM (
-      SELECT node_id, neighbor_id, {_sql_cos("qvec", "cvec")} AS score FROM (
+      SELECT node_id, neighbor_id, {sql_cos("qvec", "cvec")} AS score FROM (
         SELECT DISTINCT a.id AS node_id, b.id AS neighbor_id,
                a.vec AS qvec, b.vec AS cvec
         FROM gcb a JOIN gcb b
@@ -1216,14 +1173,7 @@ cand_ids AS (
 
 # cascade: operators/bq.cascade_candidates (Hamming admit, recon-cosine
 # narrow, same tie-breaks).
-_CASCADE_CUSHION_EXTRA = f"""{_sql_bq_words("q", "query_id", "qe", "bq_qw")},
-{_sql_bq_words("embeddings", "vec_id", "embedding", "bq_cw")},
-bq_cand AS (
-  SELECT qw.id AS query_id, cw.id AS neighbor_id,
-         CAST(sum(bit_count(xor(qw.wcode, cw.wcode))) AS INT) AS score
-  FROM bq_qw qw JOIN bq_cw cw ON qw.w = cw.w
-  GROUP BY qw.id, cw.id
-),
+_CASCADE_CUSHION_EXTRA = f"""{_SQL_BQ_CAND},
 {_SQL_SQ_RECON_FRAG},
 casc2 AS (
   SELECT query_id, neighbor_id FROM (
@@ -1237,7 +1187,7 @@ cand_ids AS MATERIALIZED (
   SELECT query_id, neighbor_id AS vec_id FROM (
     SELECT c.query_id, c.neighbor_id,
       row_number() OVER (PARTITION BY c.query_id
-        ORDER BY {_sql_cosine("q.qe", "r.recon")} DESC, c.neighbor_id) AS r
+        ORDER BY {sql_cos("q.qe", "r.recon")} DESC, c.neighbor_id) AS r
     FROM casc2 c
     JOIN recon r ON r.vec_id = c.neighbor_id
     JOIN q ON q.query_id = c.query_id
@@ -1245,26 +1195,10 @@ cand_ids AS MATERIALIZED (
 ),
 """
 
-#: IVFADC: the trained coarse quantizer (adckm prefix), residual corpus,
-#: residual-trained PQ, per-(query, cell) residual queries, ADC scores
-#: and the R·K pre-rank, over refine_body's ``q`` CTE (which exposes the
-#: raw ``qe``).
-_IVFADC_CUSHION_EXTRA = f"""{_sql_adc_ivf_body(iters=_ADC_ITERS, km_prefix="adckm")},
-{_SQL_ADC_RES_EMB},
-{_sql_adc_pq_body(emb="res_emb", qsrc="q")},
-ivfres_q AS (
-  SELECT p.query_id, p.cell,
-         list_transform(list_zip(p.qe, c.cvec),
-                        t -> CAST(t[1] AS DOUBLE) - CAST(t[2] AS DOUBLE)) AS qres
-  FROM probes p JOIN cents c ON c.centroid_id = p.cell
-),
-ivfres_adc AS (
-  SELECT qr.query_id, a.vec_id AS neighbor_id,
-         {_sql_adc_dist2("qr.qres", "r.recon")} AS score
-  FROM ivfres_q qr
-  JOIN res_emb a ON a.cell = qr.cell
-  JOIN pq_recon r ON r.vec_id = a.vec_id
-),
+#: IVFADC: the ADC scores shared with the ann_ivfpq_res_* oracles and
+#: the R·K pre-rank, over refine_body's ``q`` CTE (which exposes the raw
+#: ``qe``).
+_IVFADC_CUSHION_EXTRA = f"""{_SQL_IVFADC_BODY},
 cand_ids AS (
   SELECT query_id, neighbor_id AS vec_id FROM (
     SELECT query_id, neighbor_id,
@@ -1434,15 +1368,8 @@ WITH {duck_oracle.fp16_cte(KEEP_M_DEFAULT)},
     extra_ctes=_IVF_CUSHION_EXTRA, candidate_cte="cand_ids",
 )},
 ann AS (SELECT query_id, neighbor_id FROM final WHERE rank <= {K_DEFAULT}),
-hits AS (
-  SELECT gt.query_id, count(*) AS n_hit
-  FROM gt JOIN ann USING (query_id, neighbor_id) GROUP BY gt.query_id
-),
-per_q AS (
-  SELECT q2.query_id, CAST(coalesce(h.n_hit, 0) AS DOUBLE) / {K_DEFAULT} AS recall
-  FROM (SELECT DISTINCT query_id FROM gt) q2 LEFT JOIN hits h USING (query_id)
-)
-SELECT round(avg(recall), 6) AS recall_at_k, count(*) AS n_queries FROM per_q
+{duck_oracle.recall_tail("gt", K_DEFAULT)}
+{duck_oracle.RECALL_SELECT}
 """
 
 # apply the correctness-window rotation LAST, after every

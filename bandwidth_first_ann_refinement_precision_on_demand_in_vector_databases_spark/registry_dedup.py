@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .operators import dedup as D
+from .plans.duck_oracle import sql_cos, sql_dist2
 from .registry_text import SQL_TOKS, _sql_poly_hash
 from .sources.fixtures import load_table
 
@@ -336,8 +337,6 @@ def _sql_dedup_semantic(tau: float) -> str:
     from .registry_simsearch import (
         _IVF_KM_CTES,
         _IVF_KM_FINAL,
-        _sql_cos,
-        _sql_dist2,
     )
 
     n = D.CC_ITERS
@@ -350,14 +349,14 @@ assigned AS MATERIALIZED (
   SELECT vec_id, embedding, centroid_id AS cell FROM (
     SELECT e.vec_id, e.embedding, c.centroid_id,
       row_number() OVER (PARTITION BY e.vec_id
-        ORDER BY {_sql_dist2("e.embedding", "c.cvec")} ASC, c.centroid_id ASC) AS r
+        ORDER BY {sql_dist2("e.embedding", "c.cvec")} ASC, c.centroid_id ASC) AS r
     FROM embeddings e CROSS JOIN cents c
   ) WHERE r = 1
 ),
 dup AS MATERIALIZED (
   SELECT a.vec_id AS id_a, b.vec_id AS id_b
   FROM assigned a JOIN assigned b ON a.cell = b.cell AND a.vec_id < b.vec_id
-  WHERE round({_sql_cos("a.embedding", "b.embedding")}, 6) >= {tau}
+  WHERE round({sql_cos("a.embedding", "b.embedding")}, 6) >= {tau}
 ),
 -- MATERIALIZED: the unrolled label-propagation chain below references
 -- edges once per round PER LEVEL, and DuckDB's default CTE inlining

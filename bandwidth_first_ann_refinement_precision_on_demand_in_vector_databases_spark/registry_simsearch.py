@@ -1,8 +1,11 @@
-"""ANN similarity-search query suite (SURVEY §7-M5): IVF and
-hyperplane-LSH candidate generation with exact re-scoring, plus
-Recall@K of each against the brute-force oracle. The DuckDB twins
-replay the identical pipelines — same sampled centroids, same literal
-hyperplanes — so every query is hash-exact, not statistically close.
+"""ANN similarity-search building blocks (SURVEY §7-M5): the DuckDB
+candidate-CTE replays of the IVF, hyperplane-LSH, PQ/OPQ, graph-walk
+and SPANN families, plus the queries that are not plain top-K/recall
+rows (codes, codebooks, cell and graph statistics, index maintenance,
+ranking metrics). The twins replay the identical pipelines — same
+sampled centroids, same literal hyperplanes — so every query is
+hash-exact, not statistically close. The ``ann_*_{topk,recall}``
+queries over these families are generated by ``registry_ann``.
 """
 
 from __future__ import annotations
@@ -17,12 +20,17 @@ from .operators import simsearch as S
 from .operators import spann as SP
 from .operators.kmeans import kmeans_sql_ctes
 from .operators.topk import exact_topk_fixture_cached
-from .sources.fixtures import (
-    FIXTURE_EMBED_DIM,
-    QUERY_STRIDE,
-    load_table,
-    queries_view,
+from .plans.duck_oracle import (
+    RECALL_SELECT,
+    SQL_Q_CTE,
+    exact_cte,
+    recall_tail,
+    rerank_cte,
+    sql_cos,
+    sql_dist2,
+    sql_dot,
 )
+from .sources.fixtures import FIXTURE_EMBED_DIM, load_table, queries_view
 
 ANN_K = 20
 
@@ -30,48 +38,10 @@ ANN_K = 20
 #: operator layer derives subdim from the data (operators/pq.pq_subdim)
 _PQ_SUBDIM = FIXTURE_EMBED_DIM // P.PQ_M
 
-SQL_Q_CTE = (
-    f"SELECT vec_id AS query_id, embedding AS qe FROM embeddings "
-    f"WHERE vec_id % {QUERY_STRIDE} = 0"
-)
-
-
-def _sql_dot(a: str, b: str) -> str:
-    return (
-        f"list_sum(list_transform(list_zip({a}, {b}), "
-        f"p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))"
-    )
-
-
-def _sql_norm(a: str) -> str:
-    return f"sqrt(list_sum(list_transform({a}, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))"
-
-
-def _sql_cos(a: str, b: str) -> str:
-    return (
-        f"({_sql_dot(a, b)} / "
-        f"(greatest({_sql_norm(a)}, 1e-12) * greatest({_sql_norm(b)}, 1e-12)))"
-    )
-
-
-def _sql_dist2(a: str, b: str) -> str:
-    return (
-        f"list_sum(list_transform(list_zip({a}, {b}), "
-        f"p -> (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE)) * "
-        f"(CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE))))"
-    )
-
 
 # ---------------------------------------------------------------------------
 # IVF
 # ---------------------------------------------------------------------------
-
-def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = S.ivf_topk(
-        queries_view(spark, sf_dir), load_table(spark, sf_dir, "embeddings"), ANN_K
-    )
-    return out.select("query_id", "rank", "neighbor_id", F.round("score", 6).alias("score"))
-
 
 #: coarse-quantizer replay: same stride seeds, same unrolled Lloyd
 #: iterations as operators/kmeans.py (kmeans_sql_ctes); at the
@@ -80,8 +50,9 @@ def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: compose these pieces directly.
 _IVF_KM_CTES, _IVF_KM_FINAL = kmeans_sql_ctes(
     "ivfkm_pts", "ivfkm", S.IVF_STRIDE, iters=S.IVF_KMEANS_ITERS,
-    dist2_sql=_sql_dist2,
+    dist2_sql=sql_dist2,
 )
+
 
 def sql_ivf_body(
     emb: str = "embeddings",
@@ -99,7 +70,7 @@ def sql_ivf_body(
     a statement never contains two instances."""
     km_ctes, km_final = kmeans_sql_ctes(
         f"{km_prefix}_pts", km_prefix, S.IVF_STRIDE, iters=iters,
-        dist2_sql=_sql_dist2,
+        dist2_sql=sql_dist2,
     )
     return f"""
 {km_prefix}_pts AS (SELECT 0 AS grp, vec_id AS pid, embedding AS pvec FROM {emb}),
@@ -109,7 +80,7 @@ assigned AS (
   SELECT vec_id, embedding, centroid_id AS cell FROM (
     SELECT e.vec_id, e.embedding, c.centroid_id,
       row_number() OVER (PARTITION BY e.vec_id
-        ORDER BY {_sql_dist2("e.embedding", "c.cvec")} ASC, c.centroid_id ASC) AS r
+        ORDER BY {sql_dist2("e.embedding", "c.cvec")} ASC, c.centroid_id ASC) AS r
     FROM {emb} e CROSS JOIN cents c
   ) WHERE r = 1
 ),
@@ -117,12 +88,12 @@ probes AS (
   SELECT query_id, qe, centroid_id AS cell FROM (
     SELECT q.query_id, q.qe, c.centroid_id,
       row_number() OVER (PARTITION BY q.query_id
-        ORDER BY {_sql_dist2("q.qe", "c.cvec")} ASC, c.centroid_id ASC) AS r
+        ORDER BY {sql_dist2("q.qe", "c.cvec")} ASC, c.centroid_id ASC) AS r
     FROM {qsrc} AS q CROSS JOIN cents c
   ) WHERE r <= {S.IVF_NPROBE}
 ),
 ivf_cand AS (
-  SELECT p.query_id, a.vec_id AS neighbor_id, {_sql_cos("p.qe", "a.embedding")} AS score
+  SELECT p.query_id, a.vec_id AS neighbor_id, {sql_cos("p.qe", "a.embedding")} AS score
   FROM probes p JOIN assigned a ON a.cell = p.cell
 )
 """
@@ -135,66 +106,10 @@ q AS ({SQL_Q_CTE}),
 {SQL_IVF_BODY}
 """
 
-SQL_ANN_IVF_TOPK = f"""
-WITH {SQL_IVF_CTES}
-SELECT query_id, rank, neighbor_id, round(score, 6) AS score FROM (
-  SELECT query_id, neighbor_id, score,
-    CAST(row_number() OVER (PARTITION BY query_id ORDER BY score DESC, neighbor_id) AS INT) AS rank
-  FROM ivf_cand
-) WHERE rank <= {ANN_K}
-"""
-
-
-def q_ann_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    queries = queries_view(spark, sf_dir)
-    corpus = load_table(spark, sf_dir, "embeddings")
-    ann = S.ivf_topk(queries, corpus, ANN_K)
-    exact = exact_topk_fixture_cached(spark, sf_dir, ANN_K, "cosine")
-    return S.ann_recall(ann, exact, ANN_K)
-
-
-def _sql_recall(cand_cte: str, cand_name: str) -> str:
-    return f"""
-WITH {cand_cte},
-ann AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT query_id, neighbor_id,
-      row_number() OVER (PARTITION BY query_id ORDER BY score DESC, neighbor_id) AS rank
-    FROM {cand_name}
-  ) WHERE rank <= {ANN_K}
-),
-exact AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT q.query_id, e.vec_id AS neighbor_id,
-      row_number() OVER (PARTITION BY q.query_id
-        ORDER BY {_sql_cos("q.qe", "e.embedding")} DESC, e.vec_id) AS rank
-    FROM q CROSS JOIN embeddings e
-  ) WHERE rank <= {ANN_K}
-),
-hits AS (
-  SELECT exact.query_id, count(*) AS n_hit
-  FROM exact JOIN ann USING (query_id, neighbor_id) GROUP BY exact.query_id
-),
-per_q AS (
-  SELECT q2.query_id, CAST(coalesce(h.n_hit, 0) AS DOUBLE) / {ANN_K} AS recall
-  FROM (SELECT DISTINCT query_id FROM exact) q2 LEFT JOIN hits h USING (query_id)
-)
-SELECT round(avg(recall), 6) AS recall_at_k, count(*) AS n_queries FROM per_q
-"""
-
-
-SQL_ANN_IVF_RECALL = _sql_recall(SQL_IVF_CTES, "ivf_cand")
-
 
 # ---------------------------------------------------------------------------
 # Hyperplane LSH
 # ---------------------------------------------------------------------------
-
-def q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = S.lsh_topk(
-        queries_view(spark, sf_dir), load_table(spark, sf_dir, "embeddings"), ANN_K
-    )
-    return out.select("query_id", "rank", "neighbor_id", F.round("score", 6).alias("score"))
 
 
 def _sql_plane_lit(plane: tuple[float, ...]) -> str:
@@ -205,7 +120,7 @@ def _sql_band_key(vec: str, band: int) -> str:
     terms = []
     for j in range(S.LSH_ROWS):
         plane = S.lsh_planes(FIXTURE_EMBED_DIM)[band * S.LSH_ROWS + j]
-        d = _sql_dot(vec, _sql_plane_lit(plane))
+        d = sql_dot(vec, _sql_plane_lit(plane))
         terms.append(f"(CASE WHEN {d} >= 0 THEN {1 << j} ELSE 0 END)")
     return " + ".join(terms)
 
@@ -225,7 +140,7 @@ q AS ({SQL_Q_CTE}),
 qb AS ({_sql_bands("q", "query_id", "qe")}),
 cb AS ({_sql_bands("embeddings", "vec_id", "embedding")}),
 lsh_cand AS (
-  SELECT query_id, neighbor_id, {_sql_cos("qvec", "cvec")} AS score FROM (
+  SELECT query_id, neighbor_id, {sql_cos("qvec", "cvec")} AS score FROM (
     SELECT DISTINCT qb.id AS query_id, cb.id AS neighbor_id,
            qb.vec AS qvec, cb.vec AS cvec
     FROM qb JOIN cb ON qb.band = cb.band AND qb.bkey = cb.bkey
@@ -233,64 +148,24 @@ lsh_cand AS (
 )
 """
 
-SQL_ANN_LSH_TOPK = f"""
-WITH {SQL_LSH_CTES}
-SELECT query_id, rank, neighbor_id, round(score, 6) AS score FROM (
-  SELECT query_id, neighbor_id, score,
-    CAST(row_number() OVER (PARTITION BY query_id ORDER BY score DESC, neighbor_id) AS INT) AS rank
-  FROM lsh_cand
-) WHERE rank <= {ANN_K}
-"""
-
-
-def q_ann_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    queries = queries_view(spark, sf_dir)
-    corpus = load_table(spark, sf_dir, "embeddings")
-    ann = S.lsh_topk(queries, corpus, ANN_K)
-    exact = exact_topk_fixture_cached(spark, sf_dir, ANN_K, "cosine")
-    return S.ann_recall(ann, exact, ANN_K)
-
-
-SQL_ANN_LSH_RECALL = _sql_recall(SQL_LSH_CTES, "lsh_cand")
-
 
 # ---------------------------------------------------------------------------
 # Product quantization (operators/pq.py)
 # ---------------------------------------------------------------------------
+
 
 def q_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The PQ sketch in long scalar form (vec_id, m, code)."""
     return P.pq_codes(load_table(spark, sf_dir, "embeddings"))
 
 
-def q_ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = P.pq_topk(
-        queries_view(spark, sf_dir), load_table(spark, sf_dir, "embeddings"), ANN_K
-    )
-    return out.select("query_id", "rank", "neighbor_id", F.round("score", 6).alias("score"))
-
-
-def q_ann_pq_refined_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = P.pq_refined_topk(
-        queries_view(spark, sf_dir), load_table(spark, sf_dir, "embeddings"), ANN_K
-    )
-    return out.select("query_id", "rank", "neighbor_id", F.round("score", 6).alias("score"))
-
-
-def q_ann_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    queries = queries_view(spark, sf_dir)
-    corpus = load_table(spark, sf_dir, "embeddings")
-    ann = P.pq_topk(queries, corpus, ANN_K)
-    exact = exact_topk_fixture_cached(spark, sf_dir, ANN_K, "l2")
-    return S.ann_recall(ann, exact, ANN_K)
-
-
 #: codebook/codes/reconstruction — the SQL replay of operators/pq.py
 #: (same trained per-subspace k-means, same argmin tie-break, same
 #: m-ordered concatenation, same strict DOUBLE folds).
 _PQ_KM_CTES, _PQ_KM_FINAL = kmeans_sql_ctes(
-    "pqkm_pts", "pqkm", P.PQ_STRIDE, dist2_sql=_sql_dist2
+    "pqkm_pts", "pqkm", P.PQ_STRIDE, dist2_sql=sql_dist2
 )
+
 
 def sql_pq_body(emb: str = "embeddings", qsrc: str = "q") -> str:
     """The PQ pipeline CTE chain over a parameterized corpus CTE
@@ -316,7 +191,7 @@ pq_code AS (
   SELECT vec_id, m, cid AS code FROM (
     SELECT s.vec_id, s.m, c.cid,
       row_number() OVER (PARTITION BY s.vec_id, s.m
-        ORDER BY {_sql_dist2("s.subv", "c.cvec")} ASC, c.cid ASC) AS r
+        ORDER BY {sql_dist2("s.subv", "c.cvec")} ASC, c.cid ASC) AS r
     FROM pq_sub s JOIN pq_cb c USING (m)
   ) WHERE r = 1
 ),
@@ -327,7 +202,7 @@ pq_recon AS (
 ),
 pq_cand AS (
   SELECT q.query_id, r.vec_id AS neighbor_id,
-         {_sql_dist2("q.qe", "r.recon")} AS score
+         {sql_dist2("q.qe", "r.recon")} AS score
   FROM pq_recon r CROSS JOIN {qsrc} AS q
 )
 """
@@ -345,148 +220,28 @@ WITH {SQL_PQ_CTES}
 SELECT vec_id, CAST(m AS INT) AS m, code FROM pq_code
 """
 
-SQL_ANN_PQ_TOPK = f"""
-WITH {SQL_PQ_CTES}
-SELECT query_id, rank, neighbor_id, round(score, 6) AS score FROM (
-  SELECT query_id, neighbor_id, score,
-    CAST(row_number() OVER (PARTITION BY query_id ORDER BY score ASC, neighbor_id) AS INT) AS rank
-  FROM pq_cand
-) WHERE rank <= {ANN_K}
-"""
-
-SQL_ANN_PQ_REFINED_TOPK = f"""
-WITH {SQL_PQ_CTES},
-refine_cand AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT query_id, neighbor_id,
-      row_number() OVER (PARTITION BY query_id ORDER BY score ASC, neighbor_id) AS rank
-    FROM pq_cand
-  ) WHERE rank <= {P.PQ_REFINE_R * ANN_K}
-),
-refine_exact AS (
-  SELECT c.query_id, c.neighbor_id, {_sql_dist2("q.qe", "e.embedding")} AS score
-  FROM refine_cand c
-  JOIN embeddings e ON e.vec_id = c.neighbor_id
-  JOIN q ON q.query_id = c.query_id
-)
-SELECT query_id, rank, neighbor_id, round(score, 6) AS score FROM (
-  SELECT query_id, neighbor_id, score,
-    CAST(row_number() OVER (PARTITION BY query_id ORDER BY score ASC, neighbor_id) AS INT) AS rank
-  FROM refine_exact
-) WHERE rank <= {ANN_K}
-"""
-
-SQL_ANN_PQ_RECALL = f"""
-WITH {SQL_PQ_CTES},
-ann AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT query_id, neighbor_id,
-      row_number() OVER (PARTITION BY query_id ORDER BY score ASC, neighbor_id) AS rank
-    FROM pq_cand
-  ) WHERE rank <= {ANN_K}
-),
-exact AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT q.query_id, e.vec_id AS neighbor_id,
-      row_number() OVER (PARTITION BY q.query_id
-        ORDER BY {_sql_dist2("q.qe", "e.embedding")} ASC, e.vec_id) AS rank
-    FROM q CROSS JOIN embeddings e
-  ) WHERE rank <= {ANN_K}
-),
-hits AS (
-  SELECT exact.query_id, count(*) AS n_hit
-  FROM exact JOIN ann USING (query_id, neighbor_id) GROUP BY exact.query_id
-),
-per_q AS (
-  SELECT q2.query_id, CAST(coalesce(h.n_hit, 0) AS DOUBLE) / {ANN_K} AS recall
-  FROM (SELECT DISTINCT query_id FROM exact) q2 LEFT JOIN hits h USING (query_id)
-)
-SELECT round(avg(recall), 6) AS recall_at_k, count(*) AS n_queries FROM per_q
-"""
-
 
 # ---------------------------------------------------------------------------
 # IVF + PQ (the production composition: cell pruning × code pricing ×
 # exact refinement — operators/pq.ivfpq_topk)
 # ---------------------------------------------------------------------------
 
-def q_ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = P.ivfpq_topk(
-        queries_view(spark, sf_dir), load_table(spark, sf_dir, "embeddings"), ANN_K
-    )
-    return out.select("query_id", "rank", "neighbor_id", F.round("score", 6).alias("score"))
-
-
-def q_ann_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    queries = queries_view(spark, sf_dir)
-    corpus = load_table(spark, sf_dir, "embeddings")
-    ann = P.ivfpq_topk(queries, corpus, ANN_K)
-    exact = exact_topk_fixture_cached(spark, sf_dir, ANN_K, "l2")
-    return S.ann_recall(ann, exact, ANN_K)
-
+#: ADC over the probed cells: consumes the ``probes``/``assigned`` CTEs
+#: of ``sql_ivf_body`` and the ``pq_recon`` of ``sql_pq_body``
+#: instantiated over the SAME corpus/query pair
+_SQL_IVFPQ_ADC = f"""ivfpq_adc AS (
+  SELECT p.query_id, a.vec_id AS neighbor_id,
+         {sql_dist2("p.qe", "r.recon")} AS score
+  FROM probes p
+  JOIN assigned a ON a.cell = p.cell
+  JOIN pq_recon r ON r.vec_id = a.vec_id
+)"""
 
 SQL_IVFPQ_CTES = f"""
 q AS ({SQL_Q_CTE}),
 {SQL_IVF_BODY},
 {SQL_PQ_BODY},
-ivfpq_adc AS (
-  SELECT p.query_id, a.vec_id AS neighbor_id,
-         {_sql_dist2("p.qe", "r.recon")} AS score
-  FROM probes p
-  JOIN assigned a ON a.cell = p.cell
-  JOIN pq_recon r ON r.vec_id = a.vec_id
-),
-ivfpq_ids AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT query_id, neighbor_id,
-      row_number() OVER (PARTITION BY query_id ORDER BY score ASC, neighbor_id) AS rank
-    FROM ivfpq_adc
-  ) WHERE rank <= {P.PQ_REFINE_R * ANN_K}
-),
-ivfpq_cand AS (
-  SELECT c.query_id, c.neighbor_id, {_sql_dist2("q.qe", "e.embedding")} AS score
-  FROM ivfpq_ids c
-  JOIN embeddings e ON e.vec_id = c.neighbor_id
-  JOIN q ON q.query_id = c.query_id
-)
-"""
-
-SQL_ANN_IVFPQ_TOPK = f"""
-WITH {SQL_IVFPQ_CTES}
-SELECT query_id, rank, neighbor_id, round(score, 6) AS score FROM (
-  SELECT query_id, neighbor_id, score,
-    CAST(row_number() OVER (PARTITION BY query_id ORDER BY score ASC, neighbor_id) AS INT) AS rank
-  FROM ivfpq_cand
-) WHERE rank <= {ANN_K}
-"""
-
-SQL_ANN_IVFPQ_RECALL = f"""
-WITH {SQL_IVFPQ_CTES},
-ann AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT query_id, neighbor_id,
-      row_number() OVER (PARTITION BY query_id ORDER BY score ASC, neighbor_id) AS rank
-    FROM ivfpq_cand
-  ) WHERE rank <= {ANN_K}
-),
-exact AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT q.query_id, e.vec_id AS neighbor_id,
-      row_number() OVER (PARTITION BY q.query_id
-        ORDER BY {_sql_dist2("q.qe", "e.embedding")} ASC, e.vec_id) AS rank
-    FROM q CROSS JOIN embeddings e
-  ) WHERE rank <= {ANN_K}
-),
-hits AS (
-  SELECT exact.query_id, count(*) AS n_hit
-  FROM exact JOIN ann USING (query_id, neighbor_id) GROUP BY exact.query_id
-),
-per_q AS (
-  SELECT q2.query_id, CAST(coalesce(h.n_hit, 0) AS DOUBLE) / {ANN_K} AS recall
-  FROM (SELECT DISTINCT query_id FROM exact) q2 LEFT JOIN hits h USING (query_id)
-)
-SELECT round(avg(recall), 6) AS recall_at_k, count(*) AS n_queries FROM per_q
-"""
+{_SQL_IVFPQ_ADC}"""
 
 
 def q_pq_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -570,7 +325,7 @@ cand AS (
     ON a.band = b.band AND a.bkey = b.bkey AND a.id != b.id
 ),
 scored AS (
-  SELECT node_id, neighbor_id, {_sql_cos("qvec", "cvec")} AS score FROM cand
+  SELECT node_id, neighbor_id, {sql_cos("qvec", "cvec")} AS score FROM cand
 )
 SELECT node_id, rank, neighbor_id, round(score, 6) AS score FROM (
   SELECT node_id, neighbor_id, score,
@@ -606,7 +361,7 @@ ann AS (
   SELECT node_id AS query_id, neighbor_id FROM (
     SELECT node_id, neighbor_id,
       row_number() OVER (PARTITION BY node_id
-        ORDER BY {_sql_cos("qvec", "cvec")} DESC, neighbor_id) AS rank
+        ORDER BY {sql_cos("qvec", "cvec")} DESC, neighbor_id) AS rank
     FROM cand
   ) WHERE rank <= {KNN_GRAPH_K}
 ),
@@ -614,33 +369,17 @@ exact AS (
   SELECT query_id, neighbor_id FROM (
     SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
       row_number() OVER (PARTITION BY a.vec_id
-        ORDER BY {_sql_cos("a.embedding", "b.embedding")} DESC, b.vec_id) AS rank
+        ORDER BY {sql_cos("a.embedding", "b.embedding")} DESC, b.vec_id) AS rank
     FROM embeddings a JOIN embeddings b ON a.vec_id != b.vec_id
   ) WHERE rank <= {KNN_GRAPH_K}
 ),
-hits AS (
-  SELECT exact.query_id, count(*) AS n_hit
-  FROM exact JOIN ann USING (query_id, neighbor_id) GROUP BY exact.query_id
-),
-per_q AS (
-  SELECT q2.query_id, CAST(coalesce(h.n_hit, 0) AS DOUBLE) / {KNN_GRAPH_K} AS recall
-  FROM (SELECT DISTINCT query_id FROM exact) q2 LEFT JOIN hits h USING (query_id)
-)
-SELECT round(avg(recall), 6) AS recall_at_k, count(*) AS n_queries FROM per_q
+{recall_tail("exact", KNN_GRAPH_K)}
+{RECALL_SELECT}
 """
 
 
 SIMSEARCH_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "ann_ivf_topk": q_ann_ivf_topk,
-    "ann_ivf_recall": q_ann_ivf_recall,
-    "ann_lsh_topk": q_ann_lsh_topk,
-    "ann_lsh_recall": q_ann_lsh_recall,
     "pq_codes": q_pq_codes,
-    "ann_pq_topk": q_ann_pq_topk,
-    "ann_pq_refined_topk": q_ann_pq_refined_topk,
-    "ann_pq_recall": q_ann_pq_recall,
-    "ann_ivfpq_topk": q_ann_ivfpq_topk,
-    "ann_ivfpq_recall": q_ann_ivfpq_recall,
     "pq_codebook": q_pq_codebook,
     "ivf_cell_sizes": q_ivf_cell_sizes,
     "ann_knn_graph": q_ann_knn_graph,
@@ -648,16 +387,7 @@ SIMSEARCH_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
 }
 
 SIMSEARCH_ORACLES: dict[str, str] = {
-    "ann_ivf_topk": SQL_ANN_IVF_TOPK,
-    "ann_ivf_recall": SQL_ANN_IVF_RECALL,
-    "ann_lsh_topk": SQL_ANN_LSH_TOPK,
-    "ann_lsh_recall": SQL_ANN_LSH_RECALL,
     "pq_codes": SQL_PQ_CODES,
-    "ann_pq_topk": SQL_ANN_PQ_TOPK,
-    "ann_pq_refined_topk": SQL_ANN_PQ_REFINED_TOPK,
-    "ann_pq_recall": SQL_ANN_PQ_RECALL,
-    "ann_ivfpq_topk": SQL_ANN_IVFPQ_TOPK,
-    "ann_ivfpq_recall": SQL_ANN_IVFPQ_RECALL,
     "pq_codebook": SQL_PQ_CODEBOOK,
     "ivf_cell_sizes": SQL_IVF_CELL_SIZES,
     "ann_knn_graph": SQL_ANN_KNN_GRAPH,
@@ -677,22 +407,6 @@ SIMSEARCH_ORACLES: dict[str, str] = {
 #: at 306 visited/query. One constant, shared with the walk
 #: operators and every oracle (operators/simsearch.GRAPH_DEGREE).
 GRAPH_BEAM_K = S.GRAPH_DEGREE
-
-
-def q_ann_graph_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Beam search over the symmetrized approximate KNN graph from
-    fixed entry points — the graph-index query shape (NSW/HNSW
-    family), unrolled declaratively. The oracle replays the graph
-    construction, the entry scoring, and every expansion round."""
-    out = S.graph_beam_search(
-        queries_view(spark, sf_dir),
-        load_table(spark, sf_dir, "embeddings"),
-        ANN_K,
-        graph_k=GRAPH_BEAM_K,
-    )
-    return out.select(
-        "query_id", "rank", "neighbor_id", F.round("score", 6).alias("score")
-    )
 
 
 def _sql_graph_beam_ctes(
@@ -721,7 +435,7 @@ def _sql_graph_beam_ctes(
         *pre_ctes,
         f"cb AS ({_sql_bands('embeddings', 'vec_id', 'embedding')})",
         f"""gscored AS (
-  SELECT node_id, neighbor_id, {_sql_cos("qvec", "cvec")} AS score FROM (
+  SELECT node_id, neighbor_id, {sql_cos("qvec", "cvec")} AS score FROM (
     SELECT DISTINCT a.id AS node_id, b.id AS neighbor_id,
            a.vec AS qvec, b.vec AS cvec
     FROM cb a JOIN cb b
@@ -746,7 +460,7 @@ def _sql_graph_beam_ctes(
             c0_ctes
             or (
                 f"""c0 AS MATERIALIZED (
-  SELECT q.query_id, s.vec_id, {_sql_cos("q.qe", "s.embedding")} AS score
+  SELECT q.query_id, s.vec_id, {sql_cos("q.qe", "s.embedding")} AS score
   FROM q CROSS JOIN
     (SELECT vec_id, embedding FROM embeddings
      WHERE vec_id % {S.BEAM_ENTRY_STRIDE} = 0) s
@@ -769,7 +483,7 @@ def _sql_graph_beam_ctes(
   FROM f{i} f JOIN {edges_name} e ON e.src = f.vec_id
 )""")
         parts.append(f"""s{i} AS (
-  SELECT n.query_id, n.vec_id, {_sql_cos("q.qe", "c.embedding")} AS score
+  SELECT n.query_id, n.vec_id, {sql_cos("q.qe", "c.embedding")} AS score
   FROM n{i} n
   JOIN embeddings c ON c.vec_id = n.vec_id
   JOIN q ON q.query_id = n.query_id
@@ -787,32 +501,6 @@ def _sql_graph_beam_ctes(
 
 
 _GRAPH_BEAM_CTES, _GRAPH_BEAM_FINAL = _sql_graph_beam_ctes()
-
-SQL_ANN_GRAPH_TOPK = f"""
-WITH {_GRAPH_BEAM_CTES}
-SELECT query_id, rank, neighbor_id, round(score, 6) AS score FROM (
-  SELECT query_id, neighbor_id, score,
-    CAST(row_number() OVER (PARTITION BY query_id
-      ORDER BY score DESC, neighbor_id) AS INT) AS rank
-  FROM {_GRAPH_BEAM_FINAL}
-) WHERE rank <= {ANN_K}
-"""
-
-
-def q_ann_graph_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    queries = queries_view(spark, sf_dir)
-    corpus = load_table(spark, sf_dir, "embeddings")
-    ann = S.graph_beam_search(queries, corpus, ANN_K, graph_k=GRAPH_BEAM_K)
-    exact = exact_topk_fixture_cached(spark, sf_dir, ANN_K, "cosine")
-    return S.ann_recall(ann, exact, ANN_K)
-
-
-SQL_ANN_GRAPH_RECALL = _sql_recall(_GRAPH_BEAM_CTES, _GRAPH_BEAM_FINAL)
-
-SIMSEARCH_QUERIES["ann_graph_topk"] = q_ann_graph_topk
-SIMSEARCH_QUERIES["ann_graph_recall"] = q_ann_graph_recall
-SIMSEARCH_ORACLES["ann_graph_topk"] = SQL_ANN_GRAPH_TOPK
-SIMSEARCH_ORACLES["ann_graph_recall"] = SQL_ANN_GRAPH_RECALL
 
 
 def q_ann_graph_delta_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -859,105 +547,6 @@ SIMSEARCH_QUERIES["ann_graph_delta_edges"] = q_ann_graph_delta_edges
 SIMSEARCH_ORACLES["ann_graph_delta_edges"] = SQL_ANN_GRAPH_DELTA_EDGES
 
 
-def q_ann_graph_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Serve-path twin of ``ann_graph_topk``: the symmetrized KNN
-    edge set is WRITTEN once per (session, fixture dir) as a parquet
-    index artifact (``sources/layout.write_graph_index``) and the
-    query plan walks the STORED (src, dst) table — the offline-build/
-    online-serve split of a production graph-ANN deployment. Results
-    are identical to the in-session build, so the oracle is shared;
-    ``tests/test_layout.py`` asserts the serve plan reads only the
-    two id columns and contains no band construction."""
-    import tempfile
-
-    from .session import session_cache
-    from .sources.layout import read_graph_index, write_graph_index
-
-    corpus = load_table(spark, sf_dir, "embeddings")
-    cache = session_cache(spark, "graph_index_path")
-    if sf_dir not in cache:
-        path = tempfile.mkdtemp(prefix="bfann-graph-index-")
-        write_graph_index(
-            corpus, path, GRAPH_BEAM_K, cache_key=f"fixture:{sf_dir}"
-        )
-        cache[sf_dir] = path
-    edges = read_graph_index(spark, cache[sf_dir])
-    out = S.graph_topk_from_index(
-        queries_view(spark, sf_dir), corpus, edges, ANN_K
-    )
-    return out.select(
-        "query_id", "rank", "neighbor_id", F.round("score", 6).alias("score")
-    )
-
-
-SIMSEARCH_QUERIES["ann_graph_index_topk"] = q_ann_graph_index_topk
-#: same result as the in-session build by construction
-SIMSEARCH_ORACLES["ann_graph_index_topk"] = SQL_ANN_GRAPH_TOPK
-
-
-def _index_store_path(spark: SparkSession, sf_dir: str, kind: str, build) -> str:
-    """Session-memoized offline index build: run ``build(path)`` once
-    per (session, fixture dir, kind) into a temp dir, return the path."""
-    import tempfile
-
-    from .session import session_cache
-
-    cache = session_cache(spark, f"{kind}_store_path")
-    if sf_dir not in cache:
-        path = tempfile.mkdtemp(prefix=f"bfann-{kind}-")
-        build(path)
-        cache[sf_dir] = path
-    return cache[sf_dir]
-
-
-def q_ann_pq_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Serve-path twin of ``ann_pq_topk``: the trained codebook and
-    the 8-byte code table are WRITTEN once as parquet index artifacts
-    (``sources/layout.write_pq_index``) and the ADC plan reads ONLY
-    the stored tables — no corpus column, no retraining (ReadSchema
-    asserted in ``tests/test_layout.py``). Shares the in-session
-    oracle by result identity."""
-    from .operators.pq import pq_topk_from_index
-    from .sources.layout import read_pq_index, write_pq_index
-
-    corpus = load_table(spark, sf_dir, "embeddings")
-    path = _index_store_path(
-        spark, sf_dir, "pq-index", lambda p: write_pq_index(corpus, p)
-    )
-    cb, codes = read_pq_index(spark, path)
-    out = pq_topk_from_index(queries_view(spark, sf_dir), cb, codes, ANN_K)
-    return out.select(
-        "query_id", "rank", "neighbor_id", F.round("score", 6).alias("score")
-    )
-
-
-def q_ann_ivf_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Serve-path twin of ``ann_ivf_topk``: the assigned corpus is
-    WRITTEN once partitioned by cell (``layout.write_cell_partitioned``)
-    and the query's probe list drives a partition-pruned scan — only
-    the probed directories are opened (`PartitionFilters`), which is
-    the IVF bandwidth win made physical. Shares the in-session oracle
-    by result identity."""
-    from .sources.layout import ivf_topk_from_store, write_cell_partitioned
-
-    corpus = load_table(spark, sf_dir, "embeddings")
-    path = _index_store_path(
-        spark, sf_dir, "ivf-cells", lambda p: write_cell_partitioned(corpus, p)
-    )
-    cents = S.ivf_centroids(corpus)
-    out = ivf_topk_from_store(spark, path, queries_view(spark, sf_dir), cents, ANN_K)
-    return out.select(
-        "query_id", "rank", "neighbor_id", F.round("score", 6).alias("score")
-    )
-
-
-SIMSEARCH_QUERIES["ann_pq_index_topk"] = q_ann_pq_index_topk
-SIMSEARCH_QUERIES["ann_ivf_index_topk"] = q_ann_ivf_index_topk
-#: identical results to the in-session builds by construction
-SIMSEARCH_ORACLES["ann_pq_index_topk"] = SQL_ANN_PQ_TOPK
-SIMSEARCH_ORACLES["ann_ivf_index_topk"] = SQL_ANN_IVF_TOPK
-
-
 #: ingest increment for the continuous-maintenance queries: every
 #: 10th vector (residue 3) plays the newly-arriving batch
 INGEST_MOD = 10
@@ -989,7 +578,7 @@ b AS (SELECT vec_id, embedding FROM embeddings
 SELECT vec_id, cell FROM (
   SELECT b.vec_id, c.centroid_id AS cell,
     row_number() OVER (PARTITION BY b.vec_id
-      ORDER BY {_sql_dist2("b.embedding", "c.cvec")} ASC, c.centroid_id ASC) AS r
+      ORDER BY {sql_dist2("b.embedding", "c.cvec")} ASC, c.centroid_id ASC) AS r
   FROM b CROSS JOIN cents c
 ) WHERE r = 1
 """
@@ -1033,14 +622,7 @@ ann AS (
     FROM {cand_name}
   ) WHERE rank <= {ANN_K}
 ),
-exact AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT q.query_id, e.vec_id AS neighbor_id,
-      row_number() OVER (PARTITION BY q.query_id
-        ORDER BY {_sql_cos("q.qe", "e.embedding")} DESC, e.vec_id) AS rank
-    FROM q CROSS JOIN embeddings e
-  ) WHERE rank <= {ANN_K}
-),
+{exact_cte("cosine", ANN_K)},
 rel AS (
   SELECT ann.query_id, ann.rank FROM ann JOIN exact USING (query_id, neighbor_id)
 ),
@@ -1099,38 +681,6 @@ SIMSEARCH_ORACLES["ann_lsh_ranking_metrics"] = _sql_ranking_metrics(
 # and the public fix is an orthogonal transform before subspace split)
 # ---------------------------------------------------------------------------
 
-def q_ann_opq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators import opq as O
-
-    out = O.opq_topk(
-        queries_view(spark, sf_dir), load_table(spark, sf_dir, "embeddings"), ANN_K
-    )
-    return out.select(
-        "query_id", "rank", "neighbor_id", F.round("score", 6).alias("score")
-    )
-
-
-def q_ann_opq_refined_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators import opq as O
-
-    out = O.opq_refined_topk(
-        queries_view(spark, sf_dir), load_table(spark, sf_dir, "embeddings"), ANN_K
-    )
-    return out.select(
-        "query_id", "rank", "neighbor_id", F.round("score", 6).alias("score")
-    )
-
-
-def q_ann_opq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators import opq as O
-
-    queries = queries_view(spark, sf_dir)
-    corpus = load_table(spark, sf_dir, "embeddings")
-    ann = O.opq_topk(queries, corpus, ANN_K)
-    exact = exact_topk_fixture_cached(spark, sf_dir, ANN_K, "l2")
-    return S.ann_recall(ann, exact, ANN_K)
-
-
 #: The permutation replay: integer-exact variance keys (n·Σq² − (Σq)²
 #: over q = floor(x·OPQ_SCALE)), rank DESC with dim tie-break,
 #: closed-form snake dealing. The engines only SUM in BIGINT; the key
@@ -1183,94 +733,12 @@ q AS ({SQL_Q_CTE}),
 {sql_pq_body(emb="opq_emb", qsrc="opq_q")}
 """
 
-SQL_ANN_OPQ_TOPK = f"""
-WITH {SQL_OPQ_CTES}
-SELECT query_id, rank, neighbor_id, round(score, 6) AS score FROM (
-  SELECT query_id, neighbor_id, score,
-    CAST(row_number() OVER (PARTITION BY query_id ORDER BY score ASC, neighbor_id) AS INT) AS rank
-  FROM pq_cand
-) WHERE rank <= {ANN_K}
-"""
-
-SQL_ANN_OPQ_REFINED_TOPK = f"""
-WITH {SQL_OPQ_CTES},
-refine_cand AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT query_id, neighbor_id,
-      row_number() OVER (PARTITION BY query_id ORDER BY score ASC, neighbor_id) AS rank
-    FROM pq_cand
-  ) WHERE rank <= {P.PQ_REFINE_R * ANN_K}
-),
-refine_exact AS (
-  SELECT c.query_id, c.neighbor_id, {_sql_dist2("q.qe", "e.embedding")} AS score
-  FROM refine_cand c
-  JOIN embeddings e ON e.vec_id = c.neighbor_id
-  JOIN q ON q.query_id = c.query_id
-)
-SELECT query_id, rank, neighbor_id, round(score, 6) AS score FROM (
-  SELECT query_id, neighbor_id, score,
-    CAST(row_number() OVER (PARTITION BY query_id ORDER BY score ASC, neighbor_id) AS INT) AS rank
-  FROM refine_exact
-) WHERE rank <= {ANN_K}
-"""
-
-SQL_ANN_OPQ_RECALL = f"""
-WITH {SQL_OPQ_CTES},
-ann AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT query_id, neighbor_id,
-      row_number() OVER (PARTITION BY query_id ORDER BY score ASC, neighbor_id) AS rank
-    FROM pq_cand
-  ) WHERE rank <= {ANN_K}
-),
-exact AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT q.query_id, e.vec_id AS neighbor_id,
-      row_number() OVER (PARTITION BY q.query_id
-        ORDER BY {_sql_dist2("q.qe", "e.embedding")} ASC, e.vec_id) AS rank
-    FROM q CROSS JOIN embeddings e
-  ) WHERE rank <= {ANN_K}
-),
-hits AS (
-  SELECT exact.query_id, count(*) AS n_hit
-  FROM exact JOIN ann USING (query_id, neighbor_id) GROUP BY exact.query_id
-),
-per_q AS (
-  SELECT q2.query_id, CAST(coalesce(h.n_hit, 0) AS DOUBLE) / {ANN_K} AS recall
-  FROM (SELECT DISTINCT query_id FROM exact) q2 LEFT JOIN hits h USING (query_id)
-)
-SELECT round(avg(recall), 6) AS recall_at_k, count(*) AS n_queries FROM per_q
-"""
-
-SIMSEARCH_QUERIES["ann_opq_topk"] = q_ann_opq_topk
-SIMSEARCH_ORACLES["ann_opq_topk"] = SQL_ANN_OPQ_TOPK
-SIMSEARCH_QUERIES["ann_opq_refined_topk"] = q_ann_opq_refined_topk
-SIMSEARCH_ORACLES["ann_opq_refined_topk"] = SQL_ANN_OPQ_REFINED_TOPK
-SIMSEARCH_QUERIES["ann_opq_recall"] = q_ann_opq_recall
-SIMSEARCH_ORACLES["ann_opq_recall"] = SQL_ANN_OPQ_RECALL
-
 
 # ---------------------------------------------------------------------------
 # Multi-probe LSH (operators/simsearch.lsh_multiprobe_topk; VERDICT r07
 # #3 — probe the T nearest buckets by flipped-bit margin: the standard
 # recall lever that costs no extra stored tables)
 # ---------------------------------------------------------------------------
-
-def q_ann_lsh_multiprobe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = S.lsh_multiprobe_topk(
-        queries_view(spark, sf_dir), load_table(spark, sf_dir, "embeddings"), ANN_K
-    )
-    return out.select(
-        "query_id", "rank", "neighbor_id", F.round("score", 6).alias("score")
-    )
-
-
-def q_ann_lsh_multiprobe_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    queries = queries_view(spark, sf_dir)
-    corpus = load_table(spark, sf_dir, "embeddings")
-    ann = S.lsh_multiprobe_topk(queries, corpus, ANN_K)
-    exact = exact_topk_fixture_cached(spark, sf_dir, ANN_K, "cosine")
-    return S.ann_recall(ann, exact, ANN_K)
 
 
 def _sql_band_dots(src: str, id_expr: str, vec: str) -> str:
@@ -1280,7 +748,7 @@ def _sql_band_dots(src: str, id_expr: str, vec: str) -> str:
     for band in range(S.LSH_BANDS):
         for j in range(S.LSH_ROWS):
             plane = S.lsh_planes(FIXTURE_EMBED_DIM)[band * S.LSH_ROWS + j]
-            d = _sql_dot(vec, _sql_plane_lit(plane))
+            d = sql_dot(vec, _sql_plane_lit(plane))
             rows.append(
                 f"SELECT {id_expr} AS id, {vec} AS vec, {band} AS band, "
                 f"{j} AS j, {d} AS dot FROM {src}"
@@ -1307,29 +775,13 @@ qmb AS (
   FROM q_flip f JOIN qb ON qb.id = f.id AND qb.band = f.band
 ),
 lsh_mp_cand AS (
-  SELECT query_id, neighbor_id, {_sql_cos("qvec", "cvec")} AS score FROM (
+  SELECT query_id, neighbor_id, {sql_cos("qvec", "cvec")} AS score FROM (
     SELECT DISTINCT qmb.id AS query_id, cb.id AS neighbor_id,
            qmb.vec AS qvec, cb.vec AS cvec
     FROM qmb JOIN cb ON qmb.band = cb.band AND qmb.bkey = cb.bkey
   )
 )
 """
-
-SQL_ANN_LSH_MP_TOPK = f"""
-WITH {SQL_LSH_MP_CTES}
-SELECT query_id, rank, neighbor_id, round(score, 6) AS score FROM (
-  SELECT query_id, neighbor_id, score,
-    CAST(row_number() OVER (PARTITION BY query_id ORDER BY score DESC, neighbor_id) AS INT) AS rank
-  FROM lsh_mp_cand
-) WHERE rank <= {ANN_K}
-"""
-
-SIMSEARCH_QUERIES["ann_lsh_multiprobe_topk"] = q_ann_lsh_multiprobe_topk
-SIMSEARCH_ORACLES["ann_lsh_multiprobe_topk"] = SQL_ANN_LSH_MP_TOPK
-SIMSEARCH_QUERIES["ann_lsh_multiprobe_recall"] = q_ann_lsh_multiprobe_recall
-SIMSEARCH_ORACLES["ann_lsh_multiprobe_recall"] = _sql_recall(
-    SQL_LSH_MP_CTES, "lsh_mp_cand"
-)
 
 
 # ---------------------------------------------------------------------------
@@ -1338,37 +790,17 @@ SIMSEARCH_ORACLES["ann_lsh_multiprobe_recall"] = _sql_recall(
 # IVF cells' medoids instead of blind stride seeds)
 # ---------------------------------------------------------------------------
 
-def q_ann_graph_centroid_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = S.graph_centroid_topk(
-        queries_view(spark, sf_dir),
-        load_table(spark, sf_dir, "embeddings"),
-        ANN_K,
-        graph_k=GRAPH_BEAM_K,
-    )
-    return out.select(
-        "query_id", "rank", "neighbor_id", F.round("score", 6).alias("score")
-    )
-
-
-def q_ann_graph_centroid_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    queries = queries_view(spark, sf_dir)
-    corpus = load_table(spark, sf_dir, "embeddings")
-    ann = S.graph_centroid_topk(queries, corpus, ANN_K, graph_k=GRAPH_BEAM_K)
-    exact = exact_topk_fixture_cached(spark, sf_dir, ANN_K, "cosine")
-    return S.ann_recall(ann, exact, ANN_K)
-
-
 _GRAPH_CENTROID_C0 = (
     f"""med AS (
   SELECT cell, vec_id, embedding FROM (
     SELECT a.cell, a.vec_id, a.embedding,
       row_number() OVER (PARTITION BY a.cell
-        ORDER BY {_sql_dist2("a.embedding", "c.cvec")} ASC, a.vec_id ASC) AS r
+        ORDER BY {sql_dist2("a.embedding", "c.cvec")} ASC, a.vec_id ASC) AS r
     FROM assigned a JOIN cents c ON c.centroid_id = a.cell
   ) WHERE r <= {S.BEAM_ENTRY_PER_CELL}
 )""",
     f"""c0 AS MATERIALIZED (
-  SELECT p.query_id, m.vec_id, {_sql_cos("p.qe", "m.embedding")} AS score
+  SELECT p.query_id, m.vec_id, {sql_cos("p.qe", "m.embedding")} AS score
   FROM probes p JOIN med m ON m.cell = p.cell
 )""",
 )
@@ -1380,23 +812,6 @@ _GRAPH_CENT_CTES, _GRAPH_CENT_FINAL = _sql_graph_beam_ctes(
     pre_ctes=(SQL_IVF_BODY,), c0_ctes=_GRAPH_CENTROID_C0
 )
 
-SQL_ANN_GRAPH_CENTROID_TOPK = f"""
-WITH {_GRAPH_CENT_CTES}
-SELECT query_id, rank, neighbor_id, round(score, 6) AS score FROM (
-  SELECT query_id, neighbor_id, score,
-    CAST(row_number() OVER (PARTITION BY query_id
-      ORDER BY score DESC, neighbor_id) AS INT) AS rank
-  FROM {_GRAPH_CENT_FINAL}
-) WHERE rank <= {ANN_K}
-"""
-
-SIMSEARCH_QUERIES["ann_graph_centroid_topk"] = q_ann_graph_centroid_topk
-SIMSEARCH_ORACLES["ann_graph_centroid_topk"] = SQL_ANN_GRAPH_CENTROID_TOPK
-SIMSEARCH_QUERIES["ann_graph_centroid_recall"] = q_ann_graph_centroid_recall
-SIMSEARCH_ORACLES["ann_graph_centroid_recall"] = _sql_recall(
-    _GRAPH_CENT_CTES, _GRAPH_CENT_FINAL
-)
-
 
 # ---------------------------------------------------------------------------
 # IVF-OPQ: the production composition behind the trained transform
@@ -1404,105 +819,13 @@ SIMSEARCH_ORACLES["ann_graph_centroid_recall"] = _sql_recall(
 # codes change — balanced subspace energy)
 # ---------------------------------------------------------------------------
 
-def q_ann_ivfopq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators import opq as O
-
-    out = O.ivfopq_topk(
-        queries_view(spark, sf_dir), load_table(spark, sf_dir, "embeddings"), ANN_K
-    )
-    return out.select(
-        "query_id", "rank", "neighbor_id", F.round("score", 6).alias("score")
-    )
-
-
-def q_ann_ivfopq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators import opq as O
-
-    queries = queries_view(spark, sf_dir)
-    corpus = load_table(spark, sf_dir, "embeddings")
-    ann = O.ivfopq_topk(queries, corpus, ANN_K)
-    exact = exact_topk_fixture_cached(spark, sf_dir, ANN_K, "l2")
-    return S.ann_recall(ann, exact, ANN_K)
-
-
-def sql_ivfpq_cand(emb: str = "embeddings", qsrc: str = "q") -> str:
-    """The IVF-PQ candidate tail (ADC over probed cells → r·K ids →
-    exact re-rank) over parameterized corpus/query CTEs — consumes the
-    ``probes``/``assigned`` CTEs of ``sql_ivf_body`` and the
-    ``pq_recon`` of ``sql_pq_body`` instantiated over the SAME pair."""
-    return f"""
-ivfpq_adc AS (
-  SELECT p.query_id, a.vec_id AS neighbor_id,
-         {_sql_dist2("p.qe", "r.recon")} AS score
-  FROM probes p
-  JOIN assigned a ON a.cell = p.cell
-  JOIN pq_recon r ON r.vec_id = a.vec_id
-),
-ivfpq_ids AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT query_id, neighbor_id,
-      row_number() OVER (PARTITION BY query_id ORDER BY score ASC, neighbor_id) AS rank
-    FROM ivfpq_adc
-  ) WHERE rank <= {P.PQ_REFINE_R * ANN_K}
-),
-ivfpq_cand AS (
-  SELECT c.query_id, c.neighbor_id, {_sql_dist2("q.qe", "e.embedding")} AS score
-  FROM ivfpq_ids c
-  JOIN {emb} e ON e.vec_id = c.neighbor_id
-  JOIN {qsrc} AS q ON q.query_id = c.query_id
-)
-"""
-
-
 SQL_IVFOPQ_CTES = f"""
 q AS ({SQL_Q_CTE}),
 {SQL_OPQ_PERM_CTES},
 {sql_ivf_body(emb="opq_emb", qsrc="opq_q")},
 {sql_pq_body(emb="opq_emb", qsrc="opq_q")},
-{sql_ivfpq_cand(emb="opq_emb", qsrc="opq_q")}
-"""
-
-SQL_ANN_IVFOPQ_TOPK = f"""
-WITH {SQL_IVFOPQ_CTES}
-SELECT query_id, rank, neighbor_id, round(score, 6) AS score FROM (
-  SELECT query_id, neighbor_id, score,
-    CAST(row_number() OVER (PARTITION BY query_id ORDER BY score ASC, neighbor_id) AS INT) AS rank
-  FROM ivfpq_cand
-) WHERE rank <= {ANN_K}
-"""
-
-SQL_ANN_IVFOPQ_RECALL = f"""
-WITH {SQL_IVFOPQ_CTES},
-ann AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT query_id, neighbor_id,
-      row_number() OVER (PARTITION BY query_id ORDER BY score ASC, neighbor_id) AS rank
-    FROM ivfpq_cand
-  ) WHERE rank <= {ANN_K}
-),
-exact AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT q.query_id, e.vec_id AS neighbor_id,
-      row_number() OVER (PARTITION BY q.query_id
-        ORDER BY {_sql_dist2("q.qe", "e.embedding")} ASC, e.vec_id) AS rank
-    FROM q CROSS JOIN embeddings e
-  ) WHERE rank <= {ANN_K}
-),
-hits AS (
-  SELECT exact.query_id, count(*) AS n_hit
-  FROM exact JOIN ann USING (query_id, neighbor_id) GROUP BY exact.query_id
-),
-per_q AS (
-  SELECT q2.query_id, CAST(coalesce(h.n_hit, 0) AS DOUBLE) / {ANN_K} AS recall
-  FROM (SELECT DISTINCT query_id FROM exact) q2 LEFT JOIN hits h USING (query_id)
-)
-SELECT round(avg(recall), 6) AS recall_at_k, count(*) AS n_queries FROM per_q
-"""
-
-SIMSEARCH_QUERIES["ann_ivfopq_topk"] = q_ann_ivfopq_topk
-SIMSEARCH_ORACLES["ann_ivfopq_topk"] = SQL_ANN_IVFOPQ_TOPK
-SIMSEARCH_QUERIES["ann_ivfopq_recall"] = q_ann_ivfopq_recall
-SIMSEARCH_ORACLES["ann_ivfopq_recall"] = SQL_ANN_IVFOPQ_RECALL
+{_SQL_IVFPQ_ADC},
+{rerank_cte("ivfpq_adc", P.PQ_REFINE_R, ANN_K, "l2", emb="opq_emb", qsrc="opq_q")}"""
 
 
 # ---------------------------------------------------------------------------
@@ -1514,23 +837,6 @@ SIMSEARCH_ORACLES["ann_ivfopq_recall"] = SQL_ANN_IVFOPQ_RECALL
 # trains/encodes/reconstructs; the ADC joins probes to residual-space
 # query vectors.
 # ---------------------------------------------------------------------------
-
-def q_ann_ivfpq_res_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = P.ivfpq_res_topk(
-        queries_view(spark, sf_dir), load_table(spark, sf_dir, "embeddings"), ANN_K
-    )
-    return out.select(
-        "query_id", "rank", "neighbor_id", F.round("score", 6).alias("score")
-    )
-
-
-def q_ann_ivfpq_res_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    queries = queries_view(spark, sf_dir)
-    corpus = load_table(spark, sf_dir, "embeddings")
-    ann = P.ivfpq_res_topk(queries, corpus, ANN_K)
-    exact = exact_topk_fixture_cached(spark, sf_dir, ANN_K, "l2")
-    return S.ann_recall(ann, exact, ANN_K)
-
 
 #: the residual corpus: assigned vectors minus their cell centroid —
 #: per-coordinate double subtraction, identical shape to the Spark
@@ -1544,11 +850,11 @@ res_emb AS MATERIALIZED (
 )
 """
 
-#: the trained coarse quantizer (IVFADC_KMEANS_ITERS Lloyd rounds,
-#: distinct km prefix — the plain body's ivfkm CTEs use iters=0)
-SQL_IVFPQ_RES_CTES = f"""
-q AS ({SQL_Q_CTE}),
-{sql_ivf_body(iters=P.IVFADC_KMEANS_ITERS, km_prefix="adckm")},
+#: IVFADC over the trained coarse quantizer (IVFADC_KMEANS_ITERS Lloyd
+#: rounds, distinct km prefix — the plain body's ivfkm CTEs use
+#: iters=0); ends in the ADC pre-rank ``ivfres_adc``, shared with the
+#: IVFADC×cushion oracle. Needs ``q`` in scope.
+SQL_IVFADC_BODY = f"""{sql_ivf_body(iters=P.IVFADC_KMEANS_ITERS, km_prefix="adckm")},
 {_SQL_RES_EMB},
 {sql_pq_body(emb="res_emb", qsrc="q")},
 ivfres_q AS (
@@ -1559,72 +865,15 @@ ivfres_q AS (
 ),
 ivfres_adc AS (
   SELECT qr.query_id, a.vec_id AS neighbor_id,
-         {_sql_dist2("qr.qres", "r.recon")} AS score
+         {sql_dist2("qr.qres", "r.recon")} AS score
   FROM ivfres_q qr
   JOIN res_emb a ON a.cell = qr.cell
   JOIN pq_recon r ON r.vec_id = a.vec_id
-),
-ivfres_ids AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT query_id, neighbor_id,
-      row_number() OVER (PARTITION BY query_id ORDER BY score ASC, neighbor_id) AS rank
-    FROM ivfres_adc
-  ) WHERE rank <= {P.PQ_REFINE_R * ANN_K}
-),
-ivfres_cand AS (
-  SELECT c.query_id, c.neighbor_id, {_sql_dist2("q.qe", "e.embedding")} AS score
-  FROM ivfres_ids c
-  JOIN embeddings e ON e.vec_id = c.neighbor_id
-  JOIN q ON q.query_id = c.query_id
-)
-"""
+)"""
 
-SQL_ANN_IVFPQ_RES_TOPK = f"""
-WITH {SQL_IVFPQ_RES_CTES}
-SELECT query_id, rank, neighbor_id, round(score, 6) AS score FROM (
-  SELECT query_id, neighbor_id, score,
-    CAST(row_number() OVER (PARTITION BY query_id ORDER BY score ASC, neighbor_id) AS INT) AS rank
-  FROM ivfres_cand
-) WHERE rank <= {ANN_K}
-"""
-
-
-def _sql_recall_l2(cand_cte: str, cand_name: str) -> str:
-    return f"""
-WITH {cand_cte},
-ann AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT query_id, neighbor_id,
-      row_number() OVER (PARTITION BY query_id ORDER BY score ASC, neighbor_id) AS rank
-    FROM {cand_name}
-  ) WHERE rank <= {ANN_K}
-),
-exact AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT q.query_id, e.vec_id AS neighbor_id,
-      row_number() OVER (PARTITION BY q.query_id
-        ORDER BY {_sql_dist2("q.qe", "e.embedding")} ASC, e.vec_id) AS rank
-    FROM q CROSS JOIN embeddings e
-  ) WHERE rank <= {ANN_K}
-),
-hits AS (
-  SELECT exact.query_id, count(*) AS n_hit
-  FROM exact JOIN ann USING (query_id, neighbor_id) GROUP BY exact.query_id
-),
-per_q AS (
-  SELECT q2.query_id, CAST(coalesce(h.n_hit, 0) AS DOUBLE) / {ANN_K} AS recall
-  FROM (SELECT DISTINCT query_id FROM exact) q2 LEFT JOIN hits h USING (query_id)
-)
-SELECT round(avg(recall), 6) AS recall_at_k, count(*) AS n_queries FROM per_q
-"""
-
-
-SQL_ANN_IVFPQ_RES_RECALL = _sql_recall_l2(SQL_IVFPQ_RES_CTES, "ivfres_cand")
-
-SIMSEARCH_QUERIES["ann_ivfpq_res_topk"] = q_ann_ivfpq_res_topk
-SIMSEARCH_ORACLES["ann_ivfpq_res_topk"] = SQL_ANN_IVFPQ_RES_TOPK
-SIMSEARCH_QUERIES["ann_ivfpq_res_recall"] = q_ann_ivfpq_res_recall
-SIMSEARCH_ORACLES["ann_ivfpq_res_recall"] = SQL_ANN_IVFPQ_RES_RECALL
+SQL_IVFPQ_RES_CTES = f"""
+q AS ({SQL_Q_CTE}),
+{SQL_IVFADC_BODY}"""
 
 
 # ---------------------------------------------------------------------------
@@ -1636,26 +885,6 @@ SIMSEARCH_ORACLES["ann_ivfpq_res_recall"] = SQL_ANN_IVFPQ_RES_RECALL
 # comparison (identity / snake permutation / learned rotation).
 # ---------------------------------------------------------------------------
 
-def q_ann_opq_rot_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators import opq as O
-
-    out = O.opq_rot_topk(
-        queries_view(spark, sf_dir), load_table(spark, sf_dir, "embeddings"), ANN_K
-    )
-    return out.select(
-        "query_id", "rank", "neighbor_id", F.round("score", 6).alias("score")
-    )
-
-
-def q_ann_opq_rot_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators import opq as O
-
-    queries = queries_view(spark, sf_dir)
-    corpus = load_table(spark, sf_dir, "embeddings")
-    ann = O.opq_rot_topk(queries, corpus, ANN_K)
-    exact = exact_topk_fixture_cached(spark, sf_dir, ANN_K, "l2")
-    return S.ann_recall(ann, exact, ANN_K)
-
 
 def _sql_rot_list(vec: str) -> str:
     """R·x as a DuckDB list literal-of-dots — one strict in-order fold
@@ -1665,7 +894,7 @@ def _sql_rot_list(vec: str) -> str:
 
     return (
         "["
-        + ", ".join(_sql_dot(vec, _sql_plane_lit(row)) for row in OPQ_ROTATION)
+        + ", ".join(sql_dot(vec, _sql_plane_lit(row)) for row in OPQ_ROTATION)
         + "]"
     )
 
@@ -1681,53 +910,6 @@ rot_q AS MATERIALIZED (
 {sql_pq_body(emb="rot_emb", qsrc="rot_q")}
 """
 
-SQL_ANN_OPQ_ROT_TOPK = f"""
-WITH {SQL_OPQ_ROT_CTES}
-SELECT query_id, rank, neighbor_id, round(score, 6) AS score FROM (
-  SELECT query_id, neighbor_id, score,
-    CAST(row_number() OVER (PARTITION BY query_id ORDER BY score ASC, neighbor_id) AS INT) AS rank
-  FROM pq_cand
-) WHERE rank <= {ANN_K}
-"""
-
-SQL_ANN_OPQ_ROT_RECALL = _sql_recall_l2(SQL_OPQ_ROT_CTES, "pq_cand")
-
-SIMSEARCH_QUERIES["ann_opq_rot_topk"] = q_ann_opq_rot_topk
-SIMSEARCH_ORACLES["ann_opq_rot_topk"] = SQL_ANN_OPQ_ROT_TOPK
-SIMSEARCH_QUERIES["ann_opq_rot_recall"] = q_ann_opq_rot_recall
-SIMSEARCH_ORACLES["ann_opq_rot_recall"] = SQL_ANN_OPQ_ROT_RECALL
-
-
-# ---------------------------------------------------------------------------
-# IVFADC served from the stored index (r09): the cell-partitioned
-# residual-code layout — partition pruning × 32× column shrink in one
-# table. Shares the in-session oracle by result identity.
-# ---------------------------------------------------------------------------
-
-def q_ann_ivfadc_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Serve-path twin of ``ann_ivfpq_res_topk``: quantizer, residual
-    codebook and cell-partitioned codes are WRITTEN once
-    (``layout.write_ivfadc_index``) and the serve plan reads ONLY the
-    stored tables until the r·K exact re-rank fetch (PartitionFilters
-    + thin ReadSchema asserted in ``tests/test_layout.py``)."""
-    from .operators.pq import ivfadc_topk_from_index
-    from .sources.layout import write_ivfadc_index
-
-    corpus = load_table(spark, sf_dir, "embeddings")
-    path = _index_store_path(
-        spark, sf_dir, "ivfadc-index", lambda p: write_ivfadc_index(corpus, p)
-    )
-    out = ivfadc_topk_from_index(
-        spark, path, queries_view(spark, sf_dir), corpus, ANN_K
-    )
-    return out.select(
-        "query_id", "rank", "neighbor_id", F.round("score", 6).alias("score")
-    )
-
-
-SIMSEARCH_QUERIES["ann_ivfadc_index_topk"] = q_ann_ivfadc_index_topk
-SIMSEARCH_ORACLES["ann_ivfadc_index_topk"] = SQL_ANN_IVFPQ_RES_TOPK
-
 
 # ---------------------------------------------------------------------------
 # Budget-adaptive IVF probing (r09): probe ranked cells until a
@@ -1736,23 +918,6 @@ SIMSEARCH_ORACLES["ann_ivfadc_index_topk"] = SQL_ANN_IVFPQ_RES_TOPK
 # per-query cost, no straggler from one giant cell). Same quantizer,
 # same partition-pruned cell equi-join as plain IVF.
 # ---------------------------------------------------------------------------
-
-def q_ann_ivf_adaptive_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = S.ivf_adaptive_topk(
-        queries_view(spark, sf_dir), load_table(spark, sf_dir, "embeddings"), ANN_K
-    )
-    return out.select(
-        "query_id", "rank", "neighbor_id", F.round("score", 6).alias("score")
-    )
-
-
-def q_ann_ivf_adaptive_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    queries = queries_view(spark, sf_dir)
-    corpus = load_table(spark, sf_dir, "embeddings")
-    ann = S.ivf_adaptive_topk(queries, corpus, ANN_K)
-    exact = exact_topk_fixture_cached(spark, sf_dir, ANN_K, "cosine")
-    return S.ann_recall(ann, exact, ANN_K)
-
 
 #: adaptive probe replay: rank all cells per query, running-sum the
 #: BROADCAST-SIZED cell populations (window over n_cells rows, never
@@ -1765,7 +930,7 @@ cell_sizes AS (SELECT cell, count(*) AS csz FROM assigned GROUP BY cell),
 aranked AS (
   SELECT q.query_id, q.qe, c.centroid_id AS cell,
     row_number() OVER (PARTITION BY q.query_id
-      ORDER BY {_sql_dist2("q.qe", "c.cvec")} ASC, c.centroid_id ASC) AS r
+      ORDER BY {sql_dist2("q.qe", "c.cvec")} ASC, c.centroid_id ASC) AS r
   FROM q CROSS JOIN cents c
 ),
 acum AS (
@@ -1777,64 +942,15 @@ acum AS (
 aprobes AS (SELECT query_id, qe, cell FROM acum WHERE prev < {S.IVF_ADAPTIVE_BUDGET}),
 ivfa_cand AS (
   SELECT p.query_id, a.vec_id AS neighbor_id,
-         {_sql_cos("p.qe", "a.embedding")} AS score
+         {sql_cos("p.qe", "a.embedding")} AS score
   FROM aprobes p JOIN assigned a ON a.cell = p.cell
 )
 """
-
-SQL_ANN_IVF_ADAPTIVE_TOPK = f"""
-WITH {SQL_IVF_ADAPTIVE_CTES}
-SELECT query_id, rank, neighbor_id, round(score, 6) AS score FROM (
-  SELECT query_id, neighbor_id, score,
-    CAST(row_number() OVER (PARTITION BY query_id ORDER BY score DESC, neighbor_id) AS INT) AS rank
-  FROM ivfa_cand
-) WHERE rank <= {ANN_K}
-"""
-
-SQL_ANN_IVF_ADAPTIVE_RECALL = _sql_recall(SQL_IVF_ADAPTIVE_CTES, "ivfa_cand")
-
-SIMSEARCH_QUERIES["ann_ivf_adaptive_topk"] = q_ann_ivf_adaptive_topk
-SIMSEARCH_ORACLES["ann_ivf_adaptive_topk"] = SQL_ANN_IVF_ADAPTIVE_TOPK
-SIMSEARCH_QUERIES["ann_ivf_adaptive_recall"] = q_ann_ivf_adaptive_recall
-SIMSEARCH_ORACLES["ann_ivf_adaptive_recall"] = SQL_ANN_IVF_ADAPTIVE_RECALL
 
 
 # ---------------------------------------------------------------------------
 # Vamana/DiskANN-style α-pruned graph (Subramanya et al. NeurIPS 2019)
 # ---------------------------------------------------------------------------
-
-def q_ann_vamana_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Beam search over the α-pruned Vamana graph
-    (``operators/vamana.vamana_edges``): banded base graph → 2-hop
-    candidate enrichment → RobustPrune bitmask fold → symmetrize →
-    the same beam walk as ``ann_graph_topk``. Construction recall@5
-    0.81 vs the banded build's 0.44 (sf0.01) lifts walk recall@20 to
-    0.945 vs 0.83 at the same degree budget and FEWER visited
-    (sf0.1: 0.80 vs 0.7125 at 287 vs 306 visited/query) — the
-    construction-limited family unblocked (r09 verdict #2). The
-    oracle replays the base build, the prune fold (pure-integer
-    ``list_reduce``), and every expansion round."""
-    from .operators.vamana import vamana_edges
-
-    corpus = load_table(spark, sf_dir, "embeddings")
-    edges = vamana_edges(corpus, cache_key=f"fixture:{sf_dir}")
-    out = S.graph_topk_from_index(
-        queries_view(spark, sf_dir), corpus, edges, ANN_K
-    )
-    return out.select(
-        "query_id", "rank", "neighbor_id", F.round("score", 6).alias("score")
-    )
-
-
-def q_ann_vamana_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.vamana import vamana_edges
-
-    queries = queries_view(spark, sf_dir)
-    corpus = load_table(spark, sf_dir, "embeddings")
-    edges = vamana_edges(corpus, cache_key=f"fixture:{sf_dir}")
-    ann = S.graph_topk_from_index(queries, corpus, edges, ANN_K)
-    exact = exact_topk_fixture_cached(spark, sf_dir, ANN_K, "cosine")
-    return S.ann_recall(ann, exact, ANN_K)
 
 
 def _sql_vamana_ctes(edges_src: str = "edges") -> tuple[str, ...]:
@@ -1866,7 +982,7 @@ def _sql_vamana_ctes(edges_src: str = "edges") -> tuple[str, ...]:
         ORDER BY score DESC, cand_id) AS r
     FROM (
       SELECT v.node_id, v.cand_id,
-             {_sql_cos("a.embedding", "b.embedding")} AS score
+             {sql_cos("a.embedding", "b.embedding")} AS score
       FROM vcand v
       JOIN embeddings a ON a.vec_id = v.node_id
       JOIN embeddings b ON b.vec_id = v.cand_id
@@ -1880,7 +996,7 @@ def _sql_vamana_ctes(edges_src: str = "edges") -> tuple[str, ...]:
   JOIN embeddings iv ON iv.vec_id = i.cand_id
   JOIN embeddings jv ON jv.vec_id = j.cand_id
   WHERE CAST({VAMANA_ALPHA2} AS DOUBLE)
-          * (2.0 - 2.0 * ({_sql_cos("iv.embedding", "jv.embedding")}))
+          * (2.0 - 2.0 * ({sql_cos("iv.embedding", "jv.embedding")}))
         <= (2.0 - 2.0 * j.score)
   GROUP BY i.node_id, j.j
 )""",
@@ -1914,55 +1030,6 @@ def _sql_vamana_ctes(edges_src: str = "edges") -> tuple[str, ...]:
 _VAMANA_BEAM_CTES, _VAMANA_BEAM_FINAL = _sql_graph_beam_ctes(
     post_edges_ctes=_sql_vamana_ctes(), edges_name="vedges"
 )
-
-SQL_ANN_VAMANA_TOPK = f"""
-WITH {_VAMANA_BEAM_CTES}
-SELECT query_id, rank, neighbor_id, round(score, 6) AS score FROM (
-  SELECT query_id, neighbor_id, score,
-    CAST(row_number() OVER (PARTITION BY query_id
-      ORDER BY score DESC, neighbor_id) AS INT) AS rank
-  FROM {_VAMANA_BEAM_FINAL}
-) WHERE rank <= {ANN_K}
-"""
-
-SQL_ANN_VAMANA_RECALL = _sql_recall(_VAMANA_BEAM_CTES, _VAMANA_BEAM_FINAL)
-
-SIMSEARCH_QUERIES["ann_vamana_topk"] = q_ann_vamana_topk
-SIMSEARCH_ORACLES["ann_vamana_topk"] = SQL_ANN_VAMANA_TOPK
-SIMSEARCH_QUERIES["ann_vamana_recall"] = q_ann_vamana_recall
-SIMSEARCH_ORACLES["ann_vamana_recall"] = SQL_ANN_VAMANA_RECALL
-
-
-def q_ann_vamana_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Serve-path twin of ``ann_vamana_topk``: the α-pruned edge set
-    is WRITTEN once per (session, fixture dir) as a stored (src, dst)
-    parquet artifact (``layout.write_vamana_index``) and the query
-    walks the STORED table — identical offline-build/online-serve
-    split as ``ann_graph_index_topk``, so the α-pruned build's cost
-    (the dominant wall of the in-session query) never appears in this
-    plan. Result-identical to the in-session build — shares its
-    oracle."""
-    from .sources.layout import read_graph_index, write_vamana_index
-
-    corpus = load_table(spark, sf_dir, "embeddings")
-    path = _index_store_path(
-        spark,
-        sf_dir,
-        "vamana-index",
-        lambda p: write_vamana_index(corpus, p, cache_key=f"fixture:{sf_dir}"),
-    )
-    edges = read_graph_index(spark, path)
-    out = S.graph_topk_from_index(
-        queries_view(spark, sf_dir), corpus, edges, ANN_K
-    )
-    return out.select(
-        "query_id", "rank", "neighbor_id", F.round("score", 6).alias("score")
-    )
-
-
-SIMSEARCH_QUERIES["ann_vamana_index_topk"] = q_ann_vamana_index_topk
-#: identical results to the in-session build by construction
-SIMSEARCH_ORACLES["ann_vamana_index_topk"] = SQL_ANN_VAMANA_TOPK
 
 
 def q_ann_vamana_delta_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2043,7 +1110,7 @@ docc AS MATERIALIZED (
   JOIN embeddings iv ON iv.vec_id = i.cand_id
   JOIN embeddings jv ON jv.vec_id = j.cand_id
   WHERE CAST({VAMANA_ALPHA2} AS DOUBLE)
-          * (2.0 - 2.0 * ({_sql_cos("iv.embedding", "jv.embedding")}))
+          * (2.0 - 2.0 * ({sql_cos("iv.embedding", "jv.embedding")}))
         <= (2.0 - 2.0 * j.score)
   GROUP BY i.node_id, j.j
 ),
@@ -2101,7 +1168,7 @@ rmerged AS MATERIALIZED (
 ),
 rscored AS MATERIALIZED (
   SELECT m.node_id, m.cand_id,
-         ({_sql_cos("nv.embedding", "cv.embedding")}) AS score
+         ({sql_cos("nv.embedding", "cv.embedding")}) AS score
   FROM rmerged m
   JOIN (SELECT vec_id, CASE WHEN vec_id % 11 = 5 THEN list_reverse(embedding)
                             ELSE embedding END AS embedding
@@ -2138,7 +1205,7 @@ rocc AS MATERIALIZED (
                             ELSE embedding END AS embedding
         FROM embeddings) jv ON jv.vec_id = j.cand_id
   WHERE CAST({VAMANA_ALPHA2} AS DOUBLE)
-          * (2.0 - 2.0 * ({_sql_cos("iv.embedding", "jv.embedding")}))
+          * (2.0 - 2.0 * ({sql_cos("iv.embedding", "jv.embedding")}))
         <= (2.0 - 2.0 * j.score)
   GROUP BY i.node_id, j.j
 ),
@@ -2221,7 +1288,7 @@ def q_ivf_cell_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _sql_ivf_cell_stats() -> str:
     km_ctes, km_final = kmeans_sql_ctes(
         "ckm_pts", "ckm", S.IVF_STRIDE, iters=S.IVF_KMEANS_ITERS,
-        dist2_sql=_sql_dist2,
+        dist2_sql=sql_dist2,
     )
     return f"""
 WITH ckm_pts AS (SELECT 0 AS grp, vec_id AS pid, embedding AS pvec FROM embeddings),
@@ -2231,7 +1298,7 @@ assigned AS (
   SELECT vec_id, centroid_id AS cell FROM (
     SELECT e.vec_id, c.centroid_id,
       row_number() OVER (PARTITION BY e.vec_id
-        ORDER BY {_sql_dist2("e.embedding", "c.cvec")} ASC, c.centroid_id ASC) AS r
+        ORDER BY {sql_dist2("e.embedding", "c.cvec")} ASC, c.centroid_id ASC) AS r
     FROM embeddings e CROSS JOIN cents c
   ) WHERE r = 1
 ),
@@ -2400,18 +1467,6 @@ SIMSEARCH_ORACLES["vamana_reachability_stats"] = _sql_vamana_reachability_stats(
 # (operators/spann.py — Chen et al. NeurIPS 2021, public method)
 # ---------------------------------------------------------------------------
 
-def q_ann_spann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SPANN ANN top-K: boundary-replicated postings, dynamically
-    pruned probes. Measured fixture Pareto point: recall 0.925 at the
-    scanned-row budget of IVF nprobe=2 (which reaches 0.79) — see
-    reports/SPANN.md."""
-    out = SP.spann_topk(
-        queries_view(spark, sf_dir), load_table(spark, sf_dir, "embeddings"), ANN_K
-    )
-    return out.select(
-        "query_id", "rank", "neighbor_id", F.round("score", 6).alias("score")
-    )
-
 
 def _sql_spann_ctes() -> str:
     """Replays the full SPANN pipeline: the shared coarse-quantizer
@@ -2422,12 +1477,12 @@ def _sql_spann_ctes() -> str:
     folds in, so the boundary comparisons are bit-identical."""
     km_ctes, km_final = kmeans_sql_ctes(
         "spkm_pts", "spkm", S.IVF_STRIDE, iters=S.IVF_KMEANS_ITERS,
-        dist2_sql=_sql_dist2,
+        dist2_sql=sql_dist2,
     )
     f_assign = repr(SP._factor2(SP.SPANN_EPS))
     f_probe = repr(SP._factor2(SP.SPANN_QEPS))
-    d2_post = _sql_dist2("e.embedding", "c.cvec")
-    d2_probe = _sql_dist2("q.qe", "c.cvec")
+    d2_post = sql_dist2("e.embedding", "c.cvec")
+    d2_probe = sql_dist2("q.qe", "c.cvec")
     return f"""
 q AS ({SQL_Q_CTE}),
 spkm_pts AS (SELECT 0 AS grp, vec_id AS pid, embedding AS pvec FROM embeddings),
@@ -2455,7 +1510,7 @@ spprobes AS (
 ),
 spann_cand AS (
   SELECT p.query_id, a.vec_id AS neighbor_id,
-         max({_sql_cos("p.qe", "a.embedding")}) AS score
+         max({sql_cos("p.qe", "a.embedding")}) AS score
   FROM spprobes p JOIN spposted a ON a.cell = p.cell
   GROUP BY p.query_id, a.vec_id
 )
@@ -2463,26 +1518,6 @@ spann_cand AS (
 
 
 SQL_SPANN_CTES = _sql_spann_ctes()
-
-SQL_ANN_SPANN_TOPK = f"""
-WITH {SQL_SPANN_CTES}
-SELECT query_id, rank, neighbor_id, round(score, 6) AS score FROM (
-  SELECT query_id, neighbor_id, score,
-    CAST(row_number() OVER (PARTITION BY query_id ORDER BY score DESC, neighbor_id) AS INT) AS rank
-  FROM spann_cand
-) WHERE rank <= {ANN_K}
-"""
-
-
-def q_ann_spann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    queries = queries_view(spark, sf_dir)
-    corpus = load_table(spark, sf_dir, "embeddings")
-    ann = SP.spann_topk(queries, corpus, ANN_K)
-    exact = exact_topk_fixture_cached(spark, sf_dir, ANN_K, "cosine")
-    return S.ann_recall(ann, exact, ANN_K)
-
-
-SQL_ANN_SPANN_RECALL = _sql_recall(SQL_SPANN_CTES, "spann_cand")
 
 
 def q_spann_posting_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2563,36 +1598,5 @@ FROM totals CROSS JOIN per_vec CROSS JOIN per_cell
 """
 
 
-SIMSEARCH_QUERIES["ann_spann_topk"] = q_ann_spann_topk
-SIMSEARCH_ORACLES["ann_spann_topk"] = SQL_ANN_SPANN_TOPK
-SIMSEARCH_QUERIES["ann_spann_recall"] = q_ann_spann_recall
-SIMSEARCH_ORACLES["ann_spann_recall"] = SQL_ANN_SPANN_RECALL
 SIMSEARCH_QUERIES["spann_posting_stats"] = q_spann_posting_stats
 SIMSEARCH_ORACLES["spann_posting_stats"] = _sql_spann_posting_stats()
-
-
-def q_ann_spann_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Serve-path twin of ``ann_spann_topk``: the replicated posting
-    lists are WRITTEN once partitioned by cell
-    (``layout.write_spann_postings``) and the dynamically pruned probe
-    list drives a partition-pruned scan — most queries open ONE
-    directory thanks to boundary replication (`reports/SPANN.md`).
-    Shares the in-session oracle by result identity."""
-    from .sources.layout import spann_topk_from_store, write_spann_postings
-
-    corpus = load_table(spark, sf_dir, "embeddings")
-    path = _index_store_path(
-        spark, sf_dir, "spann-postings", lambda p: write_spann_postings(corpus, p)
-    )
-    cents = S.ivf_centroids(corpus)
-    out = spann_topk_from_store(
-        spark, path, queries_view(spark, sf_dir), cents, ANN_K
-    )
-    return out.select(
-        "query_id", "rank", "neighbor_id", F.round("score", 6).alias("score")
-    )
-
-
-SIMSEARCH_QUERIES["ann_spann_index_topk"] = q_ann_spann_index_topk
-#: identical results to the in-session build by construction
-SIMSEARCH_ORACLES["ann_spann_index_topk"] = SQL_ANN_SPANN_TOPK

@@ -12,6 +12,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .plans.duck_oracle import sql_cos, sql_dist2
 from .sources.fixtures import QUERY_STRIDE, load_table
 from .streaming.windows import (
     click_purchase_join,
@@ -128,27 +129,14 @@ def q_stream_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sql_cos(a: str, b: str) -> str:
-    dot = (
-        f"list_sum(list_transform(list_zip({a}, {b}), "
-        f"p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))"
-    )
-    def norm(x: str) -> str:
-        return (
-            f"sqrt(list_sum(list_transform({x}, "
-            f"x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))"
-        )
-    return f"({dot} / (greatest({norm(a)}, 1e-12) * greatest({norm(b)}, 1e-12)))"
-
-
 SQL_STREAM_ANN_TOPK = f"""
 WITH q AS (SELECT vec_id AS query_id, embedding AS qe FROM embeddings
            WHERE vec_id % {QUERY_STRIDE} = 0)
 SELECT query_id, rank, neighbor_id, round(score, 6) AS score FROM (
   SELECT q.query_id, e.vec_id AS neighbor_id,
-    {_sql_cos("q.qe", "e.embedding")} AS score,
+    {sql_cos("q.qe", "e.embedding")} AS score,
     CAST(row_number() OVER (PARTITION BY q.query_id
-      ORDER BY {_sql_cos("q.qe", "e.embedding")} DESC, e.vec_id) AS INT) AS rank
+      ORDER BY {sql_cos("q.qe", "e.embedding")} DESC, e.vec_id) AS INT) AS rank
   FROM q CROSS JOIN embeddings e
 ) WHERE rank <= 10
 """
@@ -381,7 +369,7 @@ def q_ann_stream_fresh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     cell-partitioned parquet delta store (stateless quantizer routing,
     one append per micro-batch), then the top-K is served merge-on-read
     from base ⊎ delta. The ingest runs once per session (memoized store
-    path, the ``_index_store_path`` idiom); the oracle replays the
+    path); the oracle replays the
     final state in SQL — valid because last-wins keys on the data's
     seq, not on batch boundaries, so the served state is independent
     of how the stream was chopped (the batch≡stream property
@@ -437,7 +425,8 @@ def q_ann_stream_fresh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_ann_stream_fresh_topk() -> str:
-    from .registry_simsearch import ANN_K, SQL_Q_CTE, _sql_cos
+    from .plans.duck_oracle import SQL_Q_CTE
+    from .registry_simsearch import ANN_K
     from .streaming import ingest as I
 
     return f"""
@@ -467,9 +456,9 @@ live AS (
 )
 SELECT query_id, rank, neighbor_id, round(score, 6) AS score FROM (
   SELECT q.query_id, l.vec_id AS neighbor_id,
-    {_sql_cos("q.qe", "l.embedding")} AS score,
+    {sql_cos("q.qe", "l.embedding")} AS score,
     CAST(row_number() OVER (PARTITION BY q.query_id
-      ORDER BY {_sql_cos("q.qe", "l.embedding")} DESC, l.vec_id) AS INT) AS rank
+      ORDER BY {sql_cos("q.qe", "l.embedding")} DESC, l.vec_id) AS INT) AS rank
   FROM q CROSS JOIN live l
 ) WHERE rank <= {ANN_K}
 """
@@ -1037,14 +1026,13 @@ def _sql_stream_spann_ingest() -> str:
     from .operators import spann as SP
     from .operators.simsearch import IVF_KMEANS_ITERS, IVF_STRIDE
     from .operators.kmeans import kmeans_sql_ctes
-    from .registry_simsearch import _sql_dist2
     from .streaming import ingest as I
 
     km_ctes, km_final = kmeans_sql_ctes(
         "sskm_pts", "sskm", IVF_STRIDE, iters=IVF_KMEANS_ITERS,
-        dist2_sql=_sql_dist2,
+        dist2_sql=sql_dist2,
     )
-    d2 = _sql_dist2("u.embedding", "c.cvec")
+    d2 = sql_dist2("u.embedding", "c.cvec")
     return f"""
 WITH changes AS (
   SELECT vec_id, list_reverse(embedding) AS embedding, 'upsert' AS op, 1 AS seq

@@ -1,8 +1,11 @@
-"""Vector-database query-shape suite: metadata-filtered top-K (exact
-and IVF), radius range search, the int8 scalar-quantization tier, and
-hybrid keyword+vector RRF fusion. Every query has a DuckDB twin that
-replays the identical arithmetic (same DOUBLE folds, same round-half-up
-int8 rule, same tie-breaks), so the driver check is hash-exact.
+"""Vector-database query-shape suite: radius range search, hybrid
+keyword+vector RRF fusion, BM25/TF-IDF, MMR, mutation, multi-vector
+MaxSim, and the candidate-CTE replays of the filtered, int8 SQ, 1-bit
+BQ, Matryoshka, cascade and RaBitQ families (their
+``ann_*_{topk,recall}`` queries are generated by ``registry_ann``).
+Every query has a DuckDB twin that replays the identical arithmetic
+(same DOUBLE folds, same round-half-up int8 rule, same tie-breaks), so
+the driver check is hash-exact.
 """
 
 from __future__ import annotations
@@ -16,13 +19,17 @@ from .operators import sq as SQ
 from .operators import vectordb as V
 from .operators.simsearch import ann_recall
 from .operators.topk import exact_topk_fixture_cached
-from .registry_simsearch import (
-    ANN_K,
-    SQL_IVF_CTES,
+from .plans.duck_oracle import (
+    RECALL_SELECT,
     SQL_Q_CTE,
-    _sql_cos,
-    _sql_dist2,
+    exact_cte,
+    rank_sql,
+    recall_tail,
+    sql_cos,
+    sql_dist2,
+    sql_dot,
 )
+from .registry_simsearch import ANN_K, SQL_IVF_BODY, SQL_IVF_CTES, _sql_plane_lit
 from .sources.fixtures import QUERY_STRIDE, load_table, queries_view
 
 #: attribute predicate for the filtered-search queries (≈40% of the
@@ -41,66 +48,30 @@ def _filter_col() -> Column:
     return F.col("label").isin(*FILTER_LABELS)
 
 
-# ---------------------------------------------------------------------------
-# Filtered top-K
-# ---------------------------------------------------------------------------
-
-def q_ann_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = V.filtered_topk(
-        queries_view(spark, sf_dir),
-        load_table(spark, sf_dir, "embeddings"),
-        ANN_K,
-        _filter_col(),
-        metric="cosine",
-    )
-    return out.select(
-        "query_id", "rank", "neighbor_id", F.round("score", 6).alias("score")
-    )
+def _sql_filtered_cand(pred: str) -> str:
+    """``filt_cand``: exact cosine over the corpus rows passing ``pred``."""
+    return f"""filt_cand AS (
+  SELECT q.query_id, e.vec_id AS neighbor_id, {sql_cos("q.qe", "e.embedding")} AS score
+  FROM q CROSS JOIN embeddings e WHERE e.{pred}
+)"""
 
 
-SQL_ANN_FILTERED_TOPK = f"""
-WITH q AS ({SQL_Q_CTE})
-SELECT query_id, rank, neighbor_id, round(score, 6) AS score FROM (
-  SELECT q.query_id, e.vec_id AS neighbor_id,
-    {_sql_cos("q.qe", "e.embedding")} AS score,
-    CAST(row_number() OVER (PARTITION BY q.query_id
-      ORDER BY {_sql_cos("q.qe", "e.embedding")} DESC, e.vec_id) AS INT) AS rank
-  FROM q CROSS JOIN embeddings e WHERE e.{_SQL_FILTER}
-) WHERE rank <= {ANN_K}
-"""
+_SQL_FILTERED_CTES = f"""q AS ({SQL_Q_CTE}),
+{_sql_filtered_cand(_SQL_FILTER)}"""
 
-
-def q_ann_filtered_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = V.filtered_ivf_topk(
-        queries_view(spark, sf_dir),
-        load_table(spark, sf_dir, "embeddings"),
-        ANN_K,
-        _filter_col(),
-    )
-    return out.select(
-        "query_id", "rank", "neighbor_id", F.round("score", 6).alias("score")
-    )
-
-
-SQL_ANN_FILTERED_IVF_TOPK = f"""
-WITH {SQL_IVF_CTES},
+#: IVF candidates post-filtered by the attribute predicate
+_SQL_FILTERED_IVF_CTES = f"""{SQL_IVF_CTES},
 fcand AS (
   SELECT c.query_id, c.neighbor_id, c.score
   FROM ivf_cand c JOIN embeddings e ON e.vec_id = c.neighbor_id
   WHERE e.{_SQL_FILTER}
-)
-SELECT query_id, rank, neighbor_id, round(score, 6) AS score FROM (
-  SELECT query_id, neighbor_id, score,
-    CAST(row_number() OVER (PARTITION BY query_id
-      ORDER BY score DESC, neighbor_id) AS INT) AS rank
-  FROM fcand
-) WHERE rank <= {ANN_K}
-"""
+)"""
 
 
 # ---------------------------------------------------------------------------
 # Range (radius) search
 # ---------------------------------------------------------------------------
+
 
 def q_ann_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = V.range_search(
@@ -114,9 +85,9 @@ def q_ann_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 SQL_ANN_RANGE_SEARCH = f"""
 WITH q AS ({SQL_Q_CTE})
 SELECT q.query_id, e.vec_id AS neighbor_id,
-       round({_sql_dist2("q.qe", "e.embedding")}, 6) AS d2
+       round({sql_dist2("q.qe", "e.embedding")}, 6) AS d2
 FROM q CROSS JOIN embeddings e
-WHERE {_sql_dist2("q.qe", "e.embedding")} <= {RANGE_RADIUS2}
+WHERE {sql_dist2("q.qe", "e.embedding")} <= {RANGE_RADIUS2}
 """
 
 
@@ -152,7 +123,7 @@ recon AS (
 _SQL_SQ_CAND = f"""
 sq_cand AS (
   SELECT q.query_id, r.vec_id AS neighbor_id,
-         {_sql_dist2("q.qe", "r.recon")} AS score
+         {sql_dist2("q.qe", "r.recon")} AS score
   FROM q CROSS JOIN recon r
 )
 """
@@ -176,204 +147,33 @@ FROM enc
 """
 
 
-def q_ann_sq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = SQ.sq_topk(
-        queries_view(spark, sf_dir), load_table(spark, sf_dir, "embeddings"), ANN_K
-    )
-    return out.select(
-        "query_id", "rank", "neighbor_id", F.round("score", 6).alias("score")
-    )
-
-
-SQL_ANN_SQ_TOPK = f"""
-WITH q AS ({SQL_Q_CTE}),
+_SQL_SQ_CTES = f"""
+q AS ({SQL_Q_CTE}),
 {_SQL_SQ_RECON},
-{_SQL_SQ_CAND}
-SELECT query_id, rank, neighbor_id, round(score, 6) AS score FROM (
-  SELECT query_id, neighbor_id, score,
-    CAST(row_number() OVER (PARTITION BY query_id
-      ORDER BY score ASC, neighbor_id) AS INT) AS rank
-  FROM sq_cand
-) WHERE rank <= {ANN_K}
-"""
-
-
-def q_ann_sq_refined_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = SQ.sq_refined_topk(
-        queries_view(spark, sf_dir), load_table(spark, sf_dir, "embeddings"), ANN_K
-    )
-    return out.select(
-        "query_id", "rank", "neighbor_id", F.round("score", 6).alias("score")
-    )
-
-
-SQL_ANN_SQ_REFINED_TOPK = f"""
-WITH q AS ({SQL_Q_CTE}),
-{_SQL_SQ_RECON},
-{_SQL_SQ_CAND},
-cand AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT query_id, neighbor_id,
-      row_number() OVER (PARTITION BY query_id
-        ORDER BY score ASC, neighbor_id) AS r
-    FROM sq_cand
-  ) WHERE r <= {SQ.SQ_REFINE_R * ANN_K}
-)
-SELECT query_id, rank, neighbor_id, round(score, 6) AS score FROM (
-  SELECT c.query_id, c.neighbor_id,
-    {_sql_dist2("q.qe", "e.embedding")} AS score,
-    CAST(row_number() OVER (PARTITION BY c.query_id
-      ORDER BY {_sql_dist2("q.qe", "e.embedding")} ASC, c.neighbor_id) AS INT) AS rank
-  FROM cand c
-  JOIN embeddings e ON e.vec_id = c.neighbor_id
-  JOIN q ON q.query_id = c.query_id
-) WHERE rank <= {ANN_K}
-"""
-
-
-def q_ann_sq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    queries = queries_view(spark, sf_dir)
-    corpus = load_table(spark, sf_dir, "embeddings")
-    ann = SQ.sq_topk(queries, corpus, ANN_K)
-    exact = exact_topk_fixture_cached(spark, sf_dir, ANN_K, "l2")
-    return ann_recall(ann, exact, ANN_K)
-
-
-SQL_ANN_SQ_RECALL = f"""
-WITH q AS ({SQL_Q_CTE}),
-{_SQL_SQ_RECON},
-{_SQL_SQ_CAND},
-ann AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT query_id, neighbor_id,
-      row_number() OVER (PARTITION BY query_id ORDER BY score ASC, neighbor_id) AS rank
-    FROM sq_cand
-  ) WHERE rank <= {ANN_K}
-),
-exact AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT q.query_id, e.vec_id AS neighbor_id,
-      row_number() OVER (PARTITION BY q.query_id
-        ORDER BY {_sql_dist2("q.qe", "e.embedding")} ASC, e.vec_id) AS rank
-    FROM q CROSS JOIN embeddings e
-  ) WHERE rank <= {ANN_K}
-),
-hits AS (
-  SELECT exact.query_id, count(*) AS n_hit
-  FROM exact JOIN ann USING (query_id, neighbor_id) GROUP BY exact.query_id
-),
-per_q AS (
-  SELECT q2.query_id, CAST(coalesce(h.n_hit, 0) AS DOUBLE) / {ANN_K} AS recall
-  FROM (SELECT DISTINCT query_id FROM exact) q2 LEFT JOIN hits h USING (query_id)
-)
-SELECT round(avg(recall), 6) AS recall_at_k, count(*) AS n_queries FROM per_q
-"""
+{_SQL_SQ_CAND}"""
 
 
 # ---------------------------------------------------------------------------
 # IVF × SQ composition
 # ---------------------------------------------------------------------------
 
-def q_ann_ivfsq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = SQ.ivfsq_topk(
-        queries_view(spark, sf_dir), load_table(spark, sf_dir, "embeddings"), ANN_K
-    )
-    return out.select(
-        "query_id", "rank", "neighbor_id", F.round("score", 6).alias("score")
-    )
-
-
-#: same cell pruning as the IVF-PQ twin, int8 ADC pricing, exact
-#: refinement — assembled from the already-proven CTE fragments
-SQL_ANN_IVFSQ_TOPK = f"""
-WITH {SQL_IVF_CTES},
+#: same cell pruning as the IVF-PQ twin, int8 ADC pricing — assembled
+#: from the already-proven CTE fragments
+_SQL_IVFSQ_CTES = f"""{SQL_IVF_CTES},
 {_SQL_SQ_RECON},
-adc AS (
+ivfsq_adc AS (
   SELECT p.query_id, a.vec_id AS neighbor_id,
-         {_sql_dist2("p.qe", "r.recon")} AS score
+         {sql_dist2("p.qe", "r.recon")} AS score
   FROM probes p
   JOIN assigned a ON a.cell = p.cell
   JOIN recon r ON r.vec_id = a.vec_id
-),
-cand AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT query_id, neighbor_id,
-      row_number() OVER (PARTITION BY query_id
-        ORDER BY score ASC, neighbor_id) AS rr
-    FROM adc
-  ) WHERE rr <= {SQ.SQ_REFINE_R * ANN_K}
-)
-SELECT query_id, rank, neighbor_id, round(score, 6) AS score FROM (
-  SELECT c.query_id, c.neighbor_id,
-    {_sql_dist2("q.qe", "e.embedding")} AS score,
-    CAST(row_number() OVER (PARTITION BY c.query_id
-      ORDER BY {_sql_dist2("q.qe", "e.embedding")} ASC, c.neighbor_id) AS INT) AS rank
-  FROM cand c
-  JOIN embeddings e ON e.vec_id = c.neighbor_id
-  JOIN q ON q.query_id = c.query_id
-) WHERE rank <= {ANN_K}
-"""
-
-
-def q_ann_ivfsq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    queries = queries_view(spark, sf_dir)
-    corpus = load_table(spark, sf_dir, "embeddings")
-    ann = SQ.ivfsq_topk(queries, corpus, ANN_K)
-    exact = exact_topk_fixture_cached(spark, sf_dir, ANN_K, "l2")
-    return ann_recall(ann, exact, ANN_K)
-
-
-SQL_ANN_IVFSQ_RECALL = f"""
-WITH {SQL_IVF_CTES},
-{_SQL_SQ_RECON},
-adc AS (
-  SELECT p.query_id, a.vec_id AS neighbor_id,
-         {_sql_dist2("p.qe", "r.recon")} AS score
-  FROM probes p
-  JOIN assigned a ON a.cell = p.cell
-  JOIN recon r ON r.vec_id = a.vec_id
-),
-cand AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT query_id, neighbor_id,
-      row_number() OVER (PARTITION BY query_id
-        ORDER BY score ASC, neighbor_id) AS rr
-    FROM adc
-  ) WHERE rr <= {SQ.SQ_REFINE_R * ANN_K}
-),
-ann AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT c.query_id, c.neighbor_id,
-      row_number() OVER (PARTITION BY c.query_id
-        ORDER BY {_sql_dist2("q.qe", "e.embedding")} ASC, c.neighbor_id) AS rank
-    FROM cand c
-    JOIN embeddings e ON e.vec_id = c.neighbor_id
-    JOIN q ON q.query_id = c.query_id
-  ) WHERE rank <= {ANN_K}
-),
-exact AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT q.query_id, e.vec_id AS neighbor_id,
-      row_number() OVER (PARTITION BY q.query_id
-        ORDER BY {_sql_dist2("q.qe", "e.embedding")} ASC, e.vec_id) AS rank
-    FROM q CROSS JOIN embeddings e
-  ) WHERE rank <= {ANN_K}
-),
-hits AS (
-  SELECT exact.query_id, count(*) AS n_hit
-  FROM exact JOIN ann USING (query_id, neighbor_id) GROUP BY exact.query_id
-),
-per_q AS (
-  SELECT q2.query_id, CAST(coalesce(h.n_hit, 0) AS DOUBLE) / {ANN_K} AS recall
-  FROM (SELECT DISTINCT query_id FROM exact) q2 LEFT JOIN hits h USING (query_id)
-)
-SELECT round(avg(recall), 6) AS recall_at_k, count(*) AS n_queries FROM per_q
-"""
+)"""
 
 
 # ---------------------------------------------------------------------------
 # Hybrid keyword + vector fusion (RRF)
 # ---------------------------------------------------------------------------
+
 
 def q_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
@@ -412,7 +212,7 @@ vec AS (
   SELECT query_id, neighbor_id AS doc_id, vec_rank FROM (
     SELECT q.query_id, e.vec_id AS neighbor_id,
       row_number() OVER (PARTITION BY q.query_id
-        ORDER BY {_sql_cos("q.qe", "e.embedding")} DESC, e.vec_id) AS vec_rank
+        ORDER BY {sql_cos("q.qe", "e.embedding")} DESC, e.vec_id) AS vec_rank
     FROM q CROSS JOIN embeddings e
   ) WHERE vec_rank <= {V.HYBRID_TOPN}
 ),
@@ -504,6 +304,7 @@ WHERE rank <= {BM25_TOPN}
 # MMR diversity re-ranking
 # ---------------------------------------------------------------------------
 
+
 def q_ann_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = V.mmr_rerank(
         queries_view(spark, sf_dir), load_table(spark, sf_dir, "embeddings")
@@ -523,15 +324,15 @@ WITH q AS ({SQL_Q_CTE}),
 cand AS MATERIALIZED (
   SELECT query_id, doc_id, rel, embedding FROM (
     SELECT q.query_id, e.vec_id AS doc_id,
-      {_sql_cos("q.qe", "e.embedding")} AS rel, e.embedding,
+      {sql_cos("q.qe", "e.embedding")} AS rel, e.embedding,
       row_number() OVER (PARTITION BY q.query_id
-        ORDER BY {_sql_cos("q.qe", "e.embedding")} DESC, e.vec_id) AS rn
+        ORDER BY {sql_cos("q.qe", "e.embedding")} DESC, e.vec_id) AS rn
     FROM q CROSS JOIN embeddings e
   ) WHERE rn <= {V.MMR_TOPN}
 ),
 pairs AS MATERIALIZED (
   SELECT a.query_id, a.doc_id AS id_a, b.doc_id AS id_b,
-         {_sql_cos("a.embedding", "b.embedding")} AS sim
+         {sql_cos("a.embedding", "b.embedding")} AS sim
   FROM cand a JOIN cand b
     ON a.query_id = b.query_id AND a.doc_id != b.doc_id
 ),
@@ -584,6 +385,7 @@ SQL_ANN_MMR_RERANK = _sql_mmr()
 # Hybrid fusion with the BM25 lexical side
 # ---------------------------------------------------------------------------
 
+
 def q_hybrid_bm25_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     query_docs = docs.where(F.col("doc_id") % QUERY_STRIDE == 0)
@@ -607,7 +409,7 @@ vec AS (
   SELECT query_id, neighbor_id AS doc_id, vec_rank FROM (
     SELECT q.query_id, e.vec_id AS neighbor_id,
       row_number() OVER (PARTITION BY q.query_id
-        ORDER BY {_sql_cos("q.qe", "e.embedding")} DESC, e.vec_id) AS vec_rank
+        ORDER BY {sql_cos("q.qe", "e.embedding")} DESC, e.vec_id) AS vec_rank
     FROM q CROSS JOIN embeddings e
   ) WHERE vec_rank <= {V.HYBRID_TOPN}
 ),
@@ -629,33 +431,19 @@ SELECT query_id, rank, doc_id, round(rrf, 6) AS rrf FROM (
 
 
 VECTORDB_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "ann_filtered_topk": q_ann_filtered_topk,
-    "ann_filtered_ivf_topk": q_ann_filtered_ivf_topk,
     "ann_range_search": q_ann_range_search,
     "sq_codes": q_sq_codes,
-    "ann_sq_topk": q_ann_sq_topk,
-    "ann_sq_refined_topk": q_ann_sq_refined_topk,
-    "ann_sq_recall": q_ann_sq_recall,
     "hybrid_rrf": q_hybrid_rrf,
     "bm25_topn": q_bm25_topn,
-    "ann_ivfsq_topk": q_ann_ivfsq_topk,
-    "ann_ivfsq_recall": q_ann_ivfsq_recall,
     "hybrid_bm25_rrf": q_hybrid_bm25_rrf,
     "ann_mmr_rerank": q_ann_mmr_rerank,
 }
 
 VECTORDB_ORACLES: dict[str, str] = {
-    "ann_filtered_topk": SQL_ANN_FILTERED_TOPK,
-    "ann_filtered_ivf_topk": SQL_ANN_FILTERED_IVF_TOPK,
     "ann_range_search": SQL_ANN_RANGE_SEARCH,
     "sq_codes": SQL_SQ_CODES,
-    "ann_sq_topk": SQL_ANN_SQ_TOPK,
-    "ann_sq_refined_topk": SQL_ANN_SQ_REFINED_TOPK,
-    "ann_sq_recall": SQL_ANN_SQ_RECALL,
     "hybrid_rrf": SQL_HYBRID_RRF,
     "bm25_topn": SQL_BM25_TOPN,
-    "ann_ivfsq_topk": SQL_ANN_IVFSQ_TOPK,
-    "ann_ivfsq_recall": SQL_ANN_IVFSQ_RECALL,
     "hybrid_bm25_rrf": SQL_HYBRID_BM25_RRF,
     "ann_mmr_rerank": SQL_ANN_MMR_RERANK,
 }
@@ -687,17 +475,26 @@ def _sql_bq_words(src: str, id_expr: str, vec: str, cte: str) -> str:
 )"""
 
 
-_SQL_BQ_CTES = f"""
-q AS ({SQL_Q_CTE}),
-{_sql_bq_words("q", "query_id", "qe", "bq_qw")},
+#: ``bq_cand``: the Hamming distance of every (query, vector) pair;
+#: needs ``q`` in scope
+_SQL_BQ_CAND = f"""{_sql_bq_words("q", "query_id", "qe", "bq_qw")},
 {_sql_bq_words("embeddings", "vec_id", "embedding", "bq_cw")},
 bq_cand AS (
   SELECT qw.id AS query_id, cw.id AS neighbor_id,
          CAST(sum(bit_count(xor(qw.wcode, cw.wcode))) AS INT) AS score
   FROM bq_qw qw JOIN bq_cw cw ON qw.w = cw.w
   GROUP BY qw.id, cw.id
-)
+)"""
+
+_SQL_BQ_CTES = f"""
+q AS ({SQL_Q_CTE}),
+{_SQL_BQ_CAND}
 """
+
+#: negated Hamming distance: ranking it in cosine's DESC order (ties →
+#: neighbor_id) is the Hamming pre-rank's ASC order
+_SQL_BQ_SIM_CTES = f"""{_SQL_BQ_CTES},
+bq_sim AS (SELECT query_id, neighbor_id, -score AS score FROM bq_cand)"""
 
 
 def q_bq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -733,191 +530,25 @@ SELECT query_id, rank, neighbor_id, score AS hamming FROM (
 """
 
 
-def q_ann_bq_refined_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = BQ.bq_refined_topk(
-        queries_view(spark, sf_dir), load_table(spark, sf_dir, "embeddings"), ANN_K
-    )
-    return out.select(
-        "query_id", "rank", "neighbor_id", F.round("score", 6).alias("score")
-    )
-
-
-SQL_ANN_BQ_REFINED_TOPK = f"""
-WITH {_SQL_BQ_CTES},
-cand AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT query_id, neighbor_id,
-      row_number() OVER (PARTITION BY query_id
-        ORDER BY score ASC, neighbor_id) AS r
-    FROM bq_cand
-  ) WHERE r <= {BQ.BQ_REFINE_R * ANN_K}
-)
-SELECT query_id, rank, neighbor_id, round(score, 6) AS score FROM (
-  SELECT c.query_id, c.neighbor_id,
-    {_sql_cos("q.qe", "e.embedding")} AS score,
-    CAST(row_number() OVER (PARTITION BY c.query_id
-      ORDER BY {_sql_cos("q.qe", "e.embedding")} DESC, c.neighbor_id) AS INT) AS rank
-  FROM cand c
-  JOIN embeddings e ON e.vec_id = c.neighbor_id
-  JOIN q ON q.query_id = c.query_id
-) WHERE rank <= {ANN_K}
-"""
-
-
-def q_ann_bq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall@K of the REFINED path vs the exact cosine top-K — the
-    number a deployment cares about (the raw Hamming rank is only the
-    pre-filter)."""
-    queries = queries_view(spark, sf_dir)
-    corpus = load_table(spark, sf_dir, "embeddings")
-    ann = BQ.bq_refined_topk(queries, corpus, ANN_K)
-    exact = exact_topk_fixture_cached(spark, sf_dir, ANN_K, "cosine")
-    return ann_recall(ann, exact, ANN_K)
-
-
-SQL_ANN_BQ_RECALL = f"""
-WITH {_SQL_BQ_CTES},
-cand AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT query_id, neighbor_id,
-      row_number() OVER (PARTITION BY query_id
-        ORDER BY score ASC, neighbor_id) AS r
-    FROM bq_cand
-  ) WHERE r <= {BQ.BQ_REFINE_R * ANN_K}
-),
-ann AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT c.query_id, c.neighbor_id,
-      row_number() OVER (PARTITION BY c.query_id
-        ORDER BY {_sql_cos("q.qe", "e.embedding")} DESC, c.neighbor_id) AS rank
-    FROM cand c
-    JOIN embeddings e ON e.vec_id = c.neighbor_id
-    JOIN q ON q.query_id = c.query_id
-  ) WHERE rank <= {ANN_K}
-),
-exact AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT q.query_id, e.vec_id AS neighbor_id,
-      row_number() OVER (PARTITION BY q.query_id
-        ORDER BY {_sql_cos("q.qe", "e.embedding")} DESC, e.vec_id) AS rank
-    FROM q CROSS JOIN embeddings e
-  ) WHERE rank <= {ANN_K}
-),
-hits AS (
-  SELECT exact.query_id, count(*) AS n_hit
-  FROM exact JOIN ann USING (query_id, neighbor_id) GROUP BY exact.query_id
-),
-per_q AS (
-  SELECT q2.query_id, CAST(coalesce(h.n_hit, 0) AS DOUBLE) / {ANN_K} AS recall
-  FROM (SELECT DISTINCT query_id FROM exact) q2 LEFT JOIN hits h USING (query_id)
-)
-SELECT round(avg(recall), 6) AS recall_at_k, count(*) AS n_queries FROM per_q
-"""
-
-def q_ann_ivfbq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF × 1-bit composition (operators/bq.ivfbq_topk): cell pruning
-    × Hamming pricing on D/8-byte signatures × exact cosine
-    refinement — the memory-lean sibling of ``ann_ivfpq_topk`` that
-    needs NO trained codebook."""
-    out = BQ.ivfbq_topk(
-        queries_view(spark, sf_dir), load_table(spark, sf_dir, "embeddings"), ANN_K
-    )
-    return out.select(
-        "query_id", "rank", "neighbor_id", F.round("score", 6).alias("score")
-    )
-
-
-def q_ann_ivfbq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    queries = queries_view(spark, sf_dir)
-    corpus = load_table(spark, sf_dir, "embeddings")
-    ann = BQ.ivfbq_topk(queries, corpus, ANN_K)
-    exact = exact_topk_fixture_cached(spark, sf_dir, ANN_K, "cosine")
-    return ann_recall(ann, exact, ANN_K)
-
-
-from .registry_simsearch import SQL_IVF_BODY as _SQL_IVF_BODY  # noqa: E402
-
 _SQL_IVFBQ_CTES = f"""
 q AS ({SQL_Q_CTE}),
-{_SQL_IVF_BODY},
+{SQL_IVF_BODY},
 {_sql_bq_words("q", "query_id", "qe", "bq_qw")},
 {_sql_bq_words("embeddings", "vec_id", "embedding", "bq_cw")},
-ivfbq_ham AS (
+ivfbq_sim AS (
   SELECT p.query_id, a.vec_id AS neighbor_id,
-         CAST(sum(bit_count(xor(qw.wcode, cw.wcode))) AS INT) AS hscore
+         -CAST(sum(bit_count(xor(qw.wcode, cw.wcode))) AS INT) AS score
   FROM probes p
   JOIN assigned a ON a.cell = p.cell
   JOIN bq_cw cw ON cw.id = a.vec_id
   JOIN bq_qw qw ON qw.id = p.query_id AND qw.w = cw.w
   GROUP BY p.query_id, a.vec_id
-),
-ivfbq_ids AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT query_id, neighbor_id,
-      row_number() OVER (PARTITION BY query_id
-        ORDER BY hscore ASC, neighbor_id) AS r
-    FROM ivfbq_ham
-  ) WHERE r <= {BQ.BQ_REFINE_R * ANN_K}
-),
-ivfbq_cand AS (
-  SELECT c.query_id, c.neighbor_id, {_sql_cos("q.qe", "e.embedding")} AS score
-  FROM ivfbq_ids c
-  JOIN embeddings e ON e.vec_id = c.neighbor_id
-  JOIN q ON q.query_id = c.query_id
-)
-"""
-
-SQL_ANN_IVFBQ_TOPK = f"""
-WITH {_SQL_IVFBQ_CTES}
-SELECT query_id, rank, neighbor_id, round(score, 6) AS score FROM (
-  SELECT query_id, neighbor_id, score,
-    CAST(row_number() OVER (PARTITION BY query_id
-      ORDER BY score DESC, neighbor_id) AS INT) AS rank
-  FROM ivfbq_cand
-) WHERE rank <= {ANN_K}
-"""
-
-SQL_ANN_IVFBQ_RECALL = f"""
-WITH {_SQL_IVFBQ_CTES},
-ann AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT query_id, neighbor_id,
-      row_number() OVER (PARTITION BY query_id
-        ORDER BY score DESC, neighbor_id) AS rank
-    FROM ivfbq_cand
-  ) WHERE rank <= {ANN_K}
-),
-exact AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT q.query_id, e.vec_id AS neighbor_id,
-      row_number() OVER (PARTITION BY q.query_id
-        ORDER BY {_sql_cos("q.qe", "e.embedding")} DESC, e.vec_id) AS rank
-    FROM q CROSS JOIN embeddings e
-  ) WHERE rank <= {ANN_K}
-),
-hits AS (
-  SELECT exact.query_id, count(*) AS n_hit
-  FROM exact JOIN ann USING (query_id, neighbor_id) GROUP BY exact.query_id
-),
-per_q AS (
-  SELECT q2.query_id, CAST(coalesce(h.n_hit, 0) AS DOUBLE) / {ANN_K} AS recall
-  FROM (SELECT DISTINCT query_id FROM exact) q2 LEFT JOIN hits h USING (query_id)
-)
-SELECT round(avg(recall), 6) AS recall_at_k, count(*) AS n_queries FROM per_q
-"""
+)"""
 
 VECTORDB_QUERIES["bq_codes"] = q_bq_codes
 VECTORDB_QUERIES["ann_bq_topk"] = q_ann_bq_topk
-VECTORDB_QUERIES["ann_bq_refined_topk"] = q_ann_bq_refined_topk
-VECTORDB_QUERIES["ann_bq_recall"] = q_ann_bq_recall
-VECTORDB_QUERIES["ann_ivfbq_topk"] = q_ann_ivfbq_topk
-VECTORDB_QUERIES["ann_ivfbq_recall"] = q_ann_ivfbq_recall
 VECTORDB_ORACLES["bq_codes"] = SQL_BQ_CODES
 VECTORDB_ORACLES["ann_bq_topk"] = SQL_ANN_BQ_TOPK
-VECTORDB_ORACLES["ann_bq_refined_topk"] = SQL_ANN_BQ_REFINED_TOPK
-VECTORDB_ORACLES["ann_bq_recall"] = SQL_ANN_BQ_RECALL
-VECTORDB_ORACLES["ann_ivfbq_topk"] = SQL_ANN_IVFBQ_TOPK
-VECTORDB_ORACLES["ann_ivfbq_recall"] = SQL_ANN_IVFBQ_RECALL
 
 
 # ---------------------------------------------------------------------------
@@ -940,8 +571,8 @@ MRL_D_TUNED, MRL_R_TUNED = 32, 5
 
 
 def _sql_mrl_cos(a: str, b: str, d: int = _MRL_D) -> str:
-    """Prefix cosine: _sql_cos over list_slice(·, 1, d') both sides."""
-    return _sql_cos(f"list_slice({a}, 1, {d})", f"list_slice({b}, 1, {d})")
+    """Prefix cosine: sql_cos over list_slice(·, 1, d') both sides."""
+    return sql_cos(f"list_slice({a}, 1, {d})", f"list_slice({b}, 1, {d})")
 
 
 def _sql_mrl_cand(d: int = _MRL_D) -> str:
@@ -968,159 +599,10 @@ def q_ann_mrl_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SQL_ANN_MRL_TOPK = f"""
-WITH {_SQL_MRL_CAND}
-SELECT query_id, rank, neighbor_id, round(score, 6) AS prefix_score FROM (
-  SELECT query_id, neighbor_id, score,
-    CAST(row_number() OVER (PARTITION BY query_id
-      ORDER BY score DESC, neighbor_id) AS INT) AS rank
-  FROM mrl_cand
-) WHERE rank <= {ANN_K}
-"""
-
-
-def q_ann_mrl_refined_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = MRL.mrl_refined_topk(
-        queries_view(spark, sf_dir), load_table(spark, sf_dir, "embeddings"), ANN_K
-    )
-    return out.select(
-        "query_id", "rank", "neighbor_id", F.round("score", 6).alias("score")
-    )
-
-
-SQL_ANN_MRL_REFINED_TOPK = f"""
-WITH {_SQL_MRL_CAND},
-cand AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT query_id, neighbor_id,
-      row_number() OVER (PARTITION BY query_id
-        ORDER BY score DESC, neighbor_id) AS r
-    FROM mrl_cand
-  ) WHERE r <= {MRL.MRL_REFINE_R * ANN_K}
-)
-SELECT query_id, rank, neighbor_id, round(score, 6) AS score FROM (
-  SELECT c.query_id, c.neighbor_id,
-    {_sql_cos("q.qe", "e.embedding")} AS score,
-    CAST(row_number() OVER (PARTITION BY c.query_id
-      ORDER BY {_sql_cos("q.qe", "e.embedding")} DESC, c.neighbor_id) AS INT) AS rank
-  FROM cand c
-  JOIN embeddings e ON e.vec_id = c.neighbor_id
-  JOIN q ON q.query_id = c.query_id
-) WHERE rank <= {ANN_K}
-"""
-
-
-def q_ann_mrl_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall@K of the refined prefix path vs the exact cosine top-K.
-    Floor estimate by construction: the fixture is isotropic (every
-    coordinate equally informative), where trained MRL embeddings
-    front-load the prefix — see operators/mrl.py."""
-    queries = queries_view(spark, sf_dir)
-    corpus = load_table(spark, sf_dir, "embeddings")
-    ann = MRL.mrl_refined_topk(queries, corpus, ANN_K)
-    exact = exact_topk_fixture_cached(spark, sf_dir, ANN_K, "cosine")
-    return ann_recall(ann, exact, ANN_K)
-
-
-SQL_ANN_MRL_RECALL = f"""
-WITH {_SQL_MRL_CAND},
-cand AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT query_id, neighbor_id,
-      row_number() OVER (PARTITION BY query_id
-        ORDER BY score DESC, neighbor_id) AS r
-    FROM mrl_cand
-  ) WHERE r <= {MRL.MRL_REFINE_R * ANN_K}
-),
-ann AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT c.query_id, c.neighbor_id,
-      row_number() OVER (PARTITION BY c.query_id
-        ORDER BY {_sql_cos("q.qe", "e.embedding")} DESC, c.neighbor_id) AS rank
-    FROM cand c
-    JOIN embeddings e ON e.vec_id = c.neighbor_id
-    JOIN q ON q.query_id = c.query_id
-  ) WHERE rank <= {ANN_K}
-),
-exact AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT q.query_id, e.vec_id AS neighbor_id,
-      row_number() OVER (PARTITION BY q.query_id
-        ORDER BY {_sql_cos("q.qe", "e.embedding")} DESC, e.vec_id) AS rank
-    FROM q CROSS JOIN embeddings e
-  ) WHERE rank <= {ANN_K}
-),
-hits AS (
-  SELECT exact.query_id, count(*) AS n_hit
-  FROM exact JOIN ann USING (query_id, neighbor_id) GROUP BY exact.query_id
-),
-per_q AS (
-  SELECT q2.query_id, CAST(coalesce(h.n_hit, 0) AS DOUBLE) / {ANN_K} AS recall
-  FROM (SELECT DISTINCT query_id FROM exact) q2 LEFT JOIN hits h USING (query_id)
-)
-SELECT round(avg(recall), 6) AS recall_at_k, count(*) AS n_queries FROM per_q
-"""
-
-def q_ann_mrl_recall_tuned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall@K at the swept (d', R) optimum — the registered tuned
-    point of the dimension-truncation frontier, mirroring the
-    refine-family `*_tuned_metrics` convention."""
-    queries = queries_view(spark, sf_dir)
-    corpus = load_table(spark, sf_dir, "embeddings")
-    ann = MRL.mrl_refined_topk(
-        queries, corpus, ANN_K, r=MRL_R_TUNED, d_keep=MRL_D_TUNED
-    )
-    exact = exact_topk_fixture_cached(spark, sf_dir, ANN_K, "cosine")
-    return ann_recall(ann, exact, ANN_K)
-
-
-SQL_ANN_MRL_RECALL_TUNED = f"""
-WITH {_sql_mrl_cand(MRL_D_TUNED)},
-cand AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT query_id, neighbor_id,
-      row_number() OVER (PARTITION BY query_id
-        ORDER BY score DESC, neighbor_id) AS r
-    FROM mrl_cand
-  ) WHERE r <= {MRL_R_TUNED * ANN_K}
-),
-ann AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT c.query_id, c.neighbor_id,
-      row_number() OVER (PARTITION BY c.query_id
-        ORDER BY {_sql_cos("q.qe", "e.embedding")} DESC, c.neighbor_id) AS rank
-    FROM cand c
-    JOIN embeddings e ON e.vec_id = c.neighbor_id
-    JOIN q ON q.query_id = c.query_id
-  ) WHERE rank <= {ANN_K}
-),
-exact AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT q.query_id, e.vec_id AS neighbor_id,
-      row_number() OVER (PARTITION BY q.query_id
-        ORDER BY {_sql_cos("q.qe", "e.embedding")} DESC, e.vec_id) AS rank
-    FROM q CROSS JOIN embeddings e
-  ) WHERE rank <= {ANN_K}
-),
-hits AS (
-  SELECT exact.query_id, count(*) AS n_hit
-  FROM exact JOIN ann USING (query_id, neighbor_id) GROUP BY exact.query_id
-),
-per_q AS (
-  SELECT q2.query_id, CAST(coalesce(h.n_hit, 0) AS DOUBLE) / {ANN_K} AS recall
-  FROM (SELECT DISTINCT query_id FROM exact) q2 LEFT JOIN hits h USING (query_id)
-)
-SELECT round(avg(recall), 6) AS recall_at_k, count(*) AS n_queries FROM per_q
-"""
-
 VECTORDB_QUERIES["ann_mrl_topk"] = q_ann_mrl_topk
-VECTORDB_QUERIES["ann_mrl_refined_topk"] = q_ann_mrl_refined_topk
-VECTORDB_QUERIES["ann_mrl_recall"] = q_ann_mrl_recall
-VECTORDB_QUERIES["ann_mrl_recall_tuned"] = q_ann_mrl_recall_tuned
-VECTORDB_ORACLES["ann_mrl_topk"] = SQL_ANN_MRL_TOPK
-VECTORDB_ORACLES["ann_mrl_refined_topk"] = SQL_ANN_MRL_REFINED_TOPK
-VECTORDB_ORACLES["ann_mrl_recall"] = SQL_ANN_MRL_RECALL
-VECTORDB_ORACLES["ann_mrl_recall_tuned"] = SQL_ANN_MRL_RECALL_TUNED
+VECTORDB_ORACLES["ann_mrl_topk"] = f"""
+WITH {_SQL_MRL_CAND}
+{rank_sql("mrl_cand", "DESC", ANN_K, alias="prefix_score")}"""
 
 
 # ---------------------------------------------------------------------------
@@ -1148,26 +630,13 @@ mut_live AS (
 """
 
 
-def q_ann_delta_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    corpus = load_table(spark, sf_dir, "embeddings")
-    ups, dels = MUT.fixture_mutation(corpus)
-    out = MUT.mutated_topk(queries_view(spark, sf_dir), corpus, ups, dels, ANN_K)
-    return out.select(
-        "query_id", "rank", "neighbor_id", F.round("score", 6).alias("score")
-    )
-
-
-SQL_ANN_DELTA_TOPK = f"""
-WITH q AS ({SQL_Q_CTE}),
-{_SQL_MUT_LIVE}
-SELECT query_id, rank, neighbor_id, round(score, 6) AS score FROM (
-  SELECT q.query_id, l.vec_id AS neighbor_id,
-    {_sql_cos("q.qe", "l.embedding")} AS score,
-    CAST(row_number() OVER (PARTITION BY q.query_id
-      ORDER BY {_sql_cos("q.qe", "l.embedding")} DESC, l.vec_id) AS INT) AS rank
+_SQL_DELTA_CTES = f"""
+q AS ({SQL_Q_CTE}),
+{_SQL_MUT_LIVE},
+delta_cand AS (
+  SELECT q.query_id, l.vec_id AS neighbor_id, {sql_cos("q.qe", "l.embedding")} AS score
   FROM q CROSS JOIN mut_live l
-) WHERE rank <= {ANN_K}
-"""
+)"""
 
 
 def q_ivf_delta_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1183,7 +652,7 @@ massigned AS (
   SELECT vec_id, is_up, centroid_id AS cell FROM (
     SELECT l.vec_id, l.is_up, c.centroid_id,
       row_number() OVER (PARTITION BY l.vec_id
-        ORDER BY {_sql_dist2("l.embedding", "c.cvec")} ASC, c.centroid_id ASC) AS r
+        ORDER BY {sql_dist2("l.embedding", "c.cvec")} ASC, c.centroid_id ASC) AS r
     FROM mut_live l CROSS JOIN cents c
   ) WHERE r = 1
 )
@@ -1194,9 +663,7 @@ SELECT cell,
 FROM massigned GROUP BY cell ORDER BY cell
 """
 
-VECTORDB_QUERIES["ann_delta_topk"] = q_ann_delta_topk
 VECTORDB_QUERIES["ivf_delta_compact"] = q_ivf_delta_compact
-VECTORDB_ORACLES["ann_delta_topk"] = SQL_ANN_DELTA_TOPK
 VECTORDB_ORACLES["ivf_delta_compact"] = SQL_IVF_DELTA_COMPACT
 
 
@@ -1217,7 +684,7 @@ def _sql_maxsim(qe: str, de: str) -> str:
     for i in range(MV.MV_M):
         qi = f"list_slice({qe}, {i * _MV_SUB + 1}, {(i + 1) * _MV_SUB})"
         coss = [
-            _sql_cos(qi, f"list_slice({de}, {j * _MV_SUB + 1}, {(j + 1) * _MV_SUB})")
+            sql_cos(qi, f"list_slice({de}, {j * _MV_SUB + 1}, {(j + 1) * _MV_SUB})")
             for j in range(MV.MV_M)
         ]
         terms.append("greatest(" + ", ".join(coss) + ")")
@@ -1229,7 +696,7 @@ def _sql_slice_term(qe: str, de: str, i: int) -> str:
     the M cosines between query slice i and every doc slice."""
     qi = f"list_slice({qe}, {i * _MV_SUB + 1}, {(i + 1) * _MV_SUB})"
     coss = [
-        _sql_cos(qi, f"list_slice({de}, {j * _MV_SUB + 1}, {(j + 1) * _MV_SUB})")
+        sql_cos(qi, f"list_slice({de}, {j * _MV_SUB + 1}, {(j + 1) * _MV_SUB})")
         for j in range(MV.MV_M)
     ]
     return "greatest(" + ", ".join(coss) + ")"
@@ -1308,6 +775,7 @@ SELECT query_id, rank, neighbor_id, round(maxsim, 6) AS maxsim FROM (
 ) WHERE rank <= {MV.MAXSIM_K}
 """
 
+
 def q_ann_maxsim_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pool-sufficiency of the two-stage MaxSim: Recall@K of the
     pooled re-rank against EXHAUSTIVE MaxSim over the corpus — the
@@ -1325,10 +793,13 @@ def q_ann_maxsim_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ann_recall(ann, exact, MV.MAXSIM_K)
 
 
-SQL_ANN_MAXSIM_RECALL = f"""
-WITH q AS ({SQL_Q_CTE}),
+def _sql_maxsim_recall(ctes: str, pool: str) -> str:
+    """Recall@MAXSIM_K of the MaxSim re-rank of ``pool`` (the union
+    pool query, over ``ctes``) against exhaustive MaxSim."""
+    return f"""
+WITH {ctes},
 pool AS (
-  {_SQL_MAXSIM_UNION_POOL}
+  {pool}
 ),
 allms AS (
   SELECT q.query_id, e.vec_id AS neighbor_id,
@@ -1352,16 +823,12 @@ exact AS (
     FROM allms
   ) WHERE rank <= {MV.MAXSIM_K}
 ),
-hits AS (
-  SELECT exact.query_id, count(*) AS n_hit
-  FROM exact JOIN ann USING (query_id, neighbor_id) GROUP BY exact.query_id
-),
-per_q AS (
-  SELECT q2.query_id, CAST(coalesce(h.n_hit, 0) AS DOUBLE) / {MV.MAXSIM_K} AS recall
-  FROM (SELECT DISTINCT query_id FROM exact) q2 LEFT JOIN hits h USING (query_id)
-)
-SELECT round(avg(recall), 6) AS recall_at_k, count(*) AS n_queries FROM per_q
+{recall_tail("exact", MV.MAXSIM_K)}
+{RECALL_SELECT}
 """
+
+
+SQL_ANN_MAXSIM_RECALL = _sql_maxsim_recall(f"q AS ({SQL_Q_CTE})", _SQL_MAXSIM_UNION_POOL)
 
 VECTORDB_QUERIES["ann_maxsim_rerank"] = q_ann_maxsim_rerank
 VECTORDB_QUERIES["ann_maxsim_recall"] = q_ann_maxsim_recall
@@ -1380,11 +847,11 @@ def q_ann_maxsim_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     same float32 slices, order-independent maxes, fixed-order Σ —
     so the oracle is shared; ``tests/test_layout.py`` asserts the
     serve plan's corpus access reads only the bag columns."""
-    from .registry_simsearch import _index_store_path
+    from .session import artifact_dir
     from .sources.layout import read_token_bags, write_token_bags
 
     corpus = load_table(spark, sf_dir, "embeddings")
-    path = _index_store_path(
+    path = artifact_dir(
         spark, sf_dir, "token-bags", lambda p: write_token_bags(corpus, p)
     )
     bags = read_token_bags(spark, path)
@@ -1417,15 +884,6 @@ _CASC_SQ_B = _DIM + 8             # int8 codes + one float64 scale
 _CASC_FULL_B = 4 * _DIM           # fp32 vector
 
 
-def q_ann_cascade_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = BQ.cascade_topk(
-        queries_view(spark, sf_dir), load_table(spark, sf_dir, "embeddings"), ANN_K
-    )
-    return out.select(
-        "query_id", "rank", "neighbor_id", F.round("score", 6).alias("score")
-    )
-
-
 #: stages 1+2 as CTEs: Hamming pool over bq_cand, then int8-recon
 #: cosine narrowing — same tie-breaks (score, neighbor_id) as the
 #: Spark topk_per_query calls they replay.
@@ -1442,7 +900,7 @@ casc1 AS (
   SELECT query_id, neighbor_id FROM (
     SELECT c.query_id, c.neighbor_id,
       row_number() OVER (PARTITION BY c.query_id
-        ORDER BY {_sql_cos("q.qe", "r.recon")} DESC, c.neighbor_id) AS r
+        ORDER BY {sql_cos("q.qe", "r.recon")} DESC, c.neighbor_id) AS r
     FROM casc2 c
     JOIN recon r ON r.vec_id = c.neighbor_id
     JOIN q ON q.query_id = c.query_id
@@ -1450,20 +908,16 @@ casc1 AS (
 )
 """
 
-SQL_ANN_CASCADE_TOPK = f"""
-WITH {_SQL_BQ_CTES},
+#: stage 3: exact cosine over the stage-2 pool
+_SQL_CASCADE_CTES = f"""{_SQL_BQ_CTES},
 {_SQL_SQ_RECON},
-{_SQL_CASCADE_CAND}
-SELECT query_id, rank, neighbor_id, round(score, 6) AS score FROM (
-  SELECT c.query_id, c.neighbor_id,
-    {_sql_cos("q.qe", "e.embedding")} AS score,
-    CAST(row_number() OVER (PARTITION BY c.query_id
-      ORDER BY {_sql_cos("q.qe", "e.embedding")} DESC, c.neighbor_id) AS INT) AS rank
+{_SQL_CASCADE_CAND},
+casc_cand AS (
+  SELECT c.query_id, c.neighbor_id, {sql_cos("q.qe", "e.embedding")} AS score
   FROM casc1 c
   JOIN embeddings e ON e.vec_id = c.neighbor_id
   JOIN q ON q.query_id = c.query_id
-) WHERE rank <= {ANN_K}
-"""
+)"""
 
 
 def q_ann_cascade_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1506,30 +960,16 @@ ann AS (
   SELECT query_id, neighbor_id FROM (
     SELECT c.query_id, c.neighbor_id,
       row_number() OVER (PARTITION BY c.query_id
-        ORDER BY {_sql_cos("q.qe", "e.embedding")} DESC, c.neighbor_id) AS rank
+        ORDER BY {sql_cos("q.qe", "e.embedding")} DESC, c.neighbor_id) AS rank
     FROM casc1 c
     JOIN embeddings e ON e.vec_id = c.neighbor_id
     JOIN q ON q.query_id = c.query_id
   ) WHERE rank <= {ANN_K}
 ),
-exact AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT q.query_id, e.vec_id AS neighbor_id,
-      row_number() OVER (PARTITION BY q.query_id
-        ORDER BY {_sql_cos("q.qe", "e.embedding")} DESC, e.vec_id) AS rank
-    FROM q CROSS JOIN embeddings e
-  ) WHERE rank <= {ANN_K}
-),
-hits AS (
-  SELECT exact.query_id, count(*) AS n_hit
-  FROM exact JOIN ann USING (query_id, neighbor_id) GROUP BY exact.query_id
-),
-per_q AS (
-  SELECT q2.query_id, CAST(coalesce(h.n_hit, 0) AS DOUBLE) / {ANN_K} AS recall
-  FROM (SELECT DISTINCT query_id FROM exact) q2 LEFT JOIN hits h USING (query_id)
-),
+{exact_cte("cosine", ANN_K)},
+{recall_tail("exact", ANN_K)},
 rec AS (
-  SELECT round(avg(recall), 6) AS recall_at_k, count(*) AS n_queries FROM per_q
+  {RECALL_SELECT}
 ),
 stats AS (SELECT count(*) AS n FROM embeddings)
 SELECT recall_at_k, n_queries,
@@ -1543,9 +983,7 @@ SELECT recall_at_k, n_queries,
 FROM rec CROSS JOIN stats
 """
 
-VECTORDB_QUERIES["ann_cascade_topk"] = q_ann_cascade_topk
 VECTORDB_QUERIES["ann_cascade_metrics"] = q_ann_cascade_metrics
-VECTORDB_ORACLES["ann_cascade_topk"] = SQL_ANN_CASCADE_TOPK
 VECTORDB_ORACLES["ann_cascade_metrics"] = SQL_ANN_CASCADE_METRICS
 
 
@@ -1553,6 +991,7 @@ VECTORDB_ORACLES["ann_cascade_metrics"] = SQL_ANN_CASCADE_METRICS
 # TF-IDF ranked retrieval (operators/vectordb.tfidf_topn — the
 # un-normalized lexical scorer beside BM25)
 # ---------------------------------------------------------------------------
+
 
 def q_tfidf_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
@@ -1605,44 +1044,10 @@ VECTORDB_ORACLES["tfidf_topn"] = SQL_TFIDF_TOPN
 
 
 # ---------------------------------------------------------------------------
-# Cascade serve path from stored sketch tables
-# ---------------------------------------------------------------------------
-
-def q_ann_cascade_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Serve-path twin of ``ann_cascade_topk``: the 1-bit signature
-    table and the int8 code table are WRITTEN once per (session,
-    fixture dir) as parquet index artifacts (``sources/layout.
-    write_cascade_index``) and the query plan scans the STORED
-    sketches — the offline-encode/online-serve split of a production
-    deployment, with zero training in the offline half. Results are
-    identical to the in-query encode, so the oracle is shared;
-    ``tests/test_layout.py`` asserts neither sketch scan reads a raw
-    vector column."""
-    from .registry_simsearch import _index_store_path
-    from .sources.layout import read_cascade_index, write_cascade_index
-
-    corpus = load_table(spark, sf_dir, "embeddings")
-    path = _index_store_path(
-        spark, sf_dir, "cascade-index", lambda p: write_cascade_index(corpus, p)
-    )
-    sigs, codes = read_cascade_index(spark, path)
-    out = BQ.cascade_topk_from_index(
-        queries_view(spark, sf_dir), corpus, sigs, codes, ANN_K
-    )
-    return out.select(
-        "query_id", "rank", "neighbor_id", F.round("score", 6).alias("score")
-    )
-
-
-VECTORDB_QUERIES["ann_cascade_index_topk"] = q_ann_cascade_index_topk
-#: same result as the in-query encode by construction
-VECTORDB_ORACLES["ann_cascade_index_topk"] = SQL_ANN_CASCADE_TOPK
-
-
-# ---------------------------------------------------------------------------
 # IVF × MaxSim: the full PLAID composition (stage-0 centroid pruning →
 # per-slice bounded pool → exact MaxSim re-rank).
 # ---------------------------------------------------------------------------
+
 
 def q_ann_ivf_maxsim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PLAID end-to-end: IVF cells prune the scan, the per-slice union
@@ -1715,43 +1120,7 @@ def q_ann_ivf_maxsim_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ann_recall(ann, exact, MV.MAXSIM_K)
 
 
-SQL_ANN_IVF_MAXSIM_RECALL = f"""
-WITH {SQL_IVF_CTES},
-pool AS (
-  {_sql_ivf_maxsim_pool()}
-),
-allms AS (
-  SELECT q.query_id, e.vec_id AS neighbor_id,
-         {_sql_maxsim("q.qe", "e.embedding")} AS maxsim
-  FROM q CROSS JOIN embeddings e
-),
-ann AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT a.query_id, a.neighbor_id,
-      row_number() OVER (PARTITION BY a.query_id
-        ORDER BY a.maxsim DESC, a.neighbor_id) AS rank
-    FROM allms a JOIN pool p
-      ON p.query_id = a.query_id AND p.neighbor_id = a.neighbor_id
-  ) WHERE rank <= {MV.MAXSIM_K}
-),
-exact AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT query_id, neighbor_id,
-      row_number() OVER (PARTITION BY query_id
-        ORDER BY maxsim DESC, neighbor_id) AS rank
-    FROM allms
-  ) WHERE rank <= {MV.MAXSIM_K}
-),
-hits AS (
-  SELECT exact.query_id, count(*) AS n_hit
-  FROM exact JOIN ann USING (query_id, neighbor_id) GROUP BY exact.query_id
-),
-per_q AS (
-  SELECT q2.query_id, CAST(coalesce(h.n_hit, 0) AS DOUBLE) / {MV.MAXSIM_K} AS recall
-  FROM (SELECT DISTINCT query_id FROM exact) q2 LEFT JOIN hits h USING (query_id)
-)
-SELECT round(avg(recall), 6) AS recall_at_k, count(*) AS n_queries FROM per_q
-"""
+SQL_ANN_IVF_MAXSIM_RECALL = _sql_maxsim_recall(SQL_IVF_CTES, _sql_ivf_maxsim_pool())
 
 VECTORDB_QUERIES["ann_ivf_maxsim_topk"] = q_ann_ivf_maxsim_topk
 VECTORDB_ORACLES["ann_ivf_maxsim_topk"] = SQL_ANN_IVF_MAXSIM_TOPK
@@ -1768,8 +1137,6 @@ VECTORDB_ORACLES["ann_ivf_maxsim_recall"] = SQL_ANN_IVF_MAXSIM_RECALL
 # ---------------------------------------------------------------------------
 
 from .operators import rabitq as RBT  # noqa: E402
-from .registry_simsearch import _sql_dot as _sql_rbt_dot  # noqa: E402
-from .registry_simsearch import _sql_plane_lit as _sql_rbt_plane  # noqa: E402
 
 
 def _sql_rbt_rot_list(vec: str) -> str:
@@ -1779,30 +1146,9 @@ def _sql_rbt_rot_list(vec: str) -> str:
 
     return (
         "["
-        + ", ".join(_sql_rbt_dot(vec, _sql_rbt_plane(row)) for row in RABITQ_ROTATION)
+        + ", ".join(sql_dot(vec, _sql_plane_lit(row)) for row in RABITQ_ROTATION)
         + "]"
     )
-
-
-def q_ann_rabitq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = RBT.rabitq_topk(
-        queries_view(spark, sf_dir), load_table(spark, sf_dir, "embeddings"), ANN_K
-    )
-    return out.select(
-        "query_id", "rank", "neighbor_id", F.round("score", 6).alias("score")
-    )
-
-
-def q_ann_rabitq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall@K of the refined RaBitQ path vs exact cosine — read next
-    to ``ann_bq_recall``: same candidate budget (R·K), same re-rank;
-    the only change is the pre-rank estimator (rotated scalar-corrected
-    signed dot vs raw Hamming)."""
-    queries = queries_view(spark, sf_dir)
-    corpus = load_table(spark, sf_dir, "embeddings")
-    ann = RBT.rabitq_topk(queries, corpus, ANN_K)
-    exact = exact_topk_fixture_cached(spark, sf_dir, ANN_K, "cosine")
-    return ann_recall(ann, exact, ANN_K)
 
 
 def _rbt_base_ctes() -> str:
@@ -1832,133 +1178,22 @@ _SQL_RBT_EST = (
 )
 
 
-def _rbt_tail_ctes(est_cte: str, r: int | None = None) -> str:
-    """rank-r·K ids → exact cosine re-rank, over any estimator CTE
-    named ``{est_cte}`` with (query_id, neighbor_id, score)."""
-    r = RBT.RABITQ_REFINE_R if r is None else r
-    return f"""
-rbt_ids AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT query_id, neighbor_id,
-      row_number() OVER (PARTITION BY query_id
-        ORDER BY score DESC, neighbor_id) AS r
-    FROM {est_cte}
-  ) WHERE r <= {r * ANN_K}
-),
-rbt_cand AS (
-  SELECT c.query_id, c.neighbor_id, {_sql_cos("q.qe", "e.embedding")} AS score
-  FROM rbt_ids c
-  JOIN embeddings e ON e.vec_id = c.neighbor_id
-  JOIN q ON q.query_id = c.query_id
-)"""
-
-
-def _rbt_ctes(r: int | None = None) -> str:
-    return f"""
+_SQL_RBT_CTES = f"""
 q AS ({SQL_Q_CTE}),
 {_rbt_base_ctes()},
 rbt_est AS (
   SELECT q2.query_id, c.vec_id AS neighbor_id, {_SQL_RBT_EST} AS score
   FROM rbt_corp c CROSS JOIN rbt_q q2
-),
-{_rbt_tail_ctes("rbt_est", r)}
-"""
-
-
-SQL_ANN_RABITQ_TOPK = f"""
-WITH {_rbt_ctes()}
-SELECT query_id, rank, neighbor_id, round(score, 6) AS score FROM (
-  SELECT query_id, neighbor_id, score,
-    CAST(row_number() OVER (PARTITION BY query_id
-      ORDER BY score DESC, neighbor_id) AS INT) AS rank
-  FROM rbt_cand
-) WHERE rank <= {ANN_K}
-"""
-
-def _rbt_recall_sql(r: int | None = None) -> str:
-    return f"""
-WITH {_rbt_ctes(r)},
-ann AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT query_id, neighbor_id,
-      row_number() OVER (PARTITION BY query_id
-        ORDER BY score DESC, neighbor_id) AS rank
-    FROM rbt_cand
-  ) WHERE rank <= {ANN_K}
-),
-exact AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT q.query_id, e.vec_id AS neighbor_id,
-      row_number() OVER (PARTITION BY q.query_id
-        ORDER BY {_sql_cos("q.qe", "e.embedding")} DESC, e.vec_id) AS rank
-    FROM q CROSS JOIN embeddings e
-  ) WHERE rank <= {ANN_K}
-),
-hits AS (
-  SELECT exact.query_id, count(*) AS n_hit
-  FROM exact JOIN ann USING (query_id, neighbor_id) GROUP BY exact.query_id
-),
-per_q AS (
-  SELECT q2.query_id, CAST(coalesce(h.n_hit, 0) AS DOUBLE) / {ANN_K} AS recall
-  FROM (SELECT DISTINCT query_id FROM exact) q2 LEFT JOIN hits h USING (query_id)
-)
-SELECT round(avg(recall), 6) AS recall_at_k, count(*) AS n_queries FROM per_q
-"""
-
-
-SQL_ANN_RABITQ_RECALL = _rbt_recall_sql()
+)"""
 
 #: the swept frontier point (tools/sweep_rabitq_r.py): R=5 reaches
 #: 0.7975 at sf0.1 — above Hamming-BQ at R=12 with 2.4× fewer
 #: full-precision fetches
 RABITQ_R_TUNED = 5
 
-
-def q_ann_rabitq_recall_tuned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall@K of the RaBitQ refined path at the swept operating
-    point R=5 (house style: measured optima get a registered
-    ``_tuned`` row — `reports/sweep_rabitq_r.csv`)."""
-    queries = queries_view(spark, sf_dir)
-    corpus = load_table(spark, sf_dir, "embeddings")
-    ann = RBT.rabitq_topk(queries, corpus, ANN_K, r=RABITQ_R_TUNED)
-    exact = exact_topk_fixture_cached(spark, sf_dir, ANN_K, "cosine")
-    return ann_recall(ann, exact, ANN_K)
-
-
-VECTORDB_QUERIES["ann_rabitq_recall_tuned"] = q_ann_rabitq_recall_tuned
-VECTORDB_ORACLES["ann_rabitq_recall_tuned"] = _rbt_recall_sql(RABITQ_R_TUNED)
-
-VECTORDB_QUERIES["ann_rabitq_topk"] = q_ann_rabitq_topk
-VECTORDB_ORACLES["ann_rabitq_topk"] = SQL_ANN_RABITQ_TOPK
-VECTORDB_QUERIES["ann_rabitq_recall"] = q_ann_rabitq_recall
-VECTORDB_ORACLES["ann_rabitq_recall"] = SQL_ANN_RABITQ_RECALL
-
-
-def q_ann_ivfrabitq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF × RaBitQ (operators/rabitq.ivfrabitq_topk): cell pruning ×
-    scalar-corrected 1-bit estimator × exact cosine refinement — the
-    memory-lean production pairing; compare ``ann_ivfbq_topk`` (same
-    cells, raw Hamming pricing)."""
-    out = RBT.ivfrabitq_topk(
-        queries_view(spark, sf_dir), load_table(spark, sf_dir, "embeddings"), ANN_K
-    )
-    return out.select(
-        "query_id", "rank", "neighbor_id", F.round("score", 6).alias("score")
-    )
-
-
-def q_ann_ivfrabitq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    queries = queries_view(spark, sf_dir)
-    corpus = load_table(spark, sf_dir, "embeddings")
-    ann = RBT.ivfrabitq_topk(queries, corpus, ANN_K)
-    exact = exact_topk_fixture_cached(spark, sf_dir, ANN_K, "cosine")
-    return ann_recall(ann, exact, ANN_K)
-
-
-def _ivfrbt_ctes() -> str:
-    return f"""
+_SQL_IVFRBT_CTES = f"""
 q AS ({SQL_Q_CTE}),
-{_SQL_IVF_BODY},
+{SQL_IVF_BODY},
 {_rbt_base_ctes()},
 ivfrbt_est AS (
   SELECT p.query_id, c.vec_id AS neighbor_id, {_SQL_RBT_EST} AS score
@@ -1966,54 +1201,7 @@ ivfrbt_est AS (
   JOIN assigned a ON a.cell = p.cell
   JOIN rbt_corp c ON c.vec_id = a.vec_id
   JOIN rbt_q q2 ON q2.query_id = p.query_id
-),
-{_rbt_tail_ctes("ivfrbt_est")}
-"""
-
-
-SQL_ANN_IVFRABITQ_TOPK = f"""
-WITH {_ivfrbt_ctes()}
-SELECT query_id, rank, neighbor_id, round(score, 6) AS score FROM (
-  SELECT query_id, neighbor_id, score,
-    CAST(row_number() OVER (PARTITION BY query_id
-      ORDER BY score DESC, neighbor_id) AS INT) AS rank
-  FROM rbt_cand
-) WHERE rank <= {ANN_K}
-"""
-
-SQL_ANN_IVFRABITQ_RECALL = f"""
-WITH {_ivfrbt_ctes()},
-ann AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT query_id, neighbor_id,
-      row_number() OVER (PARTITION BY query_id
-        ORDER BY score DESC, neighbor_id) AS rank
-    FROM rbt_cand
-  ) WHERE rank <= {ANN_K}
-),
-exact AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT q.query_id, e.vec_id AS neighbor_id,
-      row_number() OVER (PARTITION BY q.query_id
-        ORDER BY {_sql_cos("q.qe", "e.embedding")} DESC, e.vec_id) AS rank
-    FROM q CROSS JOIN embeddings e
-  ) WHERE rank <= {ANN_K}
-),
-hits AS (
-  SELECT exact.query_id, count(*) AS n_hit
-  FROM exact JOIN ann USING (query_id, neighbor_id) GROUP BY exact.query_id
-),
-per_q AS (
-  SELECT q2.query_id, CAST(coalesce(h.n_hit, 0) AS DOUBLE) / {ANN_K} AS recall
-  FROM (SELECT DISTINCT query_id FROM exact) q2 LEFT JOIN hits h USING (query_id)
-)
-SELECT round(avg(recall), 6) AS recall_at_k, count(*) AS n_queries FROM per_q
-"""
-
-VECTORDB_QUERIES["ann_ivfrabitq_topk"] = q_ann_ivfrabitq_topk
-VECTORDB_ORACLES["ann_ivfrabitq_topk"] = SQL_ANN_IVFRABITQ_TOPK
-VECTORDB_QUERIES["ann_ivfrabitq_recall"] = q_ann_ivfrabitq_recall
-VECTORDB_ORACLES["ann_ivfrabitq_recall"] = SQL_ANN_IVFRABITQ_RECALL
+)"""
 
 
 def q_rabitq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2058,34 +1246,6 @@ VECTORDB_QUERIES["rabitq_codes"] = q_rabitq_codes
 VECTORDB_ORACLES["rabitq_codes"] = SQL_RABITQ_CODES
 
 
-def q_ann_rabitq_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Serve-path twin of ``ann_rabitq_topk``: the compact code
-    table (packed sign words + per-vector DOUBLE scalar — 16 B/vector
-    stored; 12 B is the conceptual bits+float32 figure) is WRITTEN
-    once (``layout.write_rabitq_index``) and the estimator scan reads
-    ONLY the stored table, unpacking signs in codegen; raw vectors are
-    touched exactly once in the r·K exact re-rank. Result-identical
-    to the in-session path — shares its oracle."""
-    from .operators.rabitq import rabitq_topk_from_index
-    from .registry_simsearch import _index_store_path
-    from .sources.layout import write_rabitq_index
-
-    corpus = load_table(spark, sf_dir, "embeddings")
-    path = _index_store_path(
-        spark, sf_dir, "rabitq-index", lambda p: write_rabitq_index(corpus, p)
-    )
-    out = rabitq_topk_from_index(
-        spark, path, queries_view(spark, sf_dir), corpus, ANN_K
-    )
-    return out.select(
-        "query_id", "rank", "neighbor_id", F.round("score", 6).alias("score")
-    )
-
-
-VECTORDB_QUERIES["ann_rabitq_index_topk"] = q_ann_rabitq_index_topk
-VECTORDB_ORACLES["ann_rabitq_index_topk"] = SQL_ANN_RABITQ_TOPK
-
-
 # ---------------------------------------------------------------------------
 # Selectivity-routed filtered ANN (r09 verdict #7, ACORN-style)
 # ---------------------------------------------------------------------------
@@ -2126,15 +1286,9 @@ def q_ann_filtered_routed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 SQL_ANN_FILTERED_ROUTED_TOPK = f"""
-WITH q AS ({SQL_Q_CTE})
-SELECT query_id, rank, neighbor_id, round(score, 6) AS score FROM (
-  SELECT q.query_id, e.vec_id AS neighbor_id,
-    {_sql_cos("q.qe", "e.embedding")} AS score,
-    CAST(row_number() OVER (PARTITION BY q.query_id
-      ORDER BY {_sql_cos("q.qe", "e.embedding")} DESC, e.vec_id) AS INT) AS rank
-  FROM q CROSS JOIN embeddings e WHERE e.{_SQL_ROUTED_FILTER}
-) WHERE rank <= {ANN_K}
-"""
+WITH q AS ({SQL_Q_CTE}),
+{_sql_filtered_cand(_SQL_ROUTED_FILTER)}
+{rank_sql("filt_cand", "DESC", ANN_K)}"""
 
 VECTORDB_QUERIES["ann_filtered_routed_topk"] = q_ann_filtered_routed_topk
 VECTORDB_ORACLES["ann_filtered_routed_topk"] = SQL_ANN_FILTERED_ROUTED_TOPK
@@ -2199,7 +1353,7 @@ def _sql_ivf_rebalance() -> str:
     from .operators.simsearch import IVF_STRIDE
 
     rb_km_ctes, rb_km_final = kmeans_sql_ctes(
-        "rbkm_pts", "rbkm", IVF_STRIDE, iters=KMEANS_ITERS, dist2_sql=_sql_dist2
+        "rbkm_pts", "rbkm", IVF_STRIDE, iters=KMEANS_ITERS, dist2_sql=sql_dist2
     )
     return f"""
 WITH {SQL_IVF_CTES},
@@ -2217,7 +1371,7 @@ rb_assigned AS (
   SELECT vec_id, embedding, centroid_id AS cell FROM (
     SELECT f.vec_id, f.embedding, c.centroid_id,
       row_number() OVER (PARTITION BY f.vec_id
-        ORDER BY {_sql_dist2("f.embedding", "c.cvec")} ASC, c.centroid_id ASC) AS r
+        ORDER BY {sql_dist2("f.embedding", "c.cvec")} ASC, c.centroid_id ASC) AS r
     FROM rb_corpus f CROSS JOIN cents c
   ) WHERE r = 1),
 rb_pops AS (SELECT cell, count(*) AS pop FROM rb_assigned GROUP BY cell),
@@ -2234,7 +1388,7 @@ rb_reassigned AS (
   SELECT vec_id, cell, CAST(cid AS INT) AS subcell FROM (
     SELECT r.vec_id, r.cell, s.cid,
       row_number() OVER (PARTITION BY r.vec_id
-        ORDER BY {_sql_dist2("r.embedding", "s.cvec")} ASC, s.cid ASC) AS rn
+        ORDER BY {sql_dist2("r.embedding", "s.cvec")} ASC, s.cid ASC) AS rn
     FROM rb_ranked r JOIN rb_sub s ON s.grp = r.cell
   ) WHERE rn = 1),
 rb_all AS (

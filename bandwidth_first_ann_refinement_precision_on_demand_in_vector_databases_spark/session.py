@@ -11,6 +11,8 @@ to the test fixtures (32) — production deployments override
 from __future__ import annotations
 
 import os
+import shutil
+import tempfile
 import weakref
 
 from pyspark.sql import SparkSession
@@ -60,6 +62,29 @@ def cached_persist(spark: SparkSession, name: str, key, build, pin=None):
     return cache[key][1]
 
 
+#: memo namespace of :func:`artifact_dir`; ``clear_caches`` deletes
+#: the directories it holds
+_ARTIFACT_DIRS = "artifact_dirs"
+
+
+def artifact_dir(spark: SparkSession, key, kind: str, build) -> str:
+    """Session-memoized offline build: run ``build(path)`` once per
+    (session, ``kind``, ``key``) into a fresh ``bfann-{kind}-*`` temp
+    dir and return the path. The stored index artifacts (graph edges,
+    PQ codes, cell-partitioned stores, the refine layout) are built
+    here; ``clear_caches`` deletes the directories."""
+    cache = session_cache(spark, _ARTIFACT_DIRS)
+    if (kind, key) not in cache:
+        path = tempfile.mkdtemp(prefix=f"bfann-{kind}-")
+        try:
+            build(path)
+        except BaseException:
+            shutil.rmtree(path, ignore_errors=True)
+            raise
+        cache[(kind, key)] = path
+    return cache[(kind, key)]
+
+
 def clear_caches(spark: SparkSession | None = None) -> None:
     """Release every memoized/persisted frame (cache lifecycle for
     long-lived sessions: sweep loops, CLI exit, benchmarks).
@@ -67,12 +92,15 @@ def clear_caches(spark: SparkSession | None = None) -> None:
     Drops all per-session memo dicts and clears the session's SQL
     cache (``catalog.clearCache()`` unpersists every cached relation —
     including per-query internal persists like the curation canonical
-    set or dedup band indexes whose frames the memo dicts never saw).
+    set or dedup band indexes whose frames the memo dicts never saw)
+    and deletes the artifact directories :func:`artifact_dir` built.
     With no argument, clears every live session."""
     sessions = [spark] if spark is not None else list(_SESSION_CACHES)
     for s in sessions:
         per = _SESSION_CACHES.get(s)
         if per is not None:
+            for path in per.get(_ARTIFACT_DIRS, {}).values():
+                shutil.rmtree(path, ignore_errors=True)
             for cache in per.values():
                 cache.clear()
             per.clear()

@@ -158,3 +158,26 @@ def test_uncached_cushion_topk_prepares_the_corpus_once(spark, sf_small, monkeyp
     assert res.topk.collect()
     assert len(built) == 1 and built[0].is_cached
     clear_caches(spark)
+
+
+def test_clear_caches_deletes_index_artifact_dirs(spark, sf_small):
+    """A served index query writes its artifact once per session into a
+    ``bfann-*`` temp dir; ``clear_caches`` deletes that dir along with
+    the memo, so repeated clears in a long-lived session leave nothing
+    behind on disk."""
+    import os
+    import re
+
+    from bandwidth_first_ann_refinement_precision_on_demand_in_vector_databases_spark import (
+        registry,
+    )
+
+    df = registry.QUERIES["ann_pq_index_topk"](spark, sf_small)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    found = re.search(r"file:(/[^\s,\]]*?bfann-pq-index-[A-Za-z0-9_]+)", plan)
+    assert found, plan[:2000]
+    path = found.group(1)
+    assert df.count() > 0 and os.path.isdir(path)
+
+    clear_caches(spark)
+    assert not os.path.exists(path)

@@ -233,15 +233,17 @@ def test_ivf_serve_path_prunes_partitions(spark, sf_small):
     from bandwidth_first_ann_refinement_precision_on_demand_in_vector_databases_spark.operators.simsearch import (
         ivf_topk,
     )
+    from bandwidth_first_ann_refinement_precision_on_demand_in_vector_databases_spark import (
+        registry,
+    )
     from bandwidth_first_ann_refinement_precision_on_demand_in_vector_databases_spark.registry_simsearch import (
         ANN_K,
-        q_ann_ivf_index_topk,
     )
     from bandwidth_first_ann_refinement_precision_on_demand_in_vector_databases_spark.sources.fixtures import (
         queries_view,
     )
 
-    df = q_ann_ivf_index_topk(spark, sf_small)
+    df = registry.QUERIES["ann_ivf_index_topk"](spark, sf_small)
     plan = _phys(df)
     assert "PartitionFilters" in plan
     assert "bfann-ivf-cells-" in plan, plan[:2000]
