@@ -39,7 +39,7 @@ from pyspark.sql import functions as F
 
 from ..functions.vector import cosine
 from ..session import ensure_parallelism
-from .topk import topk_per_query
+from .topk import exact_rerank, topk_per_query
 
 BQ_WORD = 32      #: dims packed per BIGINT word (max shift 31)
 #: refinement fetches R*K candidates for exact re-rank. R is the
@@ -97,29 +97,44 @@ def _hamming(a: str, b: str) -> Column:
     )
 
 
+def hamming_topk(
+    cwords: DataFrame, queries: DataFrame, n: int, dim: int
+) -> DataFrame:
+    """(query_id, rank, neighbor_id, score): the top ``n`` per query by
+    Hamming distance between the query's packed signature and every
+    row of ``cwords`` (neighbor_id, cwords) — ascending, ties →
+    neighbor_id; integer xor/popcount in codegen. The one 1-bit
+    scoring stage of BQ, the cascade's stage 1 and the cascade serve
+    path (which supplies the stored signature table)."""
+    qw = F.broadcast(
+        bq_encode(queries, "embedding", "query_id", dim=dim).select(
+            F.col("id").alias("query_id"), F.col("words").alias("qwords")
+        )
+    )
+    scored = cwords.crossJoin(qw).select(
+        "query_id", "neighbor_id", _hamming("qwords", "cwords").alias("score")
+    )
+    return topk_per_query(scored, n, ascending=True)
+
+
+def _corpus_words(corpus: DataFrame, dim: int) -> DataFrame:
+    return bq_encode(corpus, "embedding", "vec_id", dim=dim).select(
+        F.col("id").alias("neighbor_id"), F.col("words").alias("cwords")
+    )
+
+
 def bq_topk(
     queries: DataFrame, corpus: DataFrame, k: int, dim: int | None = None
 ) -> DataFrame:
     """(query_id, rank, neighbor_id, hamming): top-K by Hamming
     distance on the 1-bit signatures alone (ascending; ties →
     neighbor_id). The scan side is the words table — D/8 bytes per
-    vector; the distance is integer xor/popcount in codegen."""
+    vector."""
     if dim is None:
         from .simsearch import embedding_dim
 
         dim = embedding_dim(corpus)
-    qw = F.broadcast(
-        bq_encode(queries, "embedding", "query_id", dim=dim).select(
-            F.col("id").alias("query_id"), F.col("words").alias("qwords")
-        )
-    )
-    cw = bq_encode(corpus, "embedding", "vec_id", dim=dim).select(
-        F.col("id").alias("neighbor_id"), F.col("words").alias("cwords")
-    )
-    scored = cw.crossJoin(qw).select(
-        "query_id", "neighbor_id", _hamming("qwords", "cwords").alias("score")
-    )
-    out = topk_per_query(scored, k, ascending=True)
+    out = hamming_topk(_corpus_words(corpus, dim), queries, k, dim)
     return out.withColumnRenamed("score", "hamming")
 
 
@@ -135,12 +150,7 @@ def bq_refined_topk(
     only they — fetch full precision for the exact cosine re-rank
     (late materialization; reference phase-2 shape). Bytes touched:
     N·D/8 signature bytes + r·K full vectors per query."""
-    from .topk import exact_cosine_rerank
-
-    cand_ids = bq_topk(queries, corpus, r * k, dim=dim).select(
-        "query_id", "neighbor_id"
-    )
-    return exact_cosine_rerank(cand_ids, corpus, queries, k)
+    return exact_rerank(bq_topk(queries, corpus, r * k, dim=dim), corpus, queries, k)
 
 
 #: three-stage cascade pools. Stage 1 (1-bit Hamming over ALL N)
@@ -177,7 +187,7 @@ def cascade_topk(
        decode, no training artifact) and narrowed to r1·k;
     3. **32 bits/coord** — only r1·k survivors late-materialize full
        precision for the exact cosine top-K (the shared
-       ``exact_cosine_rerank`` tail).
+       ``topk.exact_rerank`` tail).
 
     Bytes touched per query: N·⌈D/8⌉ + r2·k·(D+8) + r1·k·4D versus
     4·N·D for the flat scan — each stage spends more bytes per
@@ -187,10 +197,34 @@ def cascade_topk(
     stage-2/3 joins key on neighbor_id against broadcast-query sides,
     and nothing here trains: at 100 TB both sketch tables are single
     streaming passes over the corpus."""
-    from .topk import exact_cosine_rerank
-
     cand1 = cascade_candidates(queries, corpus, k, r1=r1, r2=r2, dim=dim)
-    return exact_cosine_rerank(cand1, corpus, queries, k)
+    return exact_rerank(cand1, corpus, queries, k)
+
+
+def _cascade_narrow(
+    queries: DataFrame,
+    cwords: DataFrame,
+    recon: DataFrame,
+    k: int,
+    r1: int,
+    r2: int,
+    dim: int,
+) -> DataFrame:
+    """Stages 1+2 over a signature table (neighbor_id, cwords) and an
+    int8 reconstruction (neighbor_id, recon): Hamming top r2·k, then
+    recon-cosine top r1·k ids."""
+    cand2 = hamming_topk(cwords, queries, r2 * k, dim).select(
+        "query_id", "neighbor_id"
+    )
+    qv = F.broadcast(queries.select("query_id", F.col("embedding").alias("qv")))
+    scored = (
+        cand2.join(recon, "neighbor_id")
+        .join(qv, "query_id")
+        .select("query_id", "neighbor_id", cosine("qv", "recon").alias("score"))
+    )
+    return topk_per_query(scored, r1 * k, ascending=False, salted=False).select(
+        "query_id", "neighbor_id"
+    )
 
 
 def cascade_candidates(
@@ -203,26 +237,18 @@ def cascade_candidates(
 ) -> DataFrame:
     """Stages 1+2 of the cascade as a reusable per-query candidate
     stream (query_id, neighbor_id) of r1·k ids — the shape every
-    phase-2 consumer takes (``exact_cosine_rerank`` for the plain
-    cascade, ``refine.cushion_topk("cascade", ...)`` for the cushioned
+    phase-2 consumer takes (``exact_rerank`` for the plain cascade,
+    ``refine.cushion_topk("cascade", ...)`` for the cushioned
     composition)."""
+    from .simsearch import embedding_dim
     from .sq import sq_reconstruct
 
-    cand2 = bq_topk(queries, corpus, r2 * k, dim=dim).select(
-        "query_id", "neighbor_id"
-    )
+    if dim is None:
+        dim = embedding_dim(corpus)
     recon = sq_reconstruct(corpus).select(
         F.col("vec_id").alias("neighbor_id"), "recon"
     )
-    qv = F.broadcast(queries.select("query_id", F.col("embedding").alias("qv")))
-    scored = (
-        cand2.join(recon, "neighbor_id")
-        .join(qv, "query_id")
-        .select("query_id", "neighbor_id", cosine("qv", "recon").alias("score"))
-    )
-    return topk_per_query(scored, r1 * k, ascending=False, salted=False).select(
-        "query_id", "neighbor_id"
-    )
+    return _cascade_narrow(queries, _corpus_words(corpus, dim), recon, k, r1, r2, dim)
 
 
 def cascade_topk_from_index(
@@ -241,27 +267,15 @@ def cascade_topk_from_index(
     is a bounded r2·k pool — and only stage 3 late-materializes full
     precision from the base corpus. Results are identical to the
     in-query encode by construction (the stored tables ARE
-    ``bq_encode``/``sq_encode`` outputs), so the oracle is shared."""
+    ``bq_encode``/``sq_encode`` outputs, scored by the same stages),
+    so the oracle is shared."""
+    from .simsearch import embedding_dim
     from .sq import SQ_LEVELS
-    from .topk import exact_cosine_rerank
 
     if dim is None:
-        from .simsearch import embedding_dim
-
         dim = embedding_dim(corpus)
-    qw = F.broadcast(
-        bq_encode(queries, "embedding", "query_id", dim=dim).select(
-            F.col("id").alias("query_id"), F.col("words").alias("qwords")
-        )
-    )
-    cw = signatures.select(
+    cwords = signatures.select(
         F.col("vec_id").alias("neighbor_id"), F.col("words").alias("cwords")
-    )
-    ham = cw.crossJoin(qw).select(
-        "query_id", "neighbor_id", _hamming("qwords", "cwords").alias("score")
-    )
-    cand2 = topk_per_query(ham, r2 * k, ascending=True).select(
-        "query_id", "neighbor_id"
     )
     recon = codes.select(
         F.col("vec_id").alias("neighbor_id"),
@@ -269,16 +283,8 @@ def cascade_topk_from_index(
             "codes", lambda c: c.cast("double") * F.col("s") / F.lit(float(SQ_LEVELS))
         ).alias("recon"),
     )
-    qv = F.broadcast(queries.select("query_id", F.col("embedding").alias("qv")))
-    scored = (
-        cand2.join(recon, "neighbor_id")
-        .join(qv, "query_id")
-        .select("query_id", "neighbor_id", cosine("qv", "recon").alias("score"))
-    )
-    cand1 = topk_per_query(scored, r1 * k, ascending=False, salted=False).select(
-        "query_id", "neighbor_id"
-    )
-    return exact_cosine_rerank(cand1, corpus, queries, k)
+    cand1 = _cascade_narrow(queries, cwords, recon, k, r1, r2, dim)
+    return exact_rerank(cand1, corpus, queries, k)
 
 
 def ivfbq_topk(
@@ -304,15 +310,10 @@ def ivfbq_topk(
     Bytes touched per query: nprobe/n_cells of the D/8-byte signature
     table + r·K full vectors — the cheapest serve path on the ladder.
     """
-    from .simsearch import IVF_NPROBE, ivf_assign, ivf_centroids, ivf_probes
+    from .simsearch import embedding_dim, ivf_probed_cells
 
     if dim is None:
-        from .simsearch import embedding_dim
-
         dim = embedding_dim(corpus)
-    cents = ivf_centroids(corpus)
-    assigned = ivf_assign(corpus, cents).select("vec_id", "cell")
-    probed = ivf_probes(queries, cents, IVF_NPROBE).select("query_id", "cell")
     cw = bq_encode(corpus, "embedding", "vec_id", dim=dim).select(
         F.col("id").alias("vec_id"), F.col("words").alias("cwords")
     )
@@ -322,8 +323,7 @@ def ivfbq_topk(
         )
     )
     ham = (
-        F.broadcast(probed)
-        .join(assigned, "cell")
+        ivf_probed_cells(queries, corpus)
         .join(cw, "vec_id")
         .join(qw, "query_id")
         .select(
@@ -332,9 +332,7 @@ def ivfbq_topk(
             _hamming("qwords", "cwords").alias("score"),
         )
     )
-    from .topk import exact_cosine_rerank
-
     cand_ids = topk_per_query(ham, r * k, ascending=True, salted=False).select(
         "query_id", "neighbor_id"
     )
-    return exact_cosine_rerank(cand_ids, corpus, queries, k)
+    return exact_rerank(cand_ids, corpus, queries, k)

@@ -42,7 +42,7 @@ from pyspark.sql import functions as F
 
 from ..functions.vector import cosine
 from ..session import ensure_parallelism
-from .topk import topk_per_query
+from .topk import exact_rerank, topk_per_query
 
 #: default kept prefix dims: D/4 on the D=64 fixture → the cheap pass
 #: reads 1/4 of the coordinate bytes (the same 4× step as int8 SQ,
@@ -107,9 +107,5 @@ def mrl_refined_topk(
     r·K candidates per query; they — and only they — fetch the full
     vector for the exact cosine re-rank (late materialization). Bytes
     touched: N·4·d' prefix bytes + r·K full vectors per query."""
-    from .topk import exact_cosine_rerank
-
-    cand_ids = mrl_topk(queries, corpus, r * k, d_keep=d_keep).select(
-        "query_id", "neighbor_id"
-    )
-    return exact_cosine_rerank(cand_ids, corpus, queries, k)
+    cand = mrl_topk(queries, corpus, r * k, d_keep=d_keep)
+    return exact_rerank(cand, corpus, queries, k)

@@ -114,12 +114,21 @@ def maxsim_union_pool(
             F.posexplode(terms).alias("slice_i", "s"),
         )
     )
+    return _slice_pool(scored, p)
+
+
+def _slice_pool(terms: DataFrame, p: int) -> DataFrame:
+    """(query_id, neighbor_id): the union over query slices of each
+    slice's top-``p`` docs by its MaxSim term ``s`` — a two-window
+    per-(query, slice) top-p (local rank within the partition, then
+    the global rank), never a single partition. The one pool stage of
+    the packed, stored token-bag and IVF-pruned paths."""
     ordering = [F.col("s").desc(), F.col("neighbor_id").asc()]
     local = Window.partitionBy(
         "query_id", "slice_i", F.spark_partition_id()
     ).orderBy(*ordering)
     pruned = (
-        scored.withColumn("__lr", F.row_number().over(local))
+        terms.withColumn("__lr", F.row_number().over(local))
         .where(F.col("__lr") <= p)
         .drop("__lr")
     )
@@ -297,22 +306,7 @@ def maxsim_topk_from_store(
         .agg(F.max("c").alias("s"))
         .persist()
     )
-    ordering = [F.col("s").desc(), F.col("neighbor_id").asc()]
-    local = Window.partitionBy(
-        "query_id", "slice_i", F.spark_partition_id()
-    ).orderBy(*ordering)
-    pruned = (
-        terms.withColumn("__lr", F.row_number().over(local))
-        .where(F.col("__lr") <= p)
-        .drop("__lr")
-    )
-    final = Window.partitionBy("query_id", "slice_i").orderBy(*ordering)
-    pool = (
-        pruned.withColumn("__r", F.row_number().over(final))
-        .where(F.col("__r") <= p)
-        .select("query_id", "neighbor_id")
-        .distinct()
-    )
+    pool = _slice_pool(terms, p)
     pivoted = (
         terms.join(pool, ["query_id", "neighbor_id"])
         .groupBy("query_id", "neighbor_id")
@@ -349,14 +343,11 @@ def ivf_maxsim_topk(
     the pool contract. This is the composition a 100 TB
     late-interaction deployment runs (PLAID: centroid pruning →
     per-token candidate generation → full MaxSim)."""
-    from .simsearch import embedding_dim, ivf_assign, ivf_centroids, ivf_probes
+    from .simsearch import embedding_dim, ivf_probed_cells
 
     if dim is None:
         dim = embedding_dim(corpus)
-    cents = ivf_centroids(corpus)
-    assigned = ivf_assign(corpus, cents)
-    probed = ivf_probes(queries, cents)
-    cand = F.broadcast(probed).join(assigned, "cell").select(
+    cand = ivf_probed_cells(queries, corpus).select(
         "query_id",
         F.col("vec_id").alias("neighbor_id"),
         "qvec",
@@ -370,20 +361,4 @@ def ivf_maxsim_topk(
         "neighbor_id",
         F.posexplode(terms).alias("slice_i", "s"),
     )
-    ordering = [F.col("s").desc(), F.col("neighbor_id").asc()]
-    local = Window.partitionBy(
-        "query_id", "slice_i", F.spark_partition_id()
-    ).orderBy(*ordering)
-    pruned = (
-        scored.withColumn("__lr", F.row_number().over(local))
-        .where(F.col("__lr") <= p)
-        .drop("__lr")
-    )
-    final = Window.partitionBy("query_id", "slice_i").orderBy(*ordering)
-    pool = (
-        pruned.withColumn("__r", F.row_number().over(final))
-        .where(F.col("__r") <= p)
-        .select("query_id", "neighbor_id")
-        .distinct()
-    )
-    return maxsim_rerank(queries, corpus, pool, k, m, dim)
+    return maxsim_rerank(queries, corpus, _slice_pool(scored, p), k, m, dim)

@@ -45,7 +45,7 @@ from pyspark.sql import functions as F
 
 from ..session import session_cache
 from .pq import PQ_M, PQ_REFINE_R, pq_topk
-from .topk import exact_l2_rerank
+from .topk import exact_rerank
 
 #: micro-unit scale for the variance quantization. 1e4 (not the
 #: covariance family's 1e6): the key only RANKS dimensions, so 4
@@ -175,8 +175,7 @@ def opq_refined_topk(
     materialization — permutation invariance makes re-ranking in the
     original space exactly equivalent, so the serve path never touches
     permuted storage twice)."""
-    cand_ids = opq_topk(queries, corpus, r * k).select("query_id", "neighbor_id")
-    return exact_l2_rerank(cand_ids, corpus, queries, k)
+    return exact_rerank(opq_topk(queries, corpus, r * k), corpus, queries, k, "l2")
 
 
 # ---------------------------------------------------------------------------

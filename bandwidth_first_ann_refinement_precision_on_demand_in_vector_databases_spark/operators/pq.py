@@ -49,7 +49,7 @@ from pyspark.sql import functions as F
 from ..functions.vector import dist2
 from ..session import ensure_parallelism
 from .kmeans import KMEANS_ITERS, kmeans_centroids
-from .topk import topk_per_query
+from .topk import exact_rerank, topk_per_query
 
 PQ_M = 8        #: subspaces (a hyperparameter; subdim = D / M is derived)
 PQ_STRIDE = 25  #: codebook seeds = subvectors of every stride-th vector
@@ -184,64 +184,55 @@ def reconstruct_from_codes(codes: DataFrame, cb: DataFrame) -> DataFrame:
     )
 
 
+def adc_topk(recon: DataFrame, queries: DataFrame, k: int) -> DataFrame:
+    """ADC top-K over a reconstruction frame (vec_id, recon): squared L2
+    of each raw query to every reconstruction, ascending (ties →
+    neighbor_id) — the one code-scoring stage of PQ, OPQ and SQ, and
+    of the PQ serve path, which supplies its reconstruction from the
+    stored codebook + codes instead of the in-session build."""
+    q = F.broadcast(queries.select("query_id", F.col("embedding").alias("qv")))
+    scored = recon.crossJoin(q).select(
+        "query_id",
+        F.col("vec_id").alias("neighbor_id"),
+        dist2("qv", "recon").alias("score"),
+    )
+    return topk_per_query(scored, k, ascending=True)
+
+
 def pq_topk_from_index(
     queries: DataFrame, codebook: DataFrame, codes: DataFrame, k: int
 ) -> DataFrame:
     """ADC top-K served entirely from the stored index artifacts
     (codebook + codes) — no corpus column is read. Identical result
     to ``pq_topk`` over the corpus the index was built from."""
-    recon = reconstruct_from_codes(codes, codebook)
-    q = F.broadcast(queries.select("query_id", F.col("embedding").alias("qv")))
-    scored = recon.crossJoin(q).select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        dist2("qv", "recon").alias("score"),
-    )
-    return topk_per_query(scored, k, ascending=True)
+    return adc_topk(reconstruct_from_codes(codes, codebook), queries, k)
 
 
 def pq_topk(queries: DataFrame, corpus: DataFrame, k: int) -> DataFrame:
     """ADC top-K from the PQ representation alone (squared L2 on the
     reconstruction, ascending; ties on neighbor_id). At scale the
     scan side is the codes table — 32× fewer bytes than raw."""
-    recon = pq_reconstruct(corpus)
-    q = F.broadcast(queries.select("query_id", F.col("embedding").alias("qv")))
-    scored = recon.crossJoin(q).select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        dist2("qv", "recon").alias("score"),
-    )
-    return topk_per_query(scored, k, ascending=True)
+    return adc_topk(pq_reconstruct(corpus), queries, k)
 
 
-def ivfpq_topk(
-    queries: DataFrame, corpus: DataFrame, k: int, r: int = PQ_REFINE_R
+def ivf_adc_topk(
+    queries: DataFrame, corpus: DataFrame, recon: DataFrame, k: int, r: int
 ) -> DataFrame:
-    """The production composition (FAISS-style IVF-PQ layout, squared
-    L2 end-to-end): coarse cells prune the scan, PQ codes price the
-    candidates, full precision refines the survivors.
+    """The IVF × codes composition (squared L2 end-to-end) over any
+    reconstruction frame (vec_id, recon) — PQ codes for ``ivfpq_topk``,
+    int8 codes for ``sq.ivfsq_topk``:
 
     1. probe the ``IVF_NPROBE`` nearest cells per query (coarse
-       quantizer — broadcast-sized);
-    2. ADC-score only vectors in probed cells from the PQ
-       reconstruction (at scale: a partition-pruned scan of the
-       8-byte code columns — `sources/layout.write_cell_partitioned`
-       is the storage shape);
+       quantizer — broadcast-sized; ``simsearch.ivf_probed_cells``);
+    2. ADC-score only vectors in probed cells from the reconstruction
+       (at scale: a partition-pruned scan of the code columns —
+       `sources/layout.write_cell_partitioned` is the storage shape);
     3. exact re-rank of the top r·K ADC candidates per query (late
-       materialization of the full-precision column).
+       materialization of the full-precision column)."""
+    from .simsearch import ivf_probed_cells
 
-    Bytes touched per query: nprobe/n_cells of the codes table plus
-    r·K full vectors — against N full vectors for brute force.
-    """
-    from .simsearch import IVF_NPROBE, ivf_assign, ivf_centroids, ivf_probes
-
-    cents = ivf_centroids(corpus)
-    assigned = ivf_assign(corpus, cents).select("vec_id", "cell")
-    probed = ivf_probes(queries, cents, IVF_NPROBE)
-    recon = pq_reconstruct(corpus)
     cand = (
-        F.broadcast(probed)
-        .join(assigned, "cell")
+        ivf_probed_cells(queries, corpus)
         .join(recon, "vec_id")
         .select(
             "query_id",
@@ -252,9 +243,20 @@ def ivfpq_topk(
     adc_ids = topk_per_query(cand, r * k, ascending=True).select(
         "query_id", "neighbor_id"
     )
-    from .topk import exact_l2_rerank
+    return exact_rerank(adc_ids, corpus, queries, k, "l2")
 
-    return exact_l2_rerank(adc_ids, corpus, queries, k)
+
+def ivfpq_topk(
+    queries: DataFrame, corpus: DataFrame, k: int, r: int = PQ_REFINE_R
+) -> DataFrame:
+    """The production composition (FAISS-style IVF-PQ layout): coarse
+    cells prune the scan, PQ codes price the candidates, full
+    precision refines the survivors (``ivf_adc_topk``).
+
+    Bytes touched per query: nprobe/n_cells of the codes table plus
+    r·K full vectors — against N full vectors for brute force.
+    """
+    return ivf_adc_topk(queries, corpus, pq_reconstruct(corpus), k, r)
 
 
 #: Lloyd rounds for the IVFADC coarse quantizer. Residual coding only
@@ -343,26 +345,20 @@ def ivfpq_res_topk(
 
     The query residual is per (query, probed cell) — q·nprobe tiny
     rows, broadcast; the corpus-sized side only ever carries codes."""
-    from .topk import exact_l2_rerank
-
     adc_ids = ivfadc_candidates(queries, corpus, r * k)
-    return exact_l2_rerank(adc_ids, corpus, queries, k)
+    return exact_rerank(adc_ids, corpus, queries, k, "l2")
 
 
-def ivfadc_candidates(queries: DataFrame, corpus: DataFrame, n: int) -> DataFrame:
-    """(query_id, neighbor_id): the IVFADC ADC pre-rank — the top ``n``
-    candidates per query by residual-space asymmetric distance (steps
-    1–2 of ``ivfpq_res_topk``, without the exact re-rank). Factored
-    so the cushion composition (``refine.cushion_topk("ivfadc", ...)``) and
-    the plain IVFADC serve path share one candidate generator: the
-    probed trained cells bound the scan, codes price it, and only
-    these n ids ever leave the index."""
-    cents = ivfadc_centroids(corpus)
-    res = ivf_residuals(corpus)
-    recon = pq_reconstruct(res)
-    from .simsearch import IVF_NPROBE, ivf_probes
-
-    probed = ivf_probes(queries, cents, IVF_NPROBE)
+def residual_adc_topk(
+    probed: DataFrame, cents: DataFrame, cells: DataFrame, recon: DataFrame, n: int
+) -> DataFrame:
+    """(query_id, neighbor_id): the top ``n`` per query by residual-space
+    ADC — the one IVFADC scoring stage. ``probed`` (query_id, qvec,
+    cell) is re-expressed per (query, probed cell) as the query
+    residual q − centroid(cell) (q·nprobe tiny rows, broadcast) and
+    priced against the reconstructed residual codes of the vectors in
+    those cells; ``cells`` (vec_id, cell) and ``recon`` (vec_id, recon)
+    come from the in-session build or from the stored index."""
     qres = probed.join(
         F.broadcast(cents), probed.cell == cents.centroid_id
     ).select(
@@ -374,7 +370,7 @@ def ivfadc_candidates(queries: DataFrame, corpus: DataFrame, n: int) -> DataFram
     )
     cand = (
         F.broadcast(qres)
-        .join(res.select("vec_id", "cell"), "cell")
+        .join(cells, "cell")
         .join(recon, "vec_id")
         .select(
             "query_id",
@@ -384,6 +380,24 @@ def ivfadc_candidates(queries: DataFrame, corpus: DataFrame, n: int) -> DataFram
     )
     return topk_per_query(cand, n, ascending=True).select(
         "query_id", "neighbor_id"
+    )
+
+
+def ivfadc_candidates(queries: DataFrame, corpus: DataFrame, n: int) -> DataFrame:
+    """(query_id, neighbor_id): the IVFADC ADC pre-rank — the top ``n``
+    candidates per query by residual-space asymmetric distance (steps
+    1–2 of ``ivfpq_res_topk``, without the exact re-rank). Factored
+    so the cushion composition (``refine.cushion_topk("ivfadc", ...)``) and
+    the plain IVFADC serve path share one candidate generator: the
+    probed trained cells bound the scan, codes price it, and only
+    these n ids ever leave the index."""
+    from .simsearch import IVF_NPROBE, ivf_probes
+
+    cents = ivfadc_centroids(corpus)
+    res = ivf_residuals(corpus)
+    probed = ivf_probes(queries, cents, IVF_NPROBE)
+    return residual_adc_topk(
+        probed, cents, res.select("vec_id", "cell"), pq_reconstruct(res), n
     )
 
 
@@ -401,14 +415,13 @@ def ivfadc_topk_from_index(
     PARTITION-PRUNED scan of the cell-partitioned codes table (only
     probed directories open, only the thin code columns read);
     residual reconstruction + ADC come from codes + broadcast
-    codebook; the raw corpus is touched ONLY to fetch the r·K
-    re-rank survivors (late materialization). Identical result to the
-    in-session ``ivfpq_res_topk`` over the corpus the index was built
-    from."""
-    from ..functions.vector import dist2 as _dist2
+    codebook through the in-session scoring stage
+    (``residual_adc_topk``); the raw corpus is touched ONLY to fetch
+    the r·K re-rank survivors (late materialization). Identical result
+    to the in-session ``ivfpq_res_topk`` over the corpus the index was
+    built from."""
     from ..sources.layout import read_ivfadc_index
     from .simsearch import IVF_NPROBE, ivf_probes
-    from .topk import exact_l2_rerank
 
     cents, cb, codes = read_ivfadc_index(spark, index_path)
     probed = ivf_probes(queries, cents, IVF_NPROBE)
@@ -416,29 +429,8 @@ def ivfadc_topk_from_index(
     pruned = codes.where(F.col("cell").isin(cells))
     recon = reconstruct_from_codes(pruned.select("vec_id", "m", "code"), cb)
     vc = pruned.select("vec_id", "cell").distinct()
-    qres = probed.join(
-        F.broadcast(cents), probed.cell == cents.centroid_id
-    ).select(
-        "query_id",
-        "cell",
-        F.zip_with(
-            "qvec", "cvec", lambda a, b: a.cast("double") - b.cast("double")
-        ).alias("qres"),
-    )
-    cand = (
-        F.broadcast(qres)
-        .join(vc, "cell")
-        .join(recon, "vec_id")
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            _dist2("qres", "recon").alias("score"),
-        )
-    )
-    adc_ids = topk_per_query(cand, r * k, ascending=True).select(
-        "query_id", "neighbor_id"
-    )
-    return exact_l2_rerank(adc_ids, corpus, queries, k)
+    adc_ids = residual_adc_topk(probed, cents, vc, recon, r * k)
+    return exact_rerank(adc_ids, corpus, queries, k, "l2")
 
 
 def pq_refined_topk(
@@ -450,9 +442,4 @@ def pq_refined_topk(
     (late materialization; reference phase-2, ``ANNCode.py:560-575``).
     Bytes touched: N codes + r·K full vectors per query, vs N full
     vectors for brute force."""
-    cand_ids = pq_topk(queries, corpus, r * k).select(
-        "query_id", "neighbor_id"
-    )
-    from .topk import exact_l2_rerank
-
-    return exact_l2_rerank(cand_ids, corpus, queries, k)
+    return exact_rerank(pq_topk(queries, corpus, r * k), corpus, queries, k, "l2")

@@ -39,7 +39,7 @@ from pyspark.sql import functions as F
 
 from ..functions.vector import NORM_EPS, dot
 from ..session import ensure_parallelism, session_cache
-from .topk import exact_cosine_rerank, topk_per_query
+from .topk import exact_rerank, topk_per_query
 
 #: refinement fetches R·K candidates — same convention as BQ/PQ/SQ so
 #: the recall ladder compares estimators at equal candidate budgets
@@ -127,13 +127,13 @@ def rabitq_queries(queries: DataFrame) -> DataFrame:
     )
 
 
-def rabitq_candidates(queries: DataFrame, corpus: DataFrame, n: int) -> DataFrame:
+def estimator_topk(pairs: DataFrame, n: int) -> DataFrame:
     """(query_id, neighbor_id): the top ``n`` per query by the RaBitQ
-    estimator — the candidate generator shared by the plain serve path
-    and the cushion composition; only these n ids ever leave the
-    code-table scan."""
-    rq = rabitq_queries(queries)
-    est = rabitq_corpus(corpus).crossJoin(F.broadcast(rq)).select(
+    estimator ⟨s, yq⟩·inv/qn over (query, code row) pairs carrying
+    ``vec_id, s, inv`` and the rotated query's ``yq, qn`` — the one
+    estimator scan of the plain, IVF-composed and stored serve paths;
+    only these n ids ever leave the code-table scan."""
+    est = pairs.select(
         "query_id",
         F.col("vec_id").alias("neighbor_id"),
         (dot("s", "yq") * F.col("inv") / F.col("qn")).alias("score"),
@@ -141,6 +141,14 @@ def rabitq_candidates(queries: DataFrame, corpus: DataFrame, n: int) -> DataFram
     return topk_per_query(est, n, ascending=False, salted=False).select(
         "query_id", "neighbor_id"
     )
+
+
+def rabitq_candidates(queries: DataFrame, corpus: DataFrame, n: int) -> DataFrame:
+    """(query_id, neighbor_id): the top ``n`` per query by the RaBitQ
+    estimator over the in-session code table — the candidate generator
+    shared by the plain serve path and the cushion composition."""
+    pairs = rabitq_corpus(corpus).crossJoin(F.broadcast(rabitq_queries(queries)))
+    return estimator_topk(pairs, n)
 
 
 def rabitq_topk(
@@ -151,7 +159,7 @@ def rabitq_topk(
     query side is rotated once (q·1 rows, broadcast); the corpus-sized
     scan touches only (s, inv)."""
     ids = rabitq_candidates(queries, corpus, r * k)
-    return exact_cosine_rerank(ids, corpus, queries, k)
+    return exact_rerank(ids, corpus, queries, k)
 
 
 def ivfrabitq_topk(
@@ -163,27 +171,14 @@ def ivfrabitq_topk(
     scan touches only the 12-byte (s, inv) code rows, and full
     precision late-materializes for R·K ids/query. Mirrors
     ``bq.ivfbq_topk`` with the estimator replacing raw Hamming."""
-    from .simsearch import IVF_NPROBE, ivf_assign, ivf_centroids, ivf_probes
+    from .simsearch import ivf_probed_cells
 
-    cents = ivf_centroids(corpus)
-    assigned = ivf_assign(corpus, cents)
-    probed = ivf_probes(queries, cents, IVF_NPROBE)
-    rq = rabitq_queries(queries)
-    est = (
-        F.broadcast(probed.select("query_id", "cell"))
-        .join(assigned.select("vec_id", "cell"), "cell")
+    pairs = (
+        ivf_probed_cells(queries, corpus)
         .join(rabitq_corpus(corpus), "vec_id")
-        .join(F.broadcast(rq), "query_id")
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            (dot("s", "yq") * F.col("inv") / F.col("qn")).alias("score"),
-        )
+        .join(F.broadcast(rabitq_queries(queries)), "query_id")
     )
-    ids = topk_per_query(est, r * k, ascending=False, salted=False).select(
-        "query_id", "neighbor_id"
-    )
-    return exact_cosine_rerank(ids, corpus, queries, k)
+    return exact_rerank(estimator_topk(pairs, r * k), corpus, queries, k)
 
 
 def _unpack_signs_expr(words_col: str, dim: int) -> str:
@@ -224,13 +219,5 @@ def rabitq_topk_from_index(
     codes = read_rabitq_index(spark, path).select(
         "vec_id", F.expr(_unpack_signs_expr("words", dim)).alias("s"), "inv"
     )
-    rq = rabitq_queries(queries)
-    est = codes.crossJoin(F.broadcast(rq)).select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        (dot("s", "yq") * F.col("inv") / F.col("qn")).alias("score"),
-    )
-    ids = topk_per_query(est, r * k, ascending=False, salted=False).select(
-        "query_id", "neighbor_id"
-    )
-    return exact_cosine_rerank(ids, corpus, queries, k)
+    pairs = codes.crossJoin(F.broadcast(rabitq_queries(queries)))
+    return exact_rerank(estimator_topk(pairs, r * k), corpus, queries, k)

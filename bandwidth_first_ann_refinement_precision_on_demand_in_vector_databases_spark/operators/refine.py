@@ -66,8 +66,13 @@ same re-scorer. :data:`CANDIDATE_SOURCES` maps each source name (ivf,
 ivfadc, rabitq, lsh, lsh_multiprobe, graph, cascade, mrl) to the metric
 space its pre-rank orders by and a function that yields its
 ``(query_id, vec_id)`` candidate stream; ``refine_topk(candidate_ids=
-...)`` then prices the exact re-scoring of that stream. Adding an index
-family is one table row.
+...)`` then prices the exact re-scoring of that stream. Each family's
+candidate stage exists once: a source calls the same stage as the
+family's plain ranker and its stored-index serve twin (the IVF
+probed-cell stream, the LSH pair stream, the ADC / estimator / cascade
+pre-ranks, the beam walk), and the DuckDB twin of its ``cand_ids``
+comes from the family's ``registry_ann.ANN_FAMILIES`` row. Adding an
+index family is one table row.
 """
 
 from __future__ import annotations
@@ -87,6 +92,7 @@ from ..functions.fp16 import (
 )
 from ..session import ensure_parallelism
 from ..functions.vector import NORM_EPS, delta_from_exp_col, dot, l2_norm, unit
+from .simsearch import LSH_MULTIPROBE_T
 from .topk import topk_per_query
 
 MODES = ("cos-hoeff", "cos-l1", "cos-l2", "l2-sym", "l2-tz", "l2-hoeff")
@@ -666,14 +672,10 @@ def _as_vec_ids(df: DataFrame) -> DataFrame:
 
 def _ivf_candidates(queries, corpus, prepared, k, nprobe=None):
     """Every vector in the query's ``nprobe`` nearest IVF cells."""
-    from .simsearch import IVF_NPROBE, ivf_assign, ivf_centroids, ivf_probes
+    from .simsearch import IVF_NPROBE, ivf_probed_cells
 
-    cents = ivf_centroids(corpus)
-    assigned = ivf_assign(corpus, cents)
-    probes = ivf_probes(queries, cents, IVF_NPROBE if nprobe is None else nprobe)
-    return F.broadcast(probes.select("query_id", "cell")).join(
-        assigned.select("vec_id", "cell"), "cell"
-    ).select("query_id", "vec_id")
+    stream = ivf_probed_cells(queries, corpus, IVF_NPROBE if nprobe is None else nprobe)
+    return stream.select("query_id", "vec_id")
 
 
 def _ivfadc_candidates(queries, corpus, prepared, k):
@@ -690,39 +692,13 @@ def _rabitq_candidates(queries, corpus, prepared, k):
     return _as_vec_ids(rabitq_candidates(queries, corpus, RABITQ_REFINE_R * k))
 
 
-def _lsh_pairs(qb: DataFrame, corpus: DataFrame, dim: int) -> DataFrame:
-    from .simsearch import lsh_corpus_bands
+def _lsh_candidates(queries, corpus, prepared, k, t=None):
+    """Every vector sharing a hyperplane-LSH band bucket with the query
+    (``t``: plus the buckets reached by flipping each band's ``t``
+    lowest-margin signature bits, query side only)."""
+    from .simsearch import lsh_pairs
 
-    cb = lsh_corpus_bands(corpus, dim=dim)
-    return (
-        qb.alias("q")
-        .join(cb.alias("c"), ["band", "bkey"])
-        .select(F.col("q.id").alias("query_id"), F.col("c.id").alias("vec_id"))
-        .distinct()
-    )
-
-
-def _lsh_candidates(queries, corpus, prepared, k):
-    """Every vector sharing a hyperplane-LSH band bucket with the query."""
-    from .simsearch import embedding_dim, lsh_signature_bands
-
-    dim = embedding_dim(corpus)
-    qb = lsh_signature_bands(
-        queries.select("query_id", "embedding"), "embedding", "query_id", dim=dim
-    )
-    return _lsh_pairs(qb, corpus, dim)
-
-
-def _lsh_multiprobe_candidates(queries, corpus, prepared, k):
-    """LSH buckets plus the buckets reached by flipping each band's
-    lowest-margin signature bits (query side only)."""
-    from .simsearch import embedding_dim, lsh_multiprobe_bands
-
-    dim = embedding_dim(corpus)
-    qb = lsh_multiprobe_bands(
-        queries.select("query_id", "embedding"), "embedding", "query_id", dim=dim
-    )
-    return _lsh_pairs(qb, corpus, dim)
+    return _as_vec_ids(lsh_pairs(queries.select("query_id", "embedding"), corpus, t))
 
 
 def _graph_candidates(queries, corpus, prepared, k, edges=None):
@@ -766,7 +742,7 @@ CANDIDATE_SOURCES = {
     "ivfadc": ("l2", _ivfadc_candidates),
     "rabitq": ("cos", _rabitq_candidates),
     "lsh": (None, _lsh_candidates),
-    "lsh_multiprobe": (None, _lsh_multiprobe_candidates),
+    "lsh_multiprobe": (None, partial(_lsh_candidates, t=LSH_MULTIPROBE_T)),
     "graph": ("cos", _graph_candidates),
     "cascade": ("cos", _cascade_candidates),
     "mrl": ("cos", _mrl_candidates),

@@ -36,7 +36,7 @@ from pyspark.sql.window import Window
 from ..session import ensure_parallelism
 from ..functions.vector import cosine, dist2
 from .kmeans import KMEANS_ITERS, kmeans_centroids
-from .topk import topk_per_query
+from .topk import exact_rerank, topk_per_query
 
 #: IVF: one centroid per ``stride`` corpus vectors; probe depth.
 IVF_STRIDE = 25
@@ -219,6 +219,52 @@ def ivf_probes(
     )
 
 
+def ivf_probed_cells(
+    queries: DataFrame,
+    corpus: DataFrame,
+    nprobe: int = IVF_NPROBE,
+    stride: int = IVF_STRIDE,
+    probe=None,
+) -> DataFrame:
+    """(cell, query_id, qvec, vec_id, embedding): every corpus vector in
+    each query's probed cells — the one probed-cell stream of the IVF
+    family (plain, adaptive, filtered, IVF-PQ/SQ/BQ/RaBitQ, IVF-MaxSim
+    and the IVF cushion source). At scale the ``cell`` equi-join is a
+    partition-pruned scan of ~nprobe/n_cells of the corpus — the
+    bandwidth saving that motivates IVF. The quantizer feeds two
+    broadcasts (assignment + probe scoring); the trained build is
+    memoized + persisted inside ``ivf_centroids`` — the
+    always-materialized coarse quantizer of a production index.
+    ``probe(queries, centroids, assigned)`` replaces the fixed-nprobe
+    probe set (``ivf_adaptive_probes``)."""
+    cents = ivf_centroids(corpus, stride)
+    assigned = ivf_assign(corpus, cents)
+    if probe is None:
+        probed = ivf_probes(queries, cents, nprobe)
+    else:
+        probed = probe(queries, cents, assigned)
+    return F.broadcast(probed).join(assigned, "cell")
+
+
+def ivf_cosine_topk(stream: DataFrame, k: int, dedup: bool = False) -> DataFrame:
+    """Exact cosine top-K of a probed-cell stream (query_id, qvec,
+    vec_id, embedding) — the one join-and-score of IVF, adaptive IVF,
+    filtered IVF, SPANN and their stored serve paths, which differ only
+    in how the stream's probe set and cell table are built. ``dedup``:
+    a vector reached through two replicated SPANN postings scores
+    bit-identically in both, so the dedup is a (query_id, neighbor_id)
+    groupBy-max — the ``beam_candidates`` discipline, never a distinct
+    over the float."""
+    cand = stream.select(
+        "query_id",
+        F.col("vec_id").alias("neighbor_id"),
+        cosine("qvec", "embedding").alias("score"),
+    )
+    if dedup:
+        cand = cand.groupBy("query_id", "neighbor_id").agg(F.max("score").alias("score"))
+    return topk_per_query(cand, k, ascending=False, salted=False)
+
+
 def ivf_topk(
     queries: DataFrame,
     corpus: DataFrame,
@@ -227,21 +273,8 @@ def ivf_topk(
     nprobe: int = IVF_NPROBE,
 ) -> DataFrame:
     """IVF-style ANN top-K (cosine): probe the ``nprobe`` nearest
-    cells per query, score exhaustively inside them. At scale the
-    ``cell`` equi-join is a partition-pruned scan of ~nprobe/n_cells
-    of the corpus — the bandwidth saving that motivates IVF."""
-    # the quantizer feeds two broadcasts (assignment + probe scoring);
-    # the trained build is memoized + persisted inside ivf_centroids —
-    # the always-materialized coarse quantizer of a production index
-    cents = ivf_centroids(corpus, stride)
-    assigned = ivf_assign(corpus, cents)
-    probed = ivf_probes(queries, cents, nprobe)
-    cand = F.broadcast(probed).join(assigned, "cell").select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        cosine("qvec", "embedding").alias("score"),
-    )
-    return topk_per_query(cand, k, ascending=False, salted=False)
+    cells per query, score exhaustively inside them."""
+    return ivf_cosine_topk(ivf_probed_cells(queries, corpus, nprobe, stride), k)
 
 
 #: candidate budget for adaptive probing — matched to the fixed
@@ -302,17 +335,15 @@ def ivf_adaptive_topk(
     """IVF ANN top-K (cosine) under a per-query CANDIDATE BUDGET
     instead of a fixed probe count (``ivf_adaptive_probes``): probe
     ranked cells until ``budget`` candidates are admitted, score
-    exhaustively inside them. Same partition-pruned cell equi-join as
+    exhaustively inside them. Same probed-cell stream and scoring as
     ``ivf_topk``; the probe set adapts to quantizer skew."""
-    cents = ivf_centroids(corpus, stride)
-    assigned = ivf_assign(corpus, cents)
-    probed = ivf_adaptive_probes(queries, cents, assigned, budget)
-    cand = F.broadcast(probed).join(assigned, "cell").select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        cosine("qvec", "embedding").alias("score"),
+    stream = ivf_probed_cells(
+        queries,
+        corpus,
+        stride=stride,
+        probe=lambda q, cents, assigned: ivf_adaptive_probes(q, cents, assigned, budget),
     )
-    return topk_per_query(cand, k, ascending=False, salted=False)
+    return ivf_cosine_topk(stream, k)
 
 
 def _planes_array_sql(dim: int) -> str:
@@ -464,6 +495,34 @@ def lsh_multiprobe_bands(
     return base.select("id", "vec", "band", "bkey").unionByName(flips)
 
 
+def lsh_pairs(
+    queries: DataFrame, corpus: DataFrame, t: int | None = None
+) -> DataFrame:
+    """(query_id, neighbor_id): every corpus vector sharing ≥1 signature
+    band bucket with the query — the one LSH candidate stream of the
+    plain and multi-probe rankers and their cushion sources. ``t``
+    widens the query side to the multi-probe set
+    (``lsh_multiprobe_bands``); the corpus keeps its one stored bucket
+    per band (``lsh_corpus_bands``). The band equi-join shuffles on
+    (band, bkey) — 2⁴ buckets per band — instead of the q×N cross
+    product, and the pair set dedupes on the bare ids: a distinct over
+    rows that carry both embedding arrays shuffles ~16× more bytes for
+    the same result, so vectors re-attach only after the pair set is
+    small."""
+    dim = embedding_dim(corpus)
+    if t is None:
+        qb = lsh_signature_bands(queries, "embedding", "query_id", dim=dim)
+    else:
+        qb = lsh_multiprobe_bands(queries, "embedding", "query_id", t=t, dim=dim)
+    cb = lsh_corpus_bands(corpus, dim=dim)
+    return (
+        qb.alias("q")
+        .join(cb.alias("c"), ["band", "bkey"])
+        .select(F.col("q.id").alias("query_id"), F.col("c.id").alias("neighbor_id"))
+        .distinct()
+    )
+
+
 def lsh_multiprobe_topk(
     queries: DataFrame, corpus: DataFrame, k: int, t: int = LSH_MULTIPROBE_T
 ) -> DataFrame:
@@ -471,53 +530,15 @@ def lsh_multiprobe_topk(
     ``lsh_topk``, (t+1)× the probe keys on the query side. Candidates
     remain a band/bucket equi-join — never all-pairs — and the extra
     probes only widen the small side of the shuffle."""
-    dim = embedding_dim(corpus)
-    qb = lsh_multiprobe_bands(queries, "embedding", "query_id", t=t, dim=dim)
-    cb = lsh_corpus_bands(corpus, dim=dim)
-    cand_ids = (
-        qb.alias("q")
-        .join(cb.alias("c"), ["band", "bkey"])
-        .select(F.col("q.id").alias("query_id"), F.col("c.id").alias("neighbor_id"))
-        .distinct()
-    )
-    qv = F.broadcast(queries.select("query_id", F.col("embedding").alias("qvec")))
-    cv = corpus.select(
-        F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("cvec")
-    )
-    cand = (
-        cand_ids.join(qv, "query_id")
-        .join(cv, "neighbor_id")
-        .select("query_id", "neighbor_id", cosine("qvec", "cvec").alias("score"))
-    )
-    return topk_per_query(cand, k, ascending=False, salted=False)
+    return exact_rerank(lsh_pairs(queries, corpus, t), corpus, queries, k)
 
 
 def lsh_topk(queries: DataFrame, corpus: DataFrame, k: int) -> DataFrame:
     """LSH-bucketed ANN top-K (cosine): candidates = corpus vectors
-    sharing ≥1 of 4 signature bands with the query, re-scored exactly.
-    The band equi-join shuffles on (band, bkey) — 2⁴ buckets per band
-    — instead of the q×N cross product; recall is governed by the
-    band/row trade-off exactly as in MinHash LSH."""
-    dim = embedding_dim(corpus)
-    qb = lsh_signature_bands(queries, "embedding", "query_id", dim=dim)
-    cb = lsh_corpus_bands(corpus, dim=dim)
-    # dedupe on the id pair only — running distinct over rows that
-    # carry both embedding arrays shuffles ~16× more bytes for the
-    # same result; vectors re-attach after the pair set is small
-    cand_ids = (
-        qb.alias("q")
-        .join(cb.alias("c"), ["band", "bkey"])
-        .select(F.col("q.id").alias("query_id"), F.col("c.id").alias("neighbor_id"))
-        .distinct()
-    )
-    qv = F.broadcast(queries.select("query_id", F.col("embedding").alias("qvec")))
-    cv = corpus.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("cvec"))
-    cand = (
-        cand_ids.join(qv, "query_id")
-        .join(cv, "neighbor_id")
-        .select("query_id", "neighbor_id", cosine("qvec", "cvec").alias("score"))
-    )
-    return topk_per_query(cand, k, ascending=False, salted=False)
+    sharing ≥1 of 4 signature bands with the query, re-scored exactly;
+    recall is governed by the band/row trade-off exactly as in MinHash
+    LSH."""
+    return exact_rerank(lsh_pairs(queries, corpus), corpus, queries, k)
 
 
 def knn_graph(corpus: DataFrame, k: int) -> DataFrame:
@@ -784,8 +805,14 @@ def graph_centroid_topk(
     cand = beam_candidates(
         queries, corpus, edges, beam, rounds, entries=entries
     )
+    return _visited_topk(cand, k)
+
+
+def _visited_topk(visited: DataFrame, k: int) -> DataFrame:
+    """Exact top-K of a beam walk's visited set (query_id, vec_id,
+    score) — the walk already scored every visited vector exactly."""
     return topk_per_query(
-        cand.select("query_id", F.col("vec_id").alias("neighbor_id"), "score"),
+        visited.select("query_id", F.col("vec_id").alias("neighbor_id"), "score"),
         k,
         ascending=False,
         salted=False,
@@ -832,14 +859,7 @@ def graph_beam_search(
     (``ANNCode.py:560-575`` shape).
     """
     edges = symmetric_knn_edges(corpus, graph_k)
-    cand = beam_candidates(queries, corpus, edges, beam, rounds, entry_stride)
-    out = topk_per_query(
-        cand.select("query_id", F.col("vec_id").alias("neighbor_id"), "score"),
-        k,
-        ascending=False,
-        salted=False,
-    )
-    return out
+    return graph_topk_from_index(queries, corpus, edges, k, beam, rounds, entry_stride)
 
 
 def graph_topk_from_index(
@@ -858,12 +878,8 @@ def graph_topk_from_index(
     ``graph_beam_search``) never appears in this plan; the scan side
     is two thin id columns. Result is identical to
     ``graph_beam_search`` over the corpus the index was built from."""
-    cand = beam_candidates(queries, corpus, edges, beam, rounds, entry_stride)
-    return topk_per_query(
-        cand.select("query_id", F.col("vec_id").alias("neighbor_id"), "score"),
-        k,
-        ascending=False,
-        salted=False,
+    return _visited_topk(
+        beam_candidates(queries, corpus, edges, beam, rounds, entry_stride), k
     )
 
 

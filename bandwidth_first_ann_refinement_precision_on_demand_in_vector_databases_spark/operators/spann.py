@@ -47,10 +47,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.vector import cosine, dist2
+from ..functions.vector import dist2
 from ..session import ensure_parallelism
-from .simsearch import IVF_STRIDE, ivf_centroids
-from .topk import topk_per_query
+from .simsearch import IVF_STRIDE, ivf_centroids, ivf_cosine_topk
 
 #: closure-assignment slack: a vector is posted to every cell whose
 #: centroid L2 distance is within (1+eps) of its nearest centroid's
@@ -193,10 +192,8 @@ def spann_topk(
     nprobe_max: int = SPANN_NPROBE_MAX,
 ) -> DataFrame:
     """SPANN ANN top-K (cosine): probe the dynamically pruned cell
-    set, score exhaustively inside the replicated postings. A vector
-    reached through two replicated postings scores bit-identically in
-    both, so the dedup is a (query_id, neighbor_id) groupBy-max — the
-    ``beam_candidates`` discipline, never a distinct over the float.
+    set, score exhaustively inside the replicated postings — the IVF
+    join-and-score (``ivf_cosine_topk``) with its replica dedup.
 
     Shares the memoized coarse quantizer with the whole IVF family
     (one training per session, as one production index serves many
@@ -204,18 +201,7 @@ def spann_topk(
     cents = ivf_centroids(corpus, stride)
     posted = spann_postings(corpus, cents, eps, max_replicas)
     probes = spann_probes(queries, cents, qeps, nprobe_max)
-    cand = (
-        F.broadcast(probes)
-        .join(posted, "cell")
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            cosine("qvec", "embedding").alias("score"),
-        )
-        .groupBy("query_id", "neighbor_id")
-        .agg(F.max("score").alias("score"))
-    )
-    return topk_per_query(cand, k, ascending=False, salted=False)
+    return ivf_cosine_topk(F.broadcast(probes).join(posted, "cell"), k, dedup=True)
 
 
 def closure_cells_stateless(

@@ -34,9 +34,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.vector import dist2
 from ..session import ensure_parallelism
-from .topk import topk_per_query
+from .topk import exact_rerank
 
 SQ_LEVELS = 127   #: symmetric int8 code range [-127, 127]
 SQ_EPS = 1e-12    #: guards the all-zero vector (s = 0)
@@ -91,15 +90,11 @@ def sq_reconstruct(corpus: DataFrame) -> DataFrame:
 
 def sq_topk(queries: DataFrame, corpus: DataFrame, k: int) -> DataFrame:
     """ADC top-K from the int8 representation alone (squared L2 on
-    the reconstruction, ascending; ties on neighbor_id)."""
-    recon = sq_reconstruct(corpus)
-    q = F.broadcast(queries.select("query_id", F.col("embedding").alias("qv")))
-    scored = recon.crossJoin(q).select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        dist2("qv", "recon").alias("score"),
-    )
-    return topk_per_query(scored, k, ascending=True)
+    the reconstruction, ascending; ties on neighbor_id) — the PQ
+    code-scoring stage (``pq.adc_topk``) over the int8 decode."""
+    from .pq import adc_topk
+
+    return adc_topk(sq_reconstruct(corpus), queries, k)
 
 
 def ivfsq_topk(
@@ -111,28 +106,9 @@ def ivfsq_topk(
     ``pq.ivfpq_topk`` (same cell pruning, codes 8× larger but ADC
     recall 0.99 vs 0.40 on this corpus; the ladder's middle rung
     composed with the index)."""
-    from .simsearch import IVF_NPROBE, ivf_assign, ivf_centroids, ivf_probes
+    from .pq import ivf_adc_topk
 
-    cents = ivf_centroids(corpus)
-    assigned = ivf_assign(corpus, cents).select("vec_id", "cell")
-    probed = ivf_probes(queries, cents, IVF_NPROBE)
-    recon = sq_reconstruct(corpus)
-    cand = (
-        F.broadcast(probed)
-        .join(assigned, "cell")
-        .join(recon, "vec_id")
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            dist2("qvec", "recon").alias("score"),
-        )
-    )
-    adc_ids = topk_per_query(cand, r * k, ascending=True).select(
-        "query_id", "neighbor_id"
-    )
-    from .topk import exact_l2_rerank
-
-    return exact_l2_rerank(adc_ids, corpus, queries, k)
+    return ivf_adc_topk(queries, corpus, sq_reconstruct(corpus), k, r)
 
 
 def sq_refined_topk(
@@ -142,7 +118,4 @@ def sq_refined_topk(
     corpus; the top r·K per query — and only they — fetch full
     precision for the exact re-rank. Bytes touched: N/4 + r·K full
     vectors per query, vs N full vectors for brute force."""
-    cand_ids = sq_topk(queries, corpus, r * k).select("query_id", "neighbor_id")
-    from .topk import exact_l2_rerank
-
-    return exact_l2_rerank(cand_ids, corpus, queries, k)
+    return exact_rerank(sq_topk(queries, corpus, r * k), corpus, queries, k, "l2")

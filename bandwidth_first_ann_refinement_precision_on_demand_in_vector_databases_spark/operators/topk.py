@@ -299,42 +299,33 @@ def exact_topk_fast(
     return topk_per_query(candidates, k, ascending=ascending, salted=False)
 
 
-def exact_cosine_rerank(
-    cand_ids: DataFrame, corpus: DataFrame, queries: DataFrame, k: int
+#: metric → (exact score over the late-materialized pair, ascending?)
+_RERANK = {"cosine": (cosine, False), "l2": (dist2, True)}
+
+
+def exact_rerank(
+    cand_ids: DataFrame,
+    corpus: DataFrame,
+    queries: DataFrame,
+    k: int,
+    metric: str = "cosine",
 ) -> DataFrame:
     """The shared phase-2 tail of every two-stage family (BQ, IVF-BQ,
-    PQ, SQ, MRL, MaxSim candidates): late-materialize full precision
-    for a per-query candidate id stream and return the exact cosine
-    top-K (descending, ties → neighbor_id). One contract, one place —
-    the tie-break / rounding / column conventions of the re-rank must
-    never diverge between families, because every family's DuckDB
-    twin replays exactly this block."""
+    RaBitQ, MRL and the cascade under cosine; PQ, SQ, OPQ, IVF-PQ,
+    IVF-SQ and IVFADC under squared L2): late-materialize full
+    precision for a per-query candidate id stream and return the exact
+    top-K in the metric's order (cosine descending, L2 ascending; ties
+    → neighbor_id). One contract, one place — the tie-break / rounding
+    / column conventions of the re-rank must never diverge between
+    families, because every family's DuckDB twin replays exactly this
+    block (``duck_oracle.rerank_cte``)."""
+    score, ascending = _RERANK[metric]
     full = corpus.select(F.col("vec_id").alias("neighbor_id"), "embedding")
     q = F.broadcast(queries.select("query_id", F.col("embedding").alias("qv")))
     exact = (
         cand_ids.select("query_id", "neighbor_id")
         .join(full, "neighbor_id")
         .join(q, "query_id")
-        .select("query_id", "neighbor_id", cosine("qv", "embedding").alias("score"))
+        .select("query_id", "neighbor_id", score("qv", "embedding").alias("score"))
     )
-    return topk_per_query(exact, k, ascending=False, salted=False)
-
-
-def exact_l2_rerank(
-    cand_ids: DataFrame, corpus: DataFrame, queries: DataFrame, k: int
-) -> DataFrame:
-    """The L2 twin of ``exact_cosine_rerank`` — the shared phase-2
-    tail of the distance-metric families (PQ, SQ, IVF-PQ, IVF-SQ):
-    squared-L2 top-K (ascending, ties → neighbor_id) over a per-query
-    candidate id stream, full precision fetched late."""
-    from ..functions.vector import dist2
-
-    full = corpus.select(F.col("vec_id").alias("neighbor_id"), "embedding")
-    q = F.broadcast(queries.select("query_id", F.col("embedding").alias("qv")))
-    exact = (
-        cand_ids.select("query_id", "neighbor_id")
-        .join(full, "neighbor_id")
-        .join(q, "query_id")
-        .select("query_id", "neighbor_id", dist2("qv", "embedding").alias("score"))
-    )
-    return topk_per_query(exact, k, ascending=True, salted=False)
+    return topk_per_query(exact, k, ascending=ascending, salted=False)

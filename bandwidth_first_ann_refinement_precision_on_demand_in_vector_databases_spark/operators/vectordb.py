@@ -34,7 +34,7 @@ from pyspark.sql.window import Window
 
 from ..functions.vector import cosine, dist2
 from ..session import ensure_parallelism
-from .topk import exact_topk, topk_per_query
+from .topk import exact_topk
 
 RRF_KAPPA = 60      #: the fusion constant from the RRF paper
 HYBRID_TOPN = 20    #: per-side rank-list depth
@@ -74,22 +74,11 @@ def filtered_ivf_topk(
     candidate stream, where at scale it rides the same stored row as
     the cell key (here: re-joined from the corpus scan by vec_id).
     """
-    from .simsearch import IVF_NPROBE, ivf_assign, ivf_centroids, ivf_probes
+    from .simsearch import ivf_cosine_topk, ivf_probed_cells
 
-    cents = ivf_centroids(corpus)
-    assigned = ivf_assign(corpus, cents)
     keep = corpus.where(predicate).select("vec_id")
-    probed = ivf_probes(queries, cents, IVF_NPROBE)
-    cand = (
-        F.broadcast(probed)
-        .join(assigned.join(keep, "vec_id", "semi"), "cell")
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            cosine("qvec", "embedding").alias("score"),
-        )
-    )
-    return topk_per_query(cand, k, ascending=False, salted=False)
+    stream = ivf_probed_cells(queries, corpus).join(keep, "vec_id", "semi")
+    return ivf_cosine_topk(stream, k)
 
 
 #: safety factor on the derived routing crossover: the post-filter

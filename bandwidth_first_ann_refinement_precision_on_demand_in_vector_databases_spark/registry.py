@@ -999,67 +999,12 @@ GROUP BY e.vec_id
 # ``save_vs_full_scan`` is the end-to-end figure in every family.
 # ---------------------------------------------------------------------------
 
-from .operators.mrl import MRL_REFINE_R as _MRL_R  # noqa: E402
-from .operators.pq import PQ_REFINE_R as _ADC_R  # noqa: E402
-from .operators.rabitq import RABITQ_REFINE_R as _RBT_R  # noqa: E402
+from .operators.mrl import MRL_REFINE_R  # noqa: E402
+from .operators.pq import PQ_REFINE_R  # noqa: E402
+from .operators.rabitq import RABITQ_REFINE_R  # noqa: E402
 from .operators.refine import cushion_topk  # noqa: E402
-from .operators.simsearch import LSH_MULTIPROBE_T as _LSH_MP_T  # noqa: E402
-from .registry_simsearch import (  # noqa: E402
-    SQL_IVF_BODY as _SQL_IVF_BODY,
-    SQL_IVFADC_BODY as _SQL_IVFADC_BODY,
-    _sql_band_dots as _sql_lsh_band_dots,
-    _sql_bands as _sql_lsh_bands,
-)
-from .registry_vectordb import (  # noqa: E402
-    _CASC_POOL1,
-    _CASC_POOL2,
-    _SQL_BQ_CAND,
-    _SQL_RBT_EST,
-    _SQL_SQ_RECON as _SQL_SQ_RECON_FRAG,
-    _rbt_base_ctes,
-    _sql_mrl_cos as _SQL_MRL_COS,
-)
-
-# IVF: the quantizer/assignment/probe chain shared with the ann_ivf_*
-# oracles.
-_IVF_CUSHION_EXTRA = f"""{_SQL_IVF_BODY},
-cand_ids AS (
-  SELECT p.query_id, a.vec_id
-  FROM probes p JOIN assigned a ON a.cell = p.cell
-),
-"""
-
-# LSH: the hyperplane band CTEs shared with the ann_lsh_* oracles.
-_LSH_CUSHION_EXTRA = f"""qb AS ({_sql_lsh_bands("q", "query_id", "qe")}),
-cb AS ({_sql_lsh_bands("embeddings", "vec_id", "embedding")}),
-cand_ids AS (
-  SELECT DISTINCT q2.id AS query_id, c2.id AS vec_id
-  FROM qb q2 JOIN cb c2 ON q2.band = c2.band AND q2.bkey = c2.bkey
-),
-"""
-
-# multi-probe LSH: plain bands plus the flipped lowest-margin bits.
-_LSH_MP_CUSHION_EXTRA = f"""qb AS ({_sql_lsh_bands("q", "query_id", "qe")}),
-cb AS ({_sql_lsh_bands("embeddings", "vec_id", "embedding")}),
-q_dots AS ({_sql_lsh_band_dots("q", "query_id", "qe")}),
-q_flip AS (
-  SELECT id, band, j FROM (
-    SELECT id, band, j,
-      row_number() OVER (PARTITION BY id, band ORDER BY abs(dot) ASC, j ASC) AS r
-    FROM q_dots
-  ) WHERE r <= {_LSH_MP_T}
-),
-qmb AS (
-  SELECT id, band, bkey FROM qb
-  UNION ALL
-  SELECT qb.id, qb.band, xor(qb.bkey, 1 << f.j) AS bkey
-  FROM q_flip f JOIN qb ON qb.id = f.id AND qb.band = f.band
-),
-cand_ids AS (
-  SELECT DISTINCT q2.id AS query_id, c2.id AS vec_id
-  FROM qmb q2 JOIN cb c2 ON q2.band = c2.band AND q2.bkey = c2.bkey
-),
-"""
+from .registry_ann import cushion_cand_ids  # noqa: E402
+from .registry_simsearch import _sql_bands as _sql_lsh_bands  # noqa: E402
 
 # graph: the banded KNN graph shared with the ann_graph_* oracles,
 # walked on corp.redv (the reduced representation refine_body already
@@ -1157,73 +1102,6 @@ def _sql_vamana_cushion_extra() -> str:
 
 
 
-# MRL: operators/mrl.mrl_topk (prefix cosine, top R·K, ties → vec_id).
-_MRL_CUSHION_EXTRA = f"""mrl_ps AS (
-  SELECT q.query_id, e.vec_id, {_SQL_MRL_COS("q.qe", "e.embedding")} AS ps
-  FROM q CROSS JOIN embeddings e
-),
-cand_ids AS (
-  SELECT query_id, vec_id FROM (
-    SELECT query_id, vec_id,
-      row_number() OVER (PARTITION BY query_id ORDER BY ps DESC, vec_id) AS r
-    FROM mrl_ps
-  ) WHERE r <= {_MRL_R * K_DEFAULT}
-),
-"""
-
-# cascade: operators/bq.cascade_candidates (Hamming admit, recon-cosine
-# narrow, same tie-breaks).
-_CASCADE_CUSHION_EXTRA = f"""{_SQL_BQ_CAND},
-{_SQL_SQ_RECON_FRAG},
-casc2 AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT query_id, neighbor_id,
-      row_number() OVER (PARTITION BY query_id
-        ORDER BY score ASC, neighbor_id) AS r
-    FROM bq_cand
-  ) WHERE r <= {_CASC_POOL2}
-),
-cand_ids AS MATERIALIZED (
-  SELECT query_id, neighbor_id AS vec_id FROM (
-    SELECT c.query_id, c.neighbor_id,
-      row_number() OVER (PARTITION BY c.query_id
-        ORDER BY {sql_cos("q.qe", "r.recon")} DESC, c.neighbor_id) AS r
-    FROM casc2 c
-    JOIN recon r ON r.vec_id = c.neighbor_id
-    JOIN q ON q.query_id = c.query_id
-  ) WHERE r <= {_CASC_POOL1}
-),
-"""
-
-#: IVFADC: the ADC scores shared with the ann_ivfpq_res_* oracles and
-#: the R·K pre-rank, over refine_body's ``q`` CTE (which exposes the raw
-#: ``qe``).
-_IVFADC_CUSHION_EXTRA = f"""{_SQL_IVFADC_BODY},
-cand_ids AS (
-  SELECT query_id, neighbor_id AS vec_id FROM (
-    SELECT query_id, neighbor_id,
-      row_number() OVER (PARTITION BY query_id ORDER BY score ASC, neighbor_id) AS rank
-    FROM ivfres_adc
-  ) WHERE rank <= {_ADC_R * K_DEFAULT}
-),
-"""
-
-# RaBitQ: the rotated sign codes and the estimator pre-rank.
-_RBT_CUSHION_EXTRA = f"""{_rbt_base_ctes().lstrip()},
-rbt_est AS (
-  SELECT q2.query_id, c.vec_id AS neighbor_id, {_SQL_RBT_EST} AS score
-  FROM rbt_corp c CROSS JOIN rbt_q q2
-),
-cand_ids AS (
-  SELECT query_id, neighbor_id AS vec_id FROM (
-    SELECT query_id, neighbor_id,
-      row_number() OVER (PARTITION BY query_id
-        ORDER BY score DESC, neighbor_id) AS r
-    FROM rbt_est
-  ) WHERE r <= {_RBT_R * K_DEFAULT}
-),
-"""
-
 #: per-candidate save has an interior keep_m optimum at m=3 for every
 #: family (reports/cushion_composition_sweep.csv); the LSH point, the
 #: largest candidate streams, is registered as ``*_tuned_metrics``:
@@ -1232,12 +1110,23 @@ CUSHION_M_TUNED = 3
 
 #: (family, keep_m) → (candidate source, mode, candidate CTEs,
 #: registered query kinds). Query names are ``ann_{family}_cushion_{kind}``.
+#: The candidate CTEs come from the ANN family row whose stream the
+#: source produces, keyed (family, R) — R·K is the pre-rank depth the
+#: source keeps — except the graph walks, which rank on the reduced
+#: ``redv`` that no family row has.
 _CUSHION_FAMILIES = {
-    ("ivf", KEEP_M_DEFAULT): ("ivf", "l2-tz", _IVF_CUSHION_EXTRA, ("topk", "metrics")),
-    ("lsh", KEEP_M_DEFAULT): ("lsh", "cos-l1", _LSH_CUSHION_EXTRA, ("topk", "metrics")),
-    ("lsh", CUSHION_M_TUNED): ("lsh", "cos-l1", _LSH_CUSHION_EXTRA, ("tuned_metrics",)),
+    ("ivf", KEEP_M_DEFAULT): (
+        "ivf", "l2-tz", cushion_cand_ids("ivf", None, K_DEFAULT), ("topk", "metrics"),
+    ),
+    ("lsh", KEEP_M_DEFAULT): (
+        "lsh", "cos-l1", cushion_cand_ids("lsh", None, K_DEFAULT), ("topk", "metrics"),
+    ),
+    ("lsh", CUSHION_M_TUNED): (
+        "lsh", "cos-l1", cushion_cand_ids("lsh", None, K_DEFAULT), ("tuned_metrics",),
+    ),
     ("lsh_multiprobe", KEEP_M_DEFAULT): (
-        "lsh_multiprobe", "cos-l1", _LSH_MP_CUSHION_EXTRA, ("topk", "metrics"),
+        "lsh_multiprobe", "cos-l1", cushion_cand_ids("lsh_multiprobe", None, K_DEFAULT),
+        ("topk", "metrics"),
     ),
     ("graph", KEEP_M_DEFAULT): (
         "graph", "cos-l1", _sql_graph_cushion_extra(), ("topk", "metrics"),
@@ -1246,14 +1135,20 @@ _CUSHION_FAMILIES = {
     ("vamana", KEEP_M_DEFAULT): (
         "graph", "cos-l1", _sql_vamana_cushion_extra(), ("topk", "metrics"),
     ),
-    ("mrl", KEEP_M_DEFAULT): ("mrl", "cos-l1", _MRL_CUSHION_EXTRA, ("topk", "metrics")),
+    ("mrl", KEEP_M_DEFAULT): (
+        "mrl", "cos-l1", cushion_cand_ids("mrl", MRL_REFINE_R, K_DEFAULT), ("topk", "metrics"),
+    ),
     ("cascade", KEEP_M_DEFAULT): (
-        "cascade", "cos-l1", _CASCADE_CUSHION_EXTRA, ("topk", "metrics"),
+        "cascade", "cos-l1", cushion_cand_ids("cascade", None, K_DEFAULT), ("topk", "metrics"),
     ),
     ("ivfadc", KEEP_M_DEFAULT): (
-        "ivfadc", "l2-tz", _IVFADC_CUSHION_EXTRA, ("topk", "metrics"),
+        "ivfadc", "l2-tz", cushion_cand_ids("ivfpq_res", PQ_REFINE_R, K_DEFAULT),
+        ("topk", "metrics"),
     ),
-    ("rabitq", KEEP_M_DEFAULT): ("rabitq", "cos-l1", _RBT_CUSHION_EXTRA, ("topk", "metrics")),
+    ("rabitq", KEEP_M_DEFAULT): (
+        "rabitq", "cos-l1", cushion_cand_ids("rabitq", RABITQ_REFINE_R, K_DEFAULT),
+        ("topk", "metrics"),
+    ),
 }
 
 
@@ -1365,7 +1260,7 @@ ORACLES["ann_ivf_cushion_recall"] = f"""
 WITH {duck_oracle.fp16_cte(KEEP_M_DEFAULT)},
 {duck_oracle.refine_body(
     "l2-tz", K_DEFAULT, KEEP_M_DEFAULT, None, QUERY_STRIDE,
-    extra_ctes=_IVF_CUSHION_EXTRA, candidate_cte="cand_ids",
+    extra_ctes=_CUSHION_FAMILIES[("ivf", KEEP_M_DEFAULT)][2], candidate_cte="cand_ids",
 )},
 ann AS (SELECT query_id, neighbor_id FROM final WHERE rank <= {K_DEFAULT}),
 {duck_oracle.recall_tail("gt", K_DEFAULT)}

@@ -52,7 +52,7 @@ from .operators import sq as SQ
 from .operators import vectordb as V
 from .operators.topk import exact_topk_fixture_cached
 from .operators.vamana import vamana_edges
-from .plans.duck_oracle import METRICS, rank_sql, recall_sql, rerank_cte
+from .plans.duck_oracle import METRICS, SQL_Q_CTE, rank_sql, recall_sql, rerank_cte
 from .registry_simsearch import ANN_K, GRAPH_BEAM_K
 from .session import artifact_dir
 from .sources import layout as L
@@ -335,13 +335,41 @@ def _recall_query(ranker: Ranker, metric: str) -> Callable[[SparkSession, str], 
     return run
 
 
+def family_ctes(family: str, r: int | None, k: int) -> tuple[str, str]:
+    """The oracle CTEs of ``ANN_FAMILIES[(family, r)]`` and the name of
+    the relation holding its top-``k`` candidates: the row's own
+    candidate relation, or with R its exact re-rank of the top R·K."""
+    row = ANN_FAMILIES[(family, r)]
+    ctes = row.ctes.rstrip()
+    if r is None:
+        return ctes, row.cand
+    return f"{ctes},\n{rerank_cte(row.cand, r, k, row.metric)}", "rerank"
+
+
+#: the ``q`` definition the family CTEs open with
+_Q_CTE = f"\nq AS ({SQL_Q_CTE}),\n"
+
+
+def cushion_cand_ids(family: str, r: int | None, k: int) -> str:
+    """The ``cand_ids (query_id, vec_id)`` chain of a cushion oracle,
+    derived from the family row whose candidate stream its Spark source
+    produces (``refine.CANDIDATE_SOURCES``): the family CTEs without
+    their ``q`` (``duck_oracle.refine_body`` defines ``q``, exposing the
+    raw ``qe`` they read) and the ids of its candidate relation — with
+    R, the ids of the top R·K pre-rank (the exact re-rank keeps the
+    same ids)."""
+    ctes, cand = family_ctes(family, r, k)
+    assert ctes.startswith(_Q_CTE), family
+    return f"""{ctes[len(_Q_CTE):]},
+cand_ids AS MATERIALIZED (SELECT query_id, neighbor_id AS vec_id FROM {cand}),
+"""
+
+
 ANN_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ANN_ORACLES: dict[str, str] = {}
 
 for (_family, _r), _row in ANN_FAMILIES.items():
-    _ctes, _cand = _row.ctes.rstrip(), _row.cand
-    if _r is not None:
-        _ctes, _cand = f"{_ctes},\n{rerank_cte(_cand, _r, ANN_K, _row.metric)}", "rerank"
+    _ctes, _cand = family_ctes(_family, _r, ANN_K)
     for _kind in _row.kinds:
         _name = f"ann_{_family}_{_kind}"
         assert _name not in ANN_QUERIES, _name

@@ -92,9 +92,13 @@ def clear_caches(spark: SparkSession | None = None) -> None:
     Drops all per-session memo dicts and clears the session's SQL
     cache (``catalog.clearCache()`` unpersists every cached relation —
     including per-query internal persists like the curation canonical
-    set or dedup band indexes whose frames the memo dicts never saw)
-    and deletes the artifact directories :func:`artifact_dir` built.
-    With no argument, clears every live session."""
+    set or dedup band indexes whose frames the memo dicts never saw),
+    unpersists the RDDs no catalog entry owns — the
+    ``localCheckpoint`` blocks of trained quantizers, code tables,
+    rank splits and beam-walk rounds, which the ContextCleaner would
+    otherwise drop only after a garbage collection — and deletes the
+    artifact directories :func:`artifact_dir` built. With no argument,
+    clears every live session."""
     sessions = [spark] if spark is not None else list(_SESSION_CACHES)
     for s in sessions:
         per = _SESSION_CACHES.get(s)
@@ -106,6 +110,8 @@ def clear_caches(spark: SparkSession | None = None) -> None:
             per.clear()
         try:
             s.catalog.clearCache()
+            for rdd in s.sparkContext._jsc.getPersistentRDDs().values():
+                rdd.unpersist(False)
         except Exception:
             pass  # session already stopped — nothing left to release
 

@@ -166,20 +166,14 @@ def ivf_topk_from_store(
     coordinator-side routing every IVF serving system performs —
     q·nprobe ints, the one legitimate driver-side decision), and
     scoring runs only over the probed directories. Identical result
-    to the in-session ``simsearch.ivf_topk``."""
-    from ..functions.vector import cosine
-    from ..operators.simsearch import IVF_NPROBE, ivf_probes
-    from ..operators.topk import topk_per_query
+    to the in-session ``simsearch.ivf_topk``: the stored cells feed
+    its join-and-score (``simsearch.ivf_cosine_topk``)."""
+    from ..operators.simsearch import IVF_NPROBE, ivf_cosine_topk, ivf_probes
 
     probed = ivf_probes(queries, centroids, nprobe or IVF_NPROBE)
     cells = [r.cell for r in probed.select("cell").distinct().collect()]
     stored = read_probed_cells(spark, store_path, cells)
-    cand = F.broadcast(probed).join(stored, "cell").select(
-        "query_id",
-        F.col("vec_id").alias("neighbor_id"),
-        cosine("qvec", "embedding").alias("score"),
-    )
-    return topk_per_query(cand, k, ascending=False, salted=False)
+    return ivf_cosine_topk(F.broadcast(probed).join(stored, "cell"), k)
 
 
 def write_ivfadc_index(corpus: DataFrame, out_path: str) -> None:
@@ -415,22 +409,10 @@ def spann_topk_from_store(
     replicated postings; a vector reached via two replicas dedups by
     groupBy-max over bit-identical scores (the in-session
     ``spann_topk`` discipline). Identical result by construction."""
-    from ..functions.vector import cosine
+    from ..operators.simsearch import ivf_cosine_topk
     from ..operators.spann import spann_probes
-    from ..operators.topk import topk_per_query
 
     probed = spann_probes(queries, centroids)
     cells = [r.cell for r in probed.select("cell").distinct().collect()]
     stored = read_probed_cells(spark, store_path, cells)
-    cand = (
-        F.broadcast(probed)
-        .join(stored, "cell")
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            cosine("qvec", "embedding").alias("score"),
-        )
-        .groupBy("query_id", "neighbor_id")
-        .agg(F.max("score").alias("score"))
-    )
-    return topk_per_query(cand, k, ascending=False, salted=False)
+    return ivf_cosine_topk(F.broadcast(probed).join(stored, "cell"), k, dedup=True)

@@ -6,6 +6,8 @@ cached partitions without bound."""
 
 from __future__ import annotations
 
+import pytest
+
 from bandwidth_first_ann_refinement_precision_on_demand_in_vector_databases_spark.operators.pq import (
     pq_codebook,
 )
@@ -45,6 +47,30 @@ def test_clear_caches_releases_all_persisted_frames(spark, sf_small):
     assert session_cache(spark, "pq_codebook") == {}
 
 
+@pytest.mark.parametrize("source", ["ivfadc", "rabitq", "graph"])
+def test_clear_caches_releases_local_checkpoints(spark, sf_small, source):
+    """The trained IVFADC quantizer and residuals, the RaBitQ code
+    table and every beam-walk round are ``localCheckpoint``ed RDDs that
+    no catalog entry owns; ``clear_caches`` releases them with the
+    cached relations instead of leaving them to the ContextCleaner."""
+    from bandwidth_first_ann_refinement_precision_on_demand_in_vector_databases_spark.operators.refine import (
+        cushion_topk,
+    )
+    from bandwidth_first_ann_refinement_precision_on_demand_in_vector_databases_spark.sources.fixtures import (
+        queries_view,
+    )
+
+    clear_caches(spark)
+    mode = "l2-tz" if source == "ivfadc" else "cos-l1"
+    corpus = load_table(spark, sf_small, "embeddings")
+    res = cushion_topk(source, queries_view(spark, sf_small), corpus, mode, 10, 6)
+    assert res.topk.collect()
+    assert _n_persistent(spark) > 0
+
+    clear_caches(spark)
+    assert _n_persistent(spark) == 0
+
+
 def test_cached_artifacts_are_memoized_per_session(spark, sf_small):
     corpus = load_table(spark, sf_small, "embeddings")
     a = prepare_corpus_cached(corpus, 6, "l2-tz", cache_key=sf_small)
@@ -76,11 +102,9 @@ def test_repeated_operator_invocation_keeps_cache_bounded(spark, sf_small):
             registry.QUERIES[name](spark, sf_small).count()
     assert _n_persistent(spark) == baseline
     clear_caches(spark)
-    # catalog-cached relations drop synchronously; the one possible
-    # residue is the rank-splits localCheckpoint block, whose RDD is
-    # released by the ContextCleaner only after py4j GC (async) — the
-    # memo reference is gone either way, so it cannot grow.
-    assert _n_persistent(spark) <= 1
+    # the clear also unpersists the rank-splits localCheckpoint block,
+    # which no catalog entry owns
+    assert _n_persistent(spark) == 0
 
 
 def test_embedding_dim_memo_is_hard_capped(spark, sf_small):

@@ -12,7 +12,8 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
@@ -67,7 +68,7 @@ a, mx, mn = stats(S.ivf_adaptive_probes(queries, cents, assigned, 75))
 rows.append(f"adaptive_budget,75,{a:.1f},{mx},{mn},{rec(S.ivf_adaptive_topk(queries, corpus, 20, budget=75))}")
 print(rows[-1], flush=True)
 
-with open("/root/repo/reports/sweep_ivf_adaptive_skew.csv", "w") as f:
+with open(os.path.join(ROOT, "reports", "sweep_ivf_adaptive_skew.csv"), "w") as f:
     f.write("\n".join(rows) + "\n")
 print("written")
 spark.stop()

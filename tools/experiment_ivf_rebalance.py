@@ -18,9 +18,11 @@ Writes reports/experiment_ivf_rebalance.csv.
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -161,7 +163,7 @@ def main() -> None:
         for nprobe in (3, 6, 9, 12, 18, 27, 36):
             run(queries, flat_after, members_after, "after", queryset, nprobe, rows)
 
-    with open("/root/repo/reports/experiment_ivf_rebalance.csv", "w") as f:
+    with open(os.path.join(ROOT, "reports", "experiment_ivf_rebalance.csv"), "w") as f:
         f.write("\n".join(rows) + "\n")
     print("written")
     spark.stop()

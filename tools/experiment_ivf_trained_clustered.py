@@ -21,8 +21,9 @@ import os
 import sys
 import tempfile
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tools")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+sys.path.insert(0, os.path.join(ROOT, "tools"))
 
 from recall_ladder_clustered import make_clustered  # noqa: E402
 
@@ -89,7 +90,7 @@ def main() -> None:
                 r = ivf_recall_at_iters(spark, sf_dir, iters)
                 rows.append(f"{fixture},{iters},{r}")
                 print(rows[-1], flush=True)
-    with open("/root/repo/reports/ivf_trained_clustered.csv", "w") as f:
+    with open(os.path.join(ROOT, "reports", "ivf_trained_clustered.csv"), "w") as f:
         f.write("\n".join(rows) + "\n")
 
 

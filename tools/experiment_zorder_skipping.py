@@ -26,7 +26,8 @@ import tempfile
 
 import pyarrow.parquet as pq
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 N_FILES = 64
 TS_LO, TS_HI = "2024-01-10 00:00:00", "2024-01-13 00:00:00"
@@ -150,7 +151,7 @@ def main() -> None:
         "(`sources/layout.zorder_key_sql` — shifts/masks in codegen,",
         "no UDF).",
     ]
-    with open("/root/repo/reports/ZORDER_SKIPPING.md", "w") as f:
+    with open(os.path.join(ROOT, "reports", "ZORDER_SKIPPING.md"), "w") as f:
         f.write("\n".join(lines) + "\n")
     print("wrote reports/ZORDER_SKIPPING.md")
 

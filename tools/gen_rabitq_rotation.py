@@ -6,6 +6,7 @@ estimator). No training — one seeded Gaussian QR, canonicalized by
 positive diagonal so the matrix is reproducible bit-for-bit. Writes
 operators/rabitq_rotation_matrix.py (the frozen-literal idiom of
 tools/train_opq_rotation.py)."""
+import os
 import numpy as np
 
 D = 64
@@ -15,7 +16,8 @@ g = np.random.default_rng(SEED).standard_normal((D, D))
 q, r = np.linalg.qr(g)
 q = q * np.sign(np.diag(r))  # canonical: R's diagonal positive
 
-out = "/root/repo/bandwidth_first_ann_refinement_precision_on_demand_in_vector_databases_spark/operators/rabitq_rotation_matrix.py"
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+out = os.path.join(ROOT, "bandwidth_first_ann_refinement_precision_on_demand_in_vector_databases_spark", "operators", "rabitq_rotation_matrix.py")
 rows = ",\n".join(
     "    (" + ", ".join(repr(float(v)) for v in row) + ")" for row in q
 )

@@ -82,14 +82,17 @@ def make_clustered(dir_path: str, sigma: float) -> None:
     pq.write_table(tab, os.path.join(dir_path, "embeddings.parquet"))
 
 
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
 def main() -> None:
     iso = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     out = (
         sys.argv[2]
         if len(sys.argv) > 2
-        else "/root/repo/reports/recall_ladder_clustered.csv"
+        else os.path.join(ROOT, "reports", "recall_ladder_clustered.csv")
     )
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, ROOT)
     from pyspark.sql import SparkSession
 
     from bandwidth_first_ann_refinement_precision_on_demand_in_vector_databases_spark import (

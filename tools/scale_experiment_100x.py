@@ -32,7 +32,8 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
@@ -227,7 +228,7 @@ def main() -> None:
             "what holds flat.",
         ]
     )
-    with open("/root/repo/reports/SCALE_100X.md", "w") as f:
+    with open(os.path.join(ROOT, "reports", "SCALE_100X.md"), "w") as f:
         f.write("\n".join(lines) + "\n")
     print("wrote reports/SCALE_100X.md")
 

@@ -27,11 +27,13 @@ Writes reports/SCALE_IVFADC_10X.md.
 
 from __future__ import annotations
 
+import os
 import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
@@ -140,7 +142,7 @@ def main() -> None:
         "fix is a capped centroid count trained on a bounded sample (see",
         "module docstring); the serve plan is unchanged by that choice.",
     ]
-    with open("/root/repo/reports/SCALE_IVFADC_10X.md", "w") as f:
+    with open(os.path.join(ROOT, "reports", "SCALE_IVFADC_10X.md"), "w") as f:
         f.write("\n".join(lines) + "\n")
     print("wrote reports/SCALE_IVFADC_10X.md")
 

@@ -14,10 +14,12 @@ Writes reports/SCALE_MAXSIM_10X.md.
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
@@ -96,7 +98,7 @@ def main() -> None:
         "that scan at 100 TB; the pool contract is unchanged). The retired",
         "fraction pool would have made stage-2 rows 10× here.",
     ]
-    with open("/root/repo/reports/SCALE_MAXSIM_10X.md", "w") as f:
+    with open(os.path.join(ROOT, "reports", "SCALE_MAXSIM_10X.md"), "w") as f:
         f.write("\n".join(lines) + "\n")
     print("wrote reports/SCALE_MAXSIM_10X.md")
 

@@ -20,7 +20,8 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
@@ -143,7 +144,7 @@ def main() -> None:
         "the registered IVF×RaBitQ composition bounds it further to the",
         "probed cells (nprobe·N/k rows).",
     ]
-    with open("/root/repo/reports/SCALE_RABITQ_10X.md", "w") as f:
+    with open(os.path.join(ROOT, "reports", "SCALE_RABITQ_10X.md"), "w") as f:
         f.write("\n".join(lines) + "\n")
     print("wrote reports/SCALE_RABITQ_10X.md; skeleton_same =", same)
 

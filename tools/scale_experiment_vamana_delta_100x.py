@@ -97,6 +97,9 @@ def shuffle_bytes(spark) -> int:
         return -1
 
 
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
 def main() -> None:
     spark = get_spark(
         app_name="vamana-delta-scale-100x",
@@ -169,7 +172,7 @@ def main() -> None:
         }
         results.append(row)
         print(row, flush=True)
-    with open("/root/repo/reports/scale_vamana_delta_100x.json", "w") as f:
+    with open(os.path.join(ROOT, "reports", "scale_vamana_delta_100x.json"), "w") as f:
         json.dump(results, f, indent=1)
     print("written")
 

@@ -2,9 +2,11 @@
 spread at sf0.1. The claim under test: at MATCHED average work the
 adaptive strategy bounds the per-query maximum (skew robustness),
 with equal-or-better recall. Writes reports/sweep_ivf_adaptive.csv."""
+import os
 import sys, time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
@@ -59,7 +61,7 @@ for budget in (25, 50, 75, 100, 150):
     rows.append(f"adaptive_budget,{budget},{a:.1f},{mx},{mn},{rec}")
     print(rows[-1], flush=True)
 
-with open("/root/repo/reports/sweep_ivf_adaptive.csv", "w") as f:
+with open(os.path.join(ROOT, "reports", "sweep_ivf_adaptive.csv"), "w") as f:
     f.write("\n".join(rows) + "\n")
 print("written")
 spark.stop()

@@ -17,7 +17,8 @@ import os
 import sys
 import tempfile
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 T_VALUES = (0, 1, 2, 3)
 K = 20
@@ -89,7 +90,7 @@ def main() -> None:
                     f"{avg_cand:.1f},{rec}"
                 )
                 print(rows[-1], flush=True)
-    out = "/root/repo/reports/sweep_lsh_multiprobe.csv"
+    out = os.path.join(ROOT, "reports", "sweep_lsh_multiprobe.csv")
     with open(out, "w") as f:
         f.write("\n".join(rows) + "\n")
     print(f"wrote {out}")

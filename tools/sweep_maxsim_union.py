@@ -17,6 +17,7 @@ Writes reports/sweep_maxsim_union.csv.
 
 from __future__ import annotations
 
+import os
 import sys
 
 import numpy as np
@@ -37,6 +38,9 @@ def slice_cos(Q: np.ndarray, C: np.ndarray) -> np.ndarray:
     cn = np.maximum(np.linalg.norm(cs, axis=2), 1e-12)  # (N, M)
     dots = np.einsum("qis,njs->qinj", qs, cs)  # (nq, M, N, M)
     return dots / (qn[:, :, None, None] * cn[None, None, :, :])
+
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def main() -> None:
@@ -90,7 +94,7 @@ def main() -> None:
             rows.append(f"{sf_dir},{n},slice_union,{p},{mx},{mean},{r:.4f}")
         print(f"{sf_dir}: n={n} nq={nq} done", flush=True)
 
-    out = "/root/repo/reports/sweep_maxsim_union.csv"
+    out = os.path.join(ROOT, "reports", "sweep_maxsim_union.csv")
     with open(out, "w") as f:
         f.write("\n".join(rows) + "\n")
     print("\n".join(rows))

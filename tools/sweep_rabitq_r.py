@@ -1,9 +1,11 @@
 """RaBitQ refine-R frontier at sf0.1 vs plain BQ (reports/sweep_rabitq_r.csv):
 recall@20 as a function of the candidate budget R·K for the two 1-bit
 estimators over the SAME corpus and re-rank."""
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 from pyspark.sql import SparkSession
 
 from bandwidth_first_ann_refinement_precision_on_demand_in_vector_databases_spark.operators import (
@@ -41,7 +43,7 @@ for r in (1, 2, 3, 5, 8, 12):
     rows.append(f"bq_hamming,{r},{rec_bq}")
     print(rows[-2]); print(rows[-1], flush=True)
 
-with open("/root/repo/reports/sweep_rabitq_r.csv", "w") as f:
+with open(os.path.join(ROOT, "reports", "sweep_rabitq_r.csv"), "w") as f:
     f.write("\n".join(rows) + "\n")
 print("written")
 spark.stop()

@@ -15,10 +15,12 @@ Writes reports/sweep_vamana.csv and prints the grid.
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from pyspark.sql import SparkSession
 
@@ -77,7 +79,7 @@ def main() -> None:
             print(rows[-1], flush=True)
     finally:
         V.VAMANA_ALPHA2, V.VAMANA_L = a0, l0
-    with open("/root/repo/reports/sweep_vamana.csv", "w") as f:
+    with open(os.path.join(ROOT, "reports", "sweep_vamana.csv"), "w") as f:
         f.write("\n".join(rows) + "\n")
     print("wrote reports/sweep_vamana.csv")
 
